@@ -30,11 +30,14 @@ import pyarrow.parquet as pq
 DATA_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
 
 # Rows per generated table. sf0.1 has 15000 customers, 1000 suppliers
-# and 5000 documents.
+# and 5000 documents. The 5000 documents hold 256 near-duplicate pairs
+# (233 groups), so a 1000-document sample holds one with probability
+# 1 - 3e-5, which curation's dedup check relies on; a smaller sample
+# costs about as much to run, so the tiny set keeps 1000 documents.
 SIZES = {
     "geo_reference": {"customer": 15000, "supplier": 1000},
-    "curation": {"documents": 500},
-    "tiny": {"customer": 200, "supplier": 64, "documents": 200},
+    "curation": {"documents": 1000},
+    "tiny": {"customer": 200, "supplier": 64, "documents": 1000},
 }
 
 _EMPTY = {

@@ -3,8 +3,10 @@
 The engine runs as one driver Python process, its JVM child, the JVM's
 Python worker daemon and the daemon's forked workers. CPU time is
 summed over that tree, including reaped children (cutime/cstime), so a
-worker that exits mid-run still counts. Memory is the summed resident
-set of the live tree, sampled on a background thread.
+worker that exits mid-run still counts. Memory is the summed
+proportional set size (Pss) of the live tree, sampled on a background
+thread: a page the forked workers share copy-on-write with their daemon
+counts once in total, not once per worker.
 """
 
 from __future__ import annotations
@@ -14,7 +16,6 @@ import threading
 import time
 
 _TICK = os.sysconf("SC_CLK_TCK")
-_PAGE = os.sysconf("SC_PAGE_SIZE")
 
 
 def _stat(pid: int) -> list[str] | None:
@@ -54,21 +55,24 @@ def tree_cpu_s(root: int | None = None) -> float:
     return total / _TICK
 
 
-def tree_rss_mb(root: int | None = None) -> float:
-    total = 0
+def tree_pss_mb(root: int | None = None) -> float:
+    total_kb = 0
     for pid in tree(root):
         try:
-            with open(f"/proc/{pid}/statm") as fh:
-                total += int(fh.read().split()[1])
+            with open(f"/proc/{pid}/smaps_rollup") as fh:
+                for line in fh:
+                    if line.startswith("Pss:"):
+                        total_kb += int(line.split()[1])
+                        break
         except OSError:
             pass
-    return total * _PAGE / 2**20
+    return total_kb / 1024
 
 
-class RssSampler:
-    """Peak tree RSS between ``start()`` and ``stop()``."""
+class MemSampler:
+    """Peak tree Pss between ``start()`` and ``stop()``."""
 
-    INTERVAL_S = 0.2
+    INTERVAL_S = 0.5
 
     def __init__(self):
         self.peak_mb = 0.0
@@ -77,23 +81,32 @@ class RssSampler:
 
     def _loop(self) -> None:
         while not self._stop.is_set():
-            self.peak_mb = max(self.peak_mb, tree_rss_mb())
+            self.peak_mb = max(self.peak_mb, tree_pss_mb())
             self._stop.wait(self.INTERVAL_S)
 
-    def start(self) -> "RssSampler":
+    def start(self) -> "MemSampler":
         self._thread.start()
         return self
 
     def stop(self) -> float:
         self._stop.set()
         self._thread.join()
-        self.peak_mb = max(self.peak_mb, tree_rss_mb())
+        self.peak_mb = max(self.peak_mb, tree_pss_mb())
         return self.peak_mb
 
 
-def _cpu_fields() -> list[int]:
+def cpu_fields() -> list[int]:
+    """The host's aggregate ``cpu`` line of /proc/stat, in ticks."""
     with open("/proc/stat") as fh:
         return [int(v) for v in fh.readline().split()[1:]]
+
+
+def steal_share(before: list[int], after: list[int]) -> float:
+    """Share of host CPU time stolen by the hypervisor between two
+    ``cpu_fields()`` readings."""
+    delta = [b - a for a, b in zip(before, after)]
+    # user nice system idle iowait irq softirq steal; guest is inside user
+    return delta[7] / (sum(delta[:8]) or 1)
 
 
 class HostState:
@@ -104,19 +117,18 @@ class HostState:
     def __init__(self):
         self.nproc = os.cpu_count()
         self.load_start = os.getloadavg()
-        self._cpu0 = _cpu_fields()
+        self._cpu0 = cpu_fields()
         self._t0 = time.time()
 
     def record(self) -> dict:
-        cpu1 = _cpu_fields()
+        cpu1 = cpu_fields()
         delta = [b - a for a, b in zip(self._cpu0, cpu1)]
         busy = sum(delta[:8]) or 1  # user..steal; guest is inside user
-        # /proc/stat cpu line: user nice system idle iowait irq softirq steal
         return {
             "nproc": self.nproc,
             "load1_start": self.load_start[0],
             "load1_end": os.getloadavg()[0],
             "iowait_share": round(delta[4] / busy, 4),
-            "steal_share": round(delta[7] / busy, 4),
+            "steal_share": round(steal_share(self._cpu0, cpu1), 4),
             "wall_s": round(time.time() - self._t0, 3),
         }

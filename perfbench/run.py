@@ -1,13 +1,14 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload geo_reference --seed 1 --seconds 1 --trace 0
+    python3 perfbench/run.py --workload geo_reference --seed 1 --seconds 10 --trace 0
 
 Run from the root of a checkout. It generates the workload's inputs from
 the seed (untimed), starts the engine with ``get_spark()`` on
 ``local[nproc]`` in this one driver process, runs the workload pipeline
 once cold, then warm in a closed loop of one client until ``--seconds``
-have passed (at least three warm passes), checks every output, and
-prints the result as one JSON line, last on stdout. ``--trace 0``
+have passed (at least ``WARM_PASSES`` of them), checks every output, sets
+the session up twice more to time set-up again, and prints the result
+as one JSON line, last on stdout. ``--trace 0``
 reports the end-to-end metrics; ``--trace 1`` reports the per-layer
 metrics of a separate traced session (spans, job groups, Spark event
 log) and the tracing overhead. See perfbench/README.md.
@@ -16,6 +17,7 @@ log) and the tracing overhead. See perfbench/README.md.
 from __future__ import annotations
 
 import argparse
+import gc
 import json
 import os
 import shlex
@@ -37,9 +39,12 @@ INPUT_TABLES = {
     "geo_reference": ("customer", "supplier"),
     "curation": ("documents",),
 }
-# warm passes per run however short --seconds is: a median of three
-# is robust to one pass slowed by a burst of host load
-MIN_WARM_PASSES = 3
+# warm passes per run however short --seconds is. A fixed count keeps
+# the JIT compiler's progress alike across runs and commits; the counts
+# are what the run budget affords (see README.md, "Time budget")
+WARM_PASSES = {"geo_reference": 3, "curation": 2}
+# set-ups per untraced run: the fresh one, then session restarts
+SETUPS = 3
 
 E2E_UNITS = {"setup_s": "s", "run_s": "s", "rows_per_s": "rows/s", "cpu_s": "s"}
 
@@ -74,7 +79,8 @@ def per_layer_units() -> dict[str, str]:
         "bench.run_s_traced": "s", "bench.run_s_untraced": "s",
         "bench.trace_overhead_s": "s", "bench.run_s_tail": "s",
         "bench.self_sum_s": "s", "bench.op_fail_ratio": "ratio",
-        "bench.first_run_s": "s", "bench.peak_rss_mb": "MB",
+        "bench.first_run_s": "s", "bench.fresh_setup_s": "s",
+        "bench.peak_pss_mb": "MB",
         "host.load1_end": "load", "host.steal_iowait_share": "ratio",
     })
     return out
@@ -100,12 +106,9 @@ def prepare_env(root: str, work: str) -> None:
         "SPARK_GRAFT_CPUS": str(os.cpu_count()),
         "PYSPARK_SUBMIT_ARGS": shlex.join([
             # -XX:-UsePerfData: HotSpot writes hsperfdata under /tmp
-            # regardless of java.io.tmpdir. -XX:TieredStopAtLevel=1: with
-            # the C2 compiler, warm passes kept speeding up for minutes and
-            # geo_reference's run_s spread 26-34% across seeds; with C1
-            # alone it spread 11%
+            # regardless of java.io.tmpdir
             "--driver-java-options",
-            f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData -XX:TieredStopAtLevel=1",
+            f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
             "--conf", f"spark.local.dir={local}",
             "--conf", f"spark.sql.warehouse.dir={os.path.join(work, 'warehouse')}",
             "--conf", "spark.ui.showConsoleProgress=false",
@@ -136,6 +139,17 @@ def setup_session(tracer: Tracer, sf_dir: str, app: str):
     FX.register_base_tables(spark, sf_dir)
     tracer.close(span)
     return spark
+
+
+def restart_setup(runner) -> float:
+    """Stop the session and set it up again in the same JVM; returns the
+    set-up seconds (stopping is not set-up)."""
+    # keep the old context alive: ship_package keys on id(SparkContext)
+    runner.old_contexts.append(runner.spark.sparkContext)
+    runner.spark.stop()
+    t0 = time.perf_counter()
+    runner.spark = setup_session(Tracer(), runner.sf_dir, "perfbench-restart")
+    return time.perf_counter() - t0
 
 
 def stop_engine() -> None:
@@ -180,21 +194,30 @@ class Runner:
         self.attempted = self.failed = 0
         self.failures: list[str] = []
         self.reference: dict[str, str] | None = None
+        self.old_contexts: list = []
 
-    def run(self, label: str) -> dict:
+    def run(self, label: str, check: bool = False) -> dict:
+        """One pass. ``check`` adds the untimed checks that need extra
+        Spark jobs; their CPU time counts in this pass's ``cpu_s``."""
         from workloads import Ctx, StageFailed
 
+        # start every pass from a collected heap in the driver and the
+        # JVM, so a pass does not pay for the garbage of the one before
+        gc.collect()
+        self.spark.sparkContext._jvm.System.gc()
         self.tracer.run = label
         ctx = Ctx(self.spark, self.sf_dir, os.path.join(self.work, "out"),
-                  self.tracer, self.rows)
+                  self.tracer, self.rows, check)
+        host0 = probe.cpu_fields()
         cpu0 = probe.tree_cpu_s()
         t0 = time.perf_counter()
         try:
             self.pipeline(ctx)
         except StageFailed:
             pass
-        wall = time.perf_counter() - t0
+        wall = time.perf_counter() - t0 - ctx.untimed_s
         cpu = probe.tree_cpu_s() - cpu0
+        steal = probe.steal_share(host0, probe.cpu_fields())
         leftover = cleanup_caches(self.spark)
         if self.reference is None:
             self.reference = dict(ctx.digests)
@@ -205,8 +228,10 @@ class Runner:
         self.attempted += ctx.attempted
         self.failed += len(ctx.failures)
         self.failures += [f"{label}: {f}" for f in ctx.failures]
-        return {"label": label, "wall_s": wall, "cpu_s": cpu,
-                "leftover_frames": leftover, "ctx": ctx}
+        parts = dict(ctx.call_s)
+        parts["between_calls"] = wall - sum(parts.values())
+        return {"label": label, "wall_s": wall, "cpu_s": cpu, "parts": parts,
+                "steal_share": steal, "leftover_frames": leftover, "ctx": ctx}
 
     def repeat(self, seconds: float, label: str, min_runs: int) -> list[dict]:
         """Warm passes until ``seconds`` have passed, at least ``min_runs``."""
@@ -267,31 +292,47 @@ def main(argv=None) -> int:
     return 0
 
 
+def median_run_s(passes: list[dict]) -> float:
+    """A warm pass's wall time, as the sum over its public calls (and
+    the time between them) of each one's median over ``passes``: a burst
+    of host load that slows one call in one pass is outvoted."""
+    return sum(statistics.median(p["parts"][k] for p in passes)
+               for k in passes[0]["parts"])
+
+
 def measure(args, work, sf_dir, rows, host) -> dict:
     t0 = time.perf_counter()
     spark = setup_session(Tracer(), sf_dir, f"perfbench-{args.workload}")
-    setup_s = time.perf_counter() - t0
-    rss = probe.RssSampler().start()
+    fresh_setup_s = time.perf_counter() - t0
+    mem = probe.MemSampler().start()
     runner = Runner(spark, args.workload, sf_dir, work, rows, Tracer())
-    cold = runner.run("cold")
-    warm = runner.repeat(args.seconds, "warm", MIN_WARM_PASSES)
-    peak_rss = rss.stop()
+    cold = runner.run("cold", check=True)
+    warm = runner.repeat(args.seconds, "warm", WARM_PASSES[args.workload])
+    peak_mb = mem.stop()
     runner.check_oracles(cold["ctx"].digests, args.plant_digest)
-    run_s = statistics.median(r["wall_s"] for r in warm)
+    run_s = median_run_s(warm)
     n_rows = sum(rows.get(t, 0) for t in INPUT_TABLES[args.workload])
     record = {
         "workload": args.workload, "seed": args.seed, "rows": rows,
-        "setup_s": setup_s, "first_run_s": cold["wall_s"],
+        "fresh_setup_s": fresh_setup_s, "first_run_s": cold["wall_s"],
         "warm_wall_s": [r["wall_s"] for r in warm],
         "warm_cpu_s": [r["cpu_s"] for r in warm],
-        "peak_rss_mb": peak_rss,
+        "warm_parts_s": [r["parts"] for r in warm],
+        "warm_steal_share": [r["steal_share"] for r in warm],
+        "peak_pss_mb": peak_mb,
+        "digests": cold["ctx"].digests,
     }
+    print("digests " + json.dumps(cold["ctx"].digests, sort_keys=True), flush=True)
     if args.trace:
-        metrics = traced_session(args, runner, spark, work, warm)
+        metrics = traced_session(args, runner, work, warm)
+        metrics["bench.fresh_setup_s"] = fresh_setup_s
         units = per_layer_units()
     else:
+        setups = [fresh_setup_s] + [restart_setup(runner)
+                                    for _ in range(SETUPS - 1)]
+        record["setup_s"] = setups
         metrics = {
-            "setup_s": setup_s,
+            "setup_s": statistics.median(setups),
             "run_s": run_s,
             "rows_per_s": n_rows / run_s,
             "cpu_s": statistics.median(r["cpu_s"] for r in warm),
@@ -306,7 +347,7 @@ def measure(args, work, sf_dir, rows, host) -> dict:
             record["host"]["iowait_share"] + record["host"]["steal_share"])
         metrics["bench.op_fail_ratio"] = runner.failed / attempted
         metrics["bench.first_run_s"] = cold["wall_s"]
-        metrics["bench.peak_rss_mb"] = peak_rss
+        metrics["bench.peak_pss_mb"] = peak_mb
         record["per_layer"] = metrics
     with open(os.path.join(work, "record.json"), "w") as fh:
         json.dump(record, fh, indent=1)
@@ -323,7 +364,7 @@ def measure(args, work, sf_dir, rows, host) -> dict:
 
 
 # --------------------------------------------------------------- tracing
-def traced_session(args, runner, spark, work, untraced) -> dict:
+def traced_session(args, runner, work, untraced) -> dict:
     """Restart Spark with the event log on, rerun the pipeline with spans
     and job groups, fold the log onto the spans, and report the traced
     run against the untraced warm passes before it."""
@@ -331,7 +372,8 @@ def traced_session(args, runner, spark, work, untraced) -> dict:
 
     log_dir = os.path.join(work, "eventlog")
     os.makedirs(log_dir, exist_ok=True)
-    spark.stop()
+    runner.old_contexts.append(runner.spark.sparkContext)
+    runner.spark.stop()
     tracer = Tracer(enabled=True)
     conf = (SparkConf()
             .setMaster(f"local[{os.cpu_count()}]")
@@ -355,7 +397,7 @@ def traced_session(args, runner, spark, work, untraced) -> dict:
     out.update(ratios)
     untraced_s = [r["wall_s"] for r in untraced]
     out["bench.run_s_traced"] = statistics.median(r["wall_s"] for r in traced)
-    out["bench.run_s_untraced"] = statistics.median(untraced_s)
+    out["bench.run_s_untraced"] = median_run_s(untraced)
     out["bench.trace_overhead_s"] = (
         out["bench.run_s_traced"] - out["bench.run_s_untraced"])
     out["bench.run_s_tail"] = tail(untraced_s)

@@ -3,14 +3,18 @@ functions the way a user calls them.
 
 Each pipeline takes a ``Ctx`` and routes every public call through
 ``ctx.op``, which consumes its result (collect + digest, local
-checkpoint, or nothing for a write) and, in a traced run, wraps it in a
-span whose id tags the call's Spark jobs. The calls and their arguments
-mirror the package's declared queries wherever a DuckDB mirror exists,
-so each workload's oracle map can cross-check the same stage by name.
+checkpoint, or nothing for a write), records the call's wall time and,
+in a traced run, wraps it in a span whose id tags the call's Spark
+jobs. The calls and their arguments mirror the package's declared
+queries wherever a DuckDB mirror exists, so each workload's oracle map
+can cross-check the same stage by name. Checks that need extra Spark
+jobs run inside ``ctx.untimed()`` and only on passes with
+``ctx.check`` set, so they never weigh on a timed pass.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import time
 
@@ -34,13 +38,24 @@ class StageFailed(Exception):
 class Ctx:
     """State of one pipeline run."""
 
-    def __init__(self, spark, sf_dir, out_dir, tracer, rows):
+    def __init__(self, spark, sf_dir, out_dir, tracer, rows, check=False):
         self.spark, self.sf_dir, self.out_dir = spark, sf_dir, out_dir
-        self.tracer, self.rows = tracer, rows
+        self.tracer, self.rows, self.check = tracer, rows, check
         self.digests: dict[str, str] = {}
         self.failures: list[str] = []
         self.attempted = 0
+        self.call_s: dict[str, float] = {}  # public call -> wall seconds
+        self.untimed_s = 0.0
         self.extra: dict = {}  # untimed by-products for traced metrics
+
+    @contextlib.contextmanager
+    def untimed(self):
+        """Time spent inside is taken off the pass's wall time."""
+        t0 = time.perf_counter()
+        try:
+            yield
+        finally:
+            self.untimed_s += time.perf_counter() - t0
 
     def op(self, layer, name, build, consume="digest", rows_in=0, stage=None):
         """Run one public call. ``consume``: "digest" collects the result
@@ -52,8 +67,8 @@ class Ctx:
         span = self.tracer.open(name, layer)
         self.attempted += 1
         attrs = {"rows_in": rows_in}
+        t0 = time.perf_counter()
         try:
-            t0 = time.perf_counter()
             out = build()
             t1 = time.perf_counter()
             if isinstance(out, DataFrame):
@@ -75,12 +90,14 @@ class Ctx:
             self.failures.append(f"{layer}.{name}: {type(exc).__name__}: {exc}"[:500])
             raise StageFailed(name) from exc
         finally:
+            self.call_s[name] = time.perf_counter() - t0
             if span is not None:
                 span.attrs.update(attrs)
             self.tracer.close(span)
         return out
 
     def expect(self, what: str, ok: bool) -> None:
+        self.attempted += 1
         if not ok:
             self.failures.append(f"check failed: {what}")
 
@@ -153,26 +170,33 @@ GEO_ORACLES = {
 def curation(ctx: Ctx) -> None:
     """examples/star_trigram_pipeline.py's chain, trimmed to its hot
     stages: ingest, near-dup clustering keeping one document per group,
-    the Aho-Corasick blocklist gate, the trigram quality gate, then the
-    training-shard write. Each stage is pinned with a local checkpoint,
-    as in the example."""
+    the Aho-Corasick blocklist gate, the trigram quality gate (the tail
+    tercile is dropped), then the training-shard write. Each stage is
+    pinned with a local checkpoint, as in the example.
+
+    On checking passes, untimed: at least one near-duplicate group
+    collapses; the blocklist gate removes exactly the survivors whose
+    text holds a banned phrase (matched in Python, case-insensitively,
+    against the input table); the quality gate keeps a subset of about
+    two thirds; the shards hold exactly the final documents."""
     from gpd_lite_toolbox_spark.text.analysis import BANNED_FIXTURE_PHRASES
 
     s, n_docs = ctx.spark, ctx.rows["documents"]
+    phrases = list(BANNED_FIXTURE_PHRASES)
     docs = ctx.op("sources", "read_parquet", lambda: s.read.parquet(
         os.path.join(ctx.sf_dir, "documents.parquet")
     ).select(F.col("doc_id").alias("id"), "text", "source"),
         consume="checkpoint", rows_in=n_docs)
-    train = ctx.op("text", "dup_groups_star", lambda: docs.join(
+    deduped = ctx.op("text", "dup_groups_star", lambda: docs.join(
         G.dup_groups_star(docs).filter(F.col("id") == F.col("group_id"))
         .select("id"), "id"),
         consume="checkpoint", rows_in=n_docs)
-    train = ctx.op("text", "banned_phrase_hits", lambda: train.join(
-        G.banned_phrase_hits(train, list(BANNED_FIXTURE_PHRASES), mode="ac")
+    clean = ctx.op("text", "banned_phrase_hits", lambda: deduped.join(
+        G.banned_phrase_hits(deduped, phrases, mode="ac")
         .select("id").distinct(), "id", "left_anti"),
         consume="checkpoint", rows_in=n_docs)
-    train = ctx.op("text", "perplexity_buckets", lambda: train.join(
-        G.perplexity_buckets(train, scorer=G.trigram_logprob)
+    train = ctx.op("text", "perplexity_buckets", lambda: clean.join(
+        G.perplexity_buckets(clean, scorer=G.trigram_logprob)
         .filter(F.col("bucket") != "tail").select("id"), "id"),
         consume="checkpoint", rows_in=n_docs)
     path = os.path.join(ctx.out_dir, "training_shards")
@@ -181,11 +205,33 @@ def curation(ctx: Ctx) -> None:
 
     final = train.select("id").toPandas()
     ctx.digests["final_ids"] = digest(final)
-    ctx.expect("final docs are a non-empty subset of the input",
-               0 < len(final) <= n_docs)
-    ctx.expect("shard write holds every final doc",
-               s.read.parquet(path).count() == len(final))
+    if ctx.check:
+        with ctx.untimed():
+            ids = {name: set(frame.select("id").toPandas().id)
+                   for name, frame in (("deduped", deduped), ("clean", clean))}
+            shard_ids = s.read.parquet(path).select("id").toPandas().id
+            check_curation(ctx, phrases, ids["deduped"], ids["clean"],
+                           set(final.id), shard_ids)
     release(ctx)
+
+
+def check_curation(ctx, phrases, deduped, clean, final, shard_ids) -> None:
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(os.path.join(ctx.sf_dir, "documents.parquet"),
+                          columns=["doc_id", "text"]).to_pydict()
+    text = dict(zip(table["doc_id"], table["text"]))
+    low = [p.lower() for p in phrases]
+    banned = {i for i in deduped if any(p in text[i].lower() for p in low)}
+    ctx.expect("near-duplicate groups collapse: fewer docs after dedup",
+               0 < len(deduped) < len(text))
+    ctx.expect("some dedup survivors hold a banned phrase", bool(banned))
+    ctx.expect("blocklist gate drops exactly the docs holding a banned phrase",
+               clean == deduped - banned)
+    ctx.expect("quality gate keeps about two thirds of its input",
+               final <= clean and 0.6 <= len(final) / max(len(clean), 1) <= 0.7)
+    ctx.expect("shards hold every final doc once",
+               len(shard_ids) == len(final) and set(shard_ids) == final)
 
 
 def release(ctx: Ctx) -> None:
