@@ -3717,12 +3717,14 @@ def _q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_banned_phrase_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Blocklist scan by dictionary join (text/analysis.py
-    banned_phrase_hits): stride-1 slices per distinct phrase length
-    equi-joined against the phrase dictionary — the scalable shape
-    for 100k-entry NSFW/spam lists where a regex alternation is
-    driver-poison. Oracle = the naive per-(doc, phrase, position)
-    test, a fully independent derivation."""
+    """Blocklist scan (text/analysis.py banned_phrase_hits): an
+    Aho-Corasick automaton — built driver-side from the dictionary,
+    broadcast once — walks each document's characters exactly ONCE in
+    an Arrow-batched mapInPandas pass, reporting every overlapping
+    occurrence of every phrase via merged output links. Also serves
+    the declared name banned_phrase_hits_ac. Oracle = the naive
+    per-(doc, phrase, position) test, a fully independent
+    derivation."""
     from gpd_lite_toolbox_spark.text.analysis import (
         BANNED_FIXTURE_PHRASES,
         banned_phrase_hits,
@@ -3733,33 +3735,13 @@ def _q_banned_phrase_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_banned_phrase_hits_ac(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SINGLE-PASS tier of the blocklist scan (text/analysis.py
-    banned_phrase_hits mode="ac"): an Aho-Corasick automaton — built
-    driver-side from the dictionary, broadcast once — walks each
-    document's characters exactly ONCE in an Arrow-batched mapInPandas
-    pass, reporting every overlapping occurrence of every phrase
-    via merged output links. One corpus scan regardless of how many
-    phrases or distinct lengths the dictionary carries, vs the join
-    tier's O(chars x distinct_lengths) slice projections — this is the
-    100k-entry-blocklist path (r9 VERDICT item 3). Same dictionary,
-    same oracle, same hashes as banned_phrase_hits."""
-    from gpd_lite_toolbox_spark.text.analysis import (
-        BANNED_FIXTURE_PHRASES,
-        banned_phrase_hits,
-    )
-
-    return banned_phrase_hits(
-        _corpus(spark, sf_dir), BANNED_FIXTURE_PHRASES, mode="ac"
-    )
-
-
 def _q_stream_banned_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming blocklist gate (streaming/grid_stream.py
-    run_streaming_blocklist_gate): stateless append-mode ROW-LOCAL
-    occurrence fold — a deliberately different derivation than the
-    batch slice-join operator, sharing its naive per-position
-    oracle."""
+    run_streaming_blocklist_gate): each micro-batch runs the batch
+    Aho-Corasick scan via foreachBatch; the union over micro-batches
+    == the batch output. Also serves the declared name
+    stream_banned_phrases_ac. Oracle = a naive per-position walk over
+    the raw documents table."""
     from gpd_lite_toolbox_spark.streaming.grid_stream import (
         run_streaming_blocklist_gate,
     )
@@ -3769,30 +3751,6 @@ def _q_stream_banned_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     s = _configure(spark)
     return run_streaming_blocklist_gate(
-        s, f"{sf_dir}/documents.parquet", BANNED_FIXTURE_PHRASES
-    )
-
-
-def _q_stream_banned_phrases_ac(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """LARGE-DICTIONARY streaming blocklist gate
-    (streaming/grid_stream.py run_streaming_blocklist_gate_ac): each
-    micro-batch runs the batch Aho-Corasick tier via foreachBatch —
-    the scale path when the list is too big to inline into the stream
-    projection; the per-phrase-struct fold (stream_banned_phrases)
-    stays the bounded-list form. Union over micro-batches == the
-    batch AC output, so it shares the same raw-documents naive
-    per-position oracle."""
-    from gpd_lite_toolbox_spark.streaming.grid_stream import (
-        run_streaming_blocklist_gate_ac,
-    )
-    from gpd_lite_toolbox_spark.text.analysis import (
-        BANNED_FIXTURE_PHRASES,
-    )
-
-    s = _configure(spark)
-    return run_streaming_blocklist_gate_ac(
         s, f"{sf_dir}/documents.parquet", BANNED_FIXTURE_PHRASES
     )
 
@@ -4029,9 +3987,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "trigram_logprob": _q_trigram_logprob,
         "kn_trigram_logprob": _q_kn_trigram_logprob,
         "banned_phrase_hits": _q_banned_phrase_hits,
-        "banned_phrase_hits_ac": _q_banned_phrase_hits_ac,
+        "banned_phrase_hits_ac": _q_banned_phrase_hits,
         "stream_banned_phrases": _q_stream_banned_phrases,
-        "stream_banned_phrases_ac": _q_stream_banned_phrases_ac,
+        "stream_banned_phrases_ac": _q_stream_banned_phrases,
         "perplexity_buckets_trigram": _q_perplexity_buckets_trigram,
         "wordpiece_fertility": _q_wordpiece_fertility,
         "wordpiece_train": _q_wordpiece_train,
@@ -4407,12 +4365,12 @@ def oracle_sql() -> dict[str, str]:
         "trigram_logprob": OR.TRIGRAM_LOGPROB,
         "kn_trigram_logprob": OR.KN_TRIGRAM_LOGPROB,
         "banned_phrase_hits": OR.BANNED_PHRASE_HITS,
-        # single-pass Aho-Corasick tier: same dictionary, same oracle
+        # legacy name for the same Aho-Corasick scan: same oracle
         "banned_phrase_hits_ac": OR.BANNED_PHRASE_HITS,
         # raw-documents variant: the streaming source reads the
         # parquet directly (no derived planted rows)
         "stream_banned_phrases": OR.STREAM_BANNED_PHRASES,
-        # foreachBatch Aho-Corasick tier: same raw-documents oracle
+        # legacy name for the same streaming gate: same oracle
         "stream_banned_phrases_ac": OR.STREAM_BANNED_PHRASES,
         "perplexity_buckets_trigram": OR.PERPLEXITY_BUCKETS_TRIGRAM,
         "wordpiece_fertility": OR.WORDPIECE_FERTILITY,

@@ -249,8 +249,8 @@ BENCH_QUERIES = [
     # composition over the trigram stack. stream_banned_phrases and
     # stream_banned_phrases_ac NOT benched (both drain eagerly at
     # construction, the stream_curation_ledger class);
-    # banned_phrase_hits / banned_phrase_hits_ac time the two batch
-    # substrates.
+    # banned_phrase_hits / banned_phrase_hits_ac both time the one
+    # Aho-Corasick scan (two declared names, one query function).
     "dup_groups_star",
     "banned_phrase_hits",
     "banned_phrase_hits_ac",

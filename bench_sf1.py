@@ -88,20 +88,18 @@ HEADLINE = [
     "dsir_weights",
     "trigram_logprob",
     "kn_trigram_logprob",
-    # dictionary-join blocklist scan: pure row-local slices + one
-    # dictionary join, so the 10x corpus must scale ~linearly
+    # Aho-Corasick blocklist scan: one row-local pass per document,
+    # so the 10x corpus must scale ~linearly
     "banned_phrase_hits",
     # round-10 (r9 VERDICT items 2/3/4): the trigram scorer's bucket
     # rollup; the winnow df-cap drop-mass audit (its sf1 row QUANTIFIES
     # the 841->73 winnow_pairs collapse — n_postings_dropped is in the
-    # row notes); and the large-dictionary blocklist tiers — 1024
-    # synthetic phrases across 20 distinct lengths, where the join
-    # tier pays one corpus-chars slice scan PER length and the
-    # Aho-Corasick mapInPandas tier scans each document ONCE
+    # row notes); and the large-dictionary blocklist scan — 1024
+    # synthetic phrases across 20 distinct lengths, where the
+    # Aho-Corasick mapInPandas kernel still scans each document ONCE
     "perplexity_buckets_trigram",
     "winnow_report",
     "banned_phrase_hits_1k_ac",
-    "banned_phrase_hits_1k_join",
     # per-doc contamination artifact: composes the banded-LSH pair
     # table (minhash_pairs' row, pair-clique caveat applies to the
     # leak side) with the zero-shuffle coverage pass + two id joins
@@ -151,8 +149,9 @@ def _q_match_line_cluster_fixed_k(spark, sf_dir):
 def _bench_phrases(n: int = 1024, n_lengths: int = 20) -> list[str]:
     """Deterministic synthetic blocklist: ``n`` distinct phrases whose
     lengths cycle through ``n_lengths`` distinct values (4..4+n-1) —
-    the length SPECTRUM is what multiplies the join tier's cost. The
-    fixture's 4 real phrases ride along so the hit path is exercised."""
+    a wide length SPECTRUM, which the one-pass Aho-Corasick scan must
+    absorb at flat cost. The fixture's 4 real phrases ride along so
+    the hit path is exercised."""
     from gpd_lite_toolbox_spark.text.analysis import BANNED_FIXTURE_PHRASES
 
     digits = "0123456789abcdefghijklmnopqrstuvwxyz"
@@ -174,15 +173,12 @@ def _bench_phrases(n: int = 1024, n_lengths: int = 20) -> list[str]:
     return out
 
 
-def _q_banned_1k(mode):
-    def q(spark, sf_dir):
-        from gpd_lite_toolbox_spark import fixtures as FX
-        from gpd_lite_toolbox_spark.text.analysis import banned_phrase_hits
+def _q_banned_1k(spark, sf_dir):
+    from gpd_lite_toolbox_spark import fixtures as FX
+    from gpd_lite_toolbox_spark.text.analysis import banned_phrase_hits
 
-        corpus = FX.fixture_df(spark, sf_dir, "corpus")
-        return banned_phrase_hits(corpus, _bench_phrases(), mode=mode)
-
-    return q
+    corpus = FX.fixture_df(spark, sf_dir, "corpus")
+    return banned_phrase_hits(corpus, _bench_phrases())
 
 
 def _q_table_profile_approx(spark, sf_dir):
@@ -249,8 +245,7 @@ def _q_table_profile_approx(spark, sf_dir):
 # not oracle-gated product queries)
 LOCAL = {
     "match_line_cluster_fixed_k": _q_match_line_cluster_fixed_k,
-    "banned_phrase_hits_1k_ac": _q_banned_1k("ac"),
-    "banned_phrase_hits_1k_join": _q_banned_1k("join"),
+    "banned_phrase_hits_1k_ac": _q_banned_1k,
     "table_profile_approx": _q_table_profile_approx,
 }
 
@@ -608,14 +603,12 @@ def main() -> None:
             "winnow_report's sf1 row is the drop-mass audit for the "
             "winnow_pairs collapse — its n_postings_dropped quantifies "
             "the fingerprint mass the MOSS df cap removes on the "
-            "replica-clique corpus. banned_phrase_hits_1k_{ac,join} "
-            "scan the SAME 1024-phrase/20-length synthetic dictionary: "
-            "the join tier pays one corpus-chars slice scan per "
-            "distinct length (cost multiplies with the length "
-            "spectrum), the Aho-Corasick mapInPandas tier walks each "
-            "document once (wall ~flat vs dictionary size/lengths — "
-            "compare its sf rows against banned_phrase_hits' 3-length "
-            "join rows). dup_groups_star / dup_groups_incremental / "
+            "replica-clique corpus. banned_phrase_hits_1k_ac scans a "
+            "1024-phrase/20-length synthetic dictionary: the "
+            "Aho-Corasick mapInPandas kernel walks each document once "
+            "(wall ~flat vs dictionary size/lengths — compare its sf "
+            "rows against banned_phrase_hits' 4-phrase rows). "
+            "dup_groups_star / dup_groups_incremental / "
             "cc_star_chain are EAGER rows (cc_star's star rounds run "
             "at construction): wall includes construction + one count, "
             "single run, with the star ROUND COUNT recorded per scale "

@@ -88,9 +88,9 @@ def run(spark, sf_dir: str):
     train = train.join(flagged.select("id"), "id", "left_anti")
     train = stage("bloom_decontaminate", train)
 
-    # 3. blocklist gate, single-pass tier: one Aho-Corasick scan per
-    # document regardless of dictionary size/length spectrum
-    hits = G.banned_phrase_hits(train, BLOCKLIST, mode="ac")
+    # 3. blocklist gate: one Aho-Corasick scan per document regardless
+    # of dictionary size/length spectrum
+    hits = G.banned_phrase_hits(train, BLOCKLIST)
     train = train.join(hits.select("id").distinct(), "id", "left_anti")
     train = stage("blocklist_gate_ac", train)
 

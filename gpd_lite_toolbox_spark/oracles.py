@@ -6325,8 +6325,8 @@ FROM tok2 t JOIN sym s USING (token)
 """
 
 
-# Blocklist scan (text/analysis.py banned_phrase_hits): dictionary
-# join over stride-1 slices on the Spark side; the oracle is the
+# Blocklist scan (text/analysis.py banned_phrase_hits): one
+# Aho-Corasick pass per document on the Spark side; the oracle is the
 # NAIVE independent derivation — every (doc, phrase, position)
 # triple tested directly. Overlapping occurrences count.
 from .text.analysis import BANNED_FIXTURE_PHRASES as _BPH  # noqa: E402
@@ -6348,7 +6348,8 @@ GROUP BY 1, 2
 
 
 # Streaming blocklist gate (streaming/grid_stream.py
-# run_streaming_blocklist_gate): the streaming source reads
+# run_streaming_blocklist_gate, the batch Aho-Corasick scan per
+# foreachBatch micro-batch): the streaming source reads
 # documents.parquet RAW (no derived planted rows), so the gate gets
 # its own naive per-position walk over the raw table — same phrase
 # list, same overlap semantics as BANNED_PHRASE_HITS.

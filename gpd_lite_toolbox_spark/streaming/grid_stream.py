@@ -937,89 +937,9 @@ def sessionize(events: DataFrame, gap_s: int = SESSION_GAP_S) -> DataFrame:
     )
 
 
-def run_streaming_blocklist_gate(
-    spark,
-    parquet_dir: str,
-    phrases,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Streaming blocklist gate: documents stream in and every banned
-    phrase's OVERLAPPING occurrence count is computed ROW-LOCALLY —
-    for each phrase, a filter over the position sequence counting
-    matching fixed-width slices — then exploded to one row per
-    matching (doc, phrase). Fully STATELESS append mode (the
-    ``run_streaming_quality_gate`` class): no watermark, no state
-    store, deterministic under any micro-batch partitioning.
-
-    Deliberately a DIFFERENT derivation than the batch operator
-    (text/analysis.py ``banned_phrase_hits`` slices the corpus and
-    equi-joins the phrase dictionary — the right shape for 100k-entry
-    lists; the row-local fold here inlines the phrase list into the
-    projection, the right shape for the bounded lists a live ingest
-    gate carries): both must land on identical rows, so they share
-    the naive per-position DuckDB oracle AND a stream==batch pytest.
-
-    Output: ``(id, phrase, n_hits)`` with n_hits > 0.
-    """
-    from ..text.analysis import BANNED_FIXTURE_PHRASES  # noqa: F401
-
-    plist = [p for p in dict.fromkeys(str(x).lower() for x in phrases) if p]
-    if not plist:
-        raise ValueError("phrases must contain at least one non-empty entry")
-    parquet_dir = _stage_dir(parquet_dir, "blocklist_stream_")
-    schema = spark.read.parquet(parquet_dir).schema
-
-    def _hits(p: str) -> F.Column:
-        # Column-level construction (no SQL-string interpolation): an
-        # externally sourced blocklist can carry newlines/control chars
-        # that would break or alter a generated F.expr literal.
-        ln = len(p)
-        # greatest(.., 1) not 0: sequence(1, 0) is DESCENDING [1,0] in
-        # Spark; the one harmless probe position matches nothing
-        # because substr of a shorter text can never equal the
-        # fixed-width phrase
-        positions = F.sequence(
-            F.lit(1),
-            F.greatest(F.length("_t") - F.lit(ln - 1), F.lit(1)),
-        )
-        return F.size(
-            F.filter(
-                positions,
-                lambda q: F.substring(F.col("_t"), q, F.lit(ln))
-                == F.lit(p),
-            )
-        )
-
-    entries = F.array(
-        *[
-            F.struct(
-                F.lit(p).alias("phrase"), _hits(p).alias("n_hits")
-            )
-            for p in plist
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(parquet_dir)
-        .select(
-            F.col(id_col).alias("id"),
-            F.lower(F.coalesce(F.col(text_col), F.lit(""))).alias("_t"),
-        )
-        .select("id", F.explode(entries).alias("_e"))
-        .filter(F.col("_e.n_hits") > 0)
-        .select(
-            "id",
-            F.col("_e.phrase").alias("phrase"),
-            F.col("_e.n_hits").cast("bigint").alias("n_hits"),
-        )
-    )
-    return _drain_to_memory(spark, stream, "blocklist_stream_out", "append")
-
-
-# run_streaming_blocklist_gate_ac's (source, dictionary) -> out-dir
+# run_streaming_blocklist_gate's (source, dictionary) -> out-dir
 # memo: bounds the output-tempdir footprint to one live dir per key
-_blocklist_ac_out_dirs: dict = {}
+_blocklist_out_dirs: dict = {}
 
 
 def _run_foreach_batch(stream, fn) -> None:
@@ -1038,7 +958,7 @@ def _run_foreach_batch(stream, fn) -> None:
         q.stop()
 
 
-def run_streaming_blocklist_gate_ac(
+def run_streaming_blocklist_gate(
     spark,
     parquet_dir: str,
     phrases,
@@ -1046,21 +966,17 @@ def run_streaming_blocklist_gate_ac(
     text_col: str = "text",
     max_files_per_trigger: int = 1,
 ) -> DataFrame:
-    """LARGE-DICTIONARY streaming blocklist gate: each micro-batch
-    runs the batch Aho-Corasick tier (text/analysis.py
-    ``banned_phrase_hits`` mode="ac") via ``foreachBatch`` — the scale
-    path when the list is too big to inline.
-    ``run_streaming_blocklist_gate`` embeds one struct per phrase in
-    the stream projection (the right shape for the bounded lists a
-    live gate carries); a 100k-entry dictionary would make that plan
-    enormous, while here the dictionary rides the broadcast automaton
-    and the plan stays constant-size. The scan is row-local per
-    document and every stream doc lands in exactly one micro-batch,
-    so the union over micro-batches is EXACTLY the batch AC output —
-    same ``(id, phrase, n_hits)`` contract and the same raw-documents
-    oracle as ``stream_banned_phrases`` (stream==batch pytest-pinned;
-    the automaton is rebuilt per micro-batch, an O(dictionary chars)
-    driver step of the codebook-collect class).
+    """Streaming blocklist gate: each micro-batch runs the batch
+    Aho-Corasick scan (text/analysis.py ``banned_phrase_hits``) via
+    ``foreachBatch``. The dictionary rides one broadcast automaton, so
+    the stream plan stays constant-size however long the list is, and
+    phrases never enter a generated expression (quotes, newlines and
+    other SQL-significant characters are plain automaton input). The
+    scan is row-local per document and every stream doc lands in
+    exactly one micro-batch, so the union over micro-batches is
+    EXACTLY the batch output — same ``(id, phrase, n_hits)`` contract,
+    matched case-insensitively, checked against the raw-documents
+    per-position oracle (stream==batch pytest-pinned).
 
     ``max_files_per_trigger`` bounds each micro-batch so a multi-file
     source genuinely exercises multiple batches.
@@ -1082,19 +998,19 @@ def run_streaming_blocklist_gate_ac(
         _normalize_phrases,
     )
 
-    parquet_dir = _stage_dir(parquet_dir, "blocklist_ac_stream_")
+    parquet_dir = _stage_dir(parquet_dir, "blocklist_stream_")
     schema = spark.read.parquet(parquet_dir).schema
     # one output dir PER (source, dictionary) key, replaced on re-run —
     # a fresh mkdtemp per invocation would leak one result-sized dir
     # per call for the life of the process (the _stage_dir rationale)
     plist = _normalize_phrases(phrases, case_insensitive=True)
     key = (parquet_dir, tuple(plist), id_col, text_col)
-    prior = _blocklist_ac_out_dirs.pop(key, None)
+    prior = _blocklist_out_dirs.pop(key, None)
     if prior is not None:
         shutil.rmtree(prior, ignore_errors=True)
-    out_dir = tempfile.mkdtemp(prefix="blocklist_ac_out_")
+    out_dir = tempfile.mkdtemp(prefix="blocklist_out_")
     atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
-    _blocklist_ac_out_dirs[key] = out_dir
+    _blocklist_out_dirs[key] = out_dir
     # ONE automaton build + broadcast for the whole stream (not one
     # per micro-batch — a 100k-entry dictionary on a many-file source
     # would otherwise accumulate 2N dictionary-sized broadcasts)

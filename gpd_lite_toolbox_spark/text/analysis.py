@@ -479,20 +479,6 @@ def script_profile(
     )
 
 
-# banned_phrase_hits tier thresholds. Below both, the dictionary-join
-# tier runs (few distinct lengths -> few slice projections, and a
-# small dictionary is worth the broadcast hint); at or above either,
-# the Aho-Corasick mapInPandas tier scans the corpus ONCE regardless
-# of the dictionary's length spectrum (r9 VERDICT item 3: the join
-# tier's cost is O(corpus_chars x distinct_lengths)).
-_AC_MIN_PHRASES = 64
-_AC_MIN_LENGTHS = 8
-# Above this the explicit broadcast hint is dropped and AQE decides —
-# a forced broadcast of a 100k-entry dictionary is exactly the failure
-# the docstring used to claim could not happen (r9 ADVICE item 2).
-_BROADCAST_MAX_PHRASES = 10_000
-
-
 def _aho_corasick(plist: list[str]):
     """Build the Aho-Corasick automaton (goto / fail / output) for
     ``plist``. Classic Aho & Corasick 1975 construction: a trie of the
@@ -551,7 +537,7 @@ def banned_phrase_hits(
     id_col: str = "id",
     text_col: str = "text",
     case_insensitive: bool = True,
-    mode: str = "auto",
+    mode: str = "ac",
 ) -> DataFrame:
     """Blocklist scan: count every occurrence of every banned phrase
     in every document. ``pii_scan`` covers pattern-shaped leaks
@@ -559,105 +545,39 @@ def banned_phrase_hits(
     NSFW/spam/boilerplate phrase lists run to hundreds of thousands of
     entries, where a compiled ``(p1|p2|...)`` alternation is
     driver-poison and a per-row Python loop over phrases is a UDF per
-    phrase. Two tiers, identical results (both hash-gated against the
-    same per-position DuckDB oracle):
+    phrase.
 
-    - ``mode="join"`` — DICTIONARY JOIN: the corpus is sliced into
-      substrings once per distinct phrase length (the shingle
-      projection's shape: row-local, stride 1) and each slice table is
-      equi-joined against the phrase dictionary. The dictionary gets
-      an explicit broadcast hint only while it is small
-      (``_BROADCAST_MAX_PHRASES``); past that the hint is dropped and
-      AQE picks broadcast vs shuffled hash join on the slice key —
-      the 100 TB-safe degradation (swap the raw-string key for
-      xxhash64 of the slice if dictionary strings are long). Cost is
-      O(corpus_chars x distinct_lengths): right for the short length
-      spectra a live gate carries.
-    - ``mode="ac"`` — AHO-CORASICK, one corpus scan regardless of the
-      length spectrum: the automaton (trie + failure links, built
-      driver-side in O(total_phrase_chars), bounded by the DICTIONARY,
-      never the corpus) ships to executors as an sc.broadcast, and a
-      ``mapInPandas`` pass walks each document's characters exactly
-      once, emitting every overlapping occurrence of every phrase via
-      the merged output links. Arrow-batched; per-doc work is
-      O(n_chars + n_hits) with zero dependence on dictionary size or
-      distinct lengths — the 100k-entry-blocklist path.
+    One kernel, AHO-CORASICK, one corpus scan regardless of the
+    dictionary's size or length spectrum: the automaton (trie +
+    failure links, built driver-side in O(total_phrase_chars), bounded
+    by the DICTIONARY, never the corpus) ships to executors as an
+    sc.broadcast, and a ``mapInPandas`` pass walks each document's
+    characters exactly once, emitting every overlapping occurrence of
+    every phrase via the merged output links. Arrow-batched; per-doc
+    work is O(n_chars + n_hits). Hash-gated against a naive
+    per-position DuckDB oracle.
 
-    ``mode="auto"`` (default) picks: AC when the dictionary has >=
-    ``_AC_MIN_PHRASES`` entries or >= ``_AC_MIN_LENGTHS`` distinct
-    lengths, else the join tier. The thresholds are deliberately
-    conservative — on the sf0.1 fixture AC already beats the join
-    tier at the 4-phrase dictionary (0.49 vs 2.57 s) and the gap is
-    13-43x at 1024 phrases (BENCH_SF1) — because the join tier's
-    remaining advantages are categorical, not measured: it stays
-    entirely JVM-side (no Python workers required on the cluster) and
-    its cost is vectorized-predictable rather than per-char Python,
-    so small static gate lists keep it by default.
+    ``mode`` is kept for existing callers and accepts only ``"ac"``.
 
     ``phrases``: a Python sequence of strings (the usual case — the
-    automaton/lengths are known driver-side with no job) or a
-    single-column DataFrame (collected: one bounded driver step, the
+    automaton is built driver-side with no job) or a single-column
+    DataFrame (collected: one bounded driver step, the
     codebook-collect class — blocklists are dictionary-sized by
     definition).
 
     Output: ``(id, phrase, n_hits)`` — only matching (doc, phrase)
-    combinations, ``n_hits`` counts OVERLAPPING occurrences (slices
-    advance by one char, so "aaa" hits "aa" twice; mirrored by the
-    oracle and by AC's per-end-position reporting).
+    combinations, ``n_hits`` counts OVERLAPPING occurrences ("aaa"
+    hits "aa" twice; AC reports per end position, mirrored by the
+    oracle).
     """
+    if mode != "ac":
+        raise ValueError(
+            f"mode must be 'ac', got {mode!r}: the dictionary-join tier "
+            "was removed; Aho-Corasick is the only blocklist kernel"
+        )
     plist = _normalize_phrases(phrases, case_insensitive)
-    if mode == "auto":
-        mode = (
-            "ac"
-            if len(plist) >= _AC_MIN_PHRASES
-            or len({len(p) for p in plist}) >= _AC_MIN_LENGTHS
-            else "join"
-        )
-    if mode == "ac":
-        return _banned_phrase_hits_ac(
-            corpus, plist, id_col, text_col, case_insensitive
-        )
-    if mode != "join":
-        raise ValueError(f"mode must be auto|join|ac, got {mode!r}")
-    spark = corpus.sparkSession
-    pdf = spark.createDataFrame(
-        [(p, len(p)) for p in plist], "phrase string, plen int"
-    )
-    if len(plist) <= _BROADCAST_MAX_PHRASES:
-        pdf = F.broadcast(pdf)
-    text = F.col(text_col)
-    if case_insensitive:
-        text = F.lower(text)
-    lengths = sorted({len(p) for p in plist})
-    # ONE row-local slice projection emitting every distinct length's
-    # stride-1 slices (round-10 optimization, guide §2.3/§6: the
-    # per-length form was a UNION of one corpus scan PER DISTINCT
-    # LENGTH — L scans, L decode passes, L lower() evaluations; this
-    # emits the identical (id, plen, phrase) multiset from one scan).
-    # Docs shorter than a length contribute nothing for it (the CASE
-    # arm), exactly like the old per-branch length(_t) >= ln filter.
-    slice_arms = ", ".join(
-        f"CASE WHEN length(_t) >= {ln} THEN"
-        f" transform(sequence(1, length(_t) - {ln} + 1),"
-        f" p -> struct({ln} AS plen, substring(_t, p, {ln}) AS phrase))"
-        f" ELSE CAST(array() AS"
-        f" array<struct<plen: int, phrase: string>>) END"
-        for ln in lengths
-    )
-    from ..parallelism import widen
-
-    slices = (
-        widen(corpus.select(F.col(id_col).alias("id"), text.alias("_t")))
-        .select(
-            "id",
-            F.explode(F.expr(f"concat({slice_arms})")).alias("_s"),
-        )
-        .select("id", F.col("_s.plen"), F.col("_s.phrase"))
-    )
-    return (
-        slices.join(pdf, ["phrase", "plen"])
-        .groupBy("id", "phrase")
-        .agg(F.count("*").cast("bigint").alias("n_hits"))
+    return _banned_phrase_hits_ac(
+        corpus, plist, id_col, text_col, case_insensitive
     )
 
 
@@ -669,7 +589,7 @@ def _banned_phrase_hits_ac(
     case_insensitive: bool,
     shared_bc=None,
 ) -> DataFrame:
-    """The Aho-Corasick tier (see banned_phrase_hits). Single pass per
+    """The Aho-Corasick kernel (see banned_phrase_hits). Single pass per
     document, automaton broadcast once per job; the mapInPandas output
     is already (doc, phrase)-unique (one counting dict per doc), so the
     trailing groupBy exists only to make the exchange shape explicit

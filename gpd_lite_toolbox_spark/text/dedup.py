@@ -1714,10 +1714,13 @@ def contamination_report(
     # lineage — persists so the downstream aggregate/joins replan
     # against a materialized boundary instead of the whole LSH
     # cascade.  sf0.1: 1.16 s (no persists) -> 0.93-0.98 s (all
-    # three); each persist alone measured weaker.
-    corpus_pt = tracked_persist(
-        _widen(corpus).select(F.col(id_col), F.col(text_col))
-    )
+    # three); each persist alone measured weaker.  A caller-supplied
+    # ``pairs`` leaves the coverage pass as the corpus's only reader,
+    # so the corpus persist is skipped there (it would only hold cache
+    # memory).
+    corpus_pt = _widen(corpus).select(F.col(id_col), F.col(text_col))
+    if pairs is None:
+        corpus_pt = tracked_persist(corpus_pt)
     splits_pt = tracked_persist(
         splits.select(F.col(id_col), F.col("split"))
     )

@@ -45,7 +45,8 @@ _ARROW_OK = {
     "ann_pq_topk",       # Arrow PQ encoder (pandas_udf)
     "ann_ivfpq_topk",    # Arrow IVFPQ encoder (cell+residual+codes)
     "warc_roundtrip",     # segment parse (mapInPandas)
-    "banned_phrase_hits_ac",  # Aho-Corasick single-pass scan (mapInPandas)
+    "banned_phrase_hits",     # AC scan (mapInPandas)
+    "banned_phrase_hits_ac",  # same AC scan under its legacy name
     "dorling_cartogram",  # driver-relaxation placements
     "dorling_stats",
     # round-10 optimization: kmeans_assign's argmin is the Arrow

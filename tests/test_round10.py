@@ -1,14 +1,8 @@
 """Round-10 pins (r9 VERDICT + ADVICE items).
 
-- banned_phrase_hits grows a single-pass Aho-Corasick mapInPandas tier
-  for large dictionaries (VERDICT next-round item 2) and drops the
-  unconditional broadcast hint on the join tier (ADVICE item 2).
 - winnow_report exposes the MOSS df-cap drop mass (VERDICT item 3).
 - contamination_report joins dup-ngram coverage with split leakage
   into one per-doc curation artifact (VERDICT item 8a).
-- run_streaming_blocklist_gate builds its per-phrase count with
-  Column-level functions, so SQL-significant characters in an external
-  blocklist cannot break the generated expression (ADVICE item 3).
 - trigram_logprob actually uses its counts= substrate (ADVICE item 1).
 """
 
@@ -16,18 +10,13 @@ from __future__ import annotations
 
 import pytest
 
-# round 11 (r10 VERDICT item 1): round-10 replay pins / AC+WAV
+# round 11 (r10 VERDICT item 1): round-10 replay pins / WAV
 # property sweeps (VERDICT-named) — excluded from the default lane so
 # the driver's gate completes; the full lane (pytest -m "") runs it.
 pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
 
 from gpd_lite_toolbox_spark import fixtures as FX
-from gpd_lite_toolbox_spark.text import analysis as TA
-from gpd_lite_toolbox_spark.text.analysis import (
-    BANNED_FIXTURE_PHRASES,
-    banned_phrase_hits,
-)
 from gpd_lite_toolbox_spark.text.dedup import (
     contamination_report,
     split_leakage,
@@ -38,110 +27,6 @@ from gpd_lite_toolbox_spark.text.dedup import (
 
 def _rows(df):
     return sorted(map(tuple, df.collect()))
-
-
-# --- Aho-Corasick tier ---
-
-
-def test_ac_tier_equals_join_tier_on_fixture(spark, sf_dir):
-    corpus = FX.fixture_df(spark, sf_dir, "corpus")
-    a = banned_phrase_hits(corpus, BANNED_FIXTURE_PHRASES, mode="join")
-    b = banned_phrase_hits(corpus, BANNED_FIXTURE_PHRASES, mode="ac")
-    assert _rows(a) == _rows(b)
-    assert a.columns == b.columns
-
-
-def test_ac_tier_overlaps_case_null_empty(spark):
-    """Overlapping occurrences ('aaaa' holds 'aa' 3 times), nested
-    phrases sharing prefixes ('ab' inside 'aba'), case folding, and
-    null/empty docs — all must agree with the join tier exactly."""
-    docs = spark.createDataFrame(
-        [
-            (1, "aaaa"),
-            (2, "abababa"),
-            (3, ""),
-            (4, None),
-            (5, "AbAb"),
-            (6, "xyababx"),
-        ],
-        "id long, text string",
-    )
-    phrases = ["aa", "ab", "aba", "abab", "zz"]
-    a = _rows(banned_phrase_hits(docs, phrases, mode="join"))
-    b = _rows(banned_phrase_hits(docs, phrases, mode="ac"))
-    assert a == b
-    # spot truth: AC output links must surface the suffix phrase too
-    d2 = {(p, n) for i, p, n in b if i == 2}
-    assert ("aba", 3) in d2 and ("ab", 3) in d2 and ("abab", 2) in d2
-
-
-def test_ac_tier_case_sensitive_mode(spark):
-    docs = spark.createDataFrame(
-        [(1, "Foo foo FOO")], "id long, text string"
-    )
-    got = _rows(
-        banned_phrase_hits(
-            docs, ["foo"], case_insensitive=False, mode="ac"
-        )
-    )
-    assert got == [(1, "foo", 1)]
-
-
-def test_auto_mode_dispatch(spark):
-    """auto picks AC at >= _AC_MIN_PHRASES entries (or length spread)
-    and the join tier below; the tier shows in the physical plan as
-    MapInPandas vs none."""
-    docs = spark.createDataFrame([(1, "abc")], "id long, text string")
-    few = banned_phrase_hits(docs, ["ab", "bc"], mode="auto")
-    assert "MapInPandas" not in few._jdf.queryExecution().executedPlan().toString()
-    many = banned_phrase_hits(
-        docs,
-        [f"phrase{i:04d}" for i in range(TA._AC_MIN_PHRASES)],
-        mode="auto",
-    )
-    assert "MapInPandas" in many._jdf.queryExecution().executedPlan().toString()
-    # length-spectrum trigger: few phrases, many distinct lengths
-    spread = banned_phrase_hits(
-        docs,
-        ["a" * (i + 1) for i in range(TA._AC_MIN_LENGTHS)],
-        mode="auto",
-    )
-    assert "MapInPandas" in spread._jdf.queryExecution().executedPlan().toString()
-
-
-def test_join_tier_broadcast_hint_gated(spark, monkeypatch):
-    """ADVICE item 2: the explicit broadcast hint must disappear when
-    the dictionary outgrows _BROADCAST_MAX_PHRASES, so AQE (not a
-    forced hint) decides the join strategy for huge blocklists."""
-    docs = spark.createDataFrame([(1, "abcd")], "id long, text string")
-    monkeypatch.setattr(TA, "_BROADCAST_MAX_PHRASES", 2)
-    hinted = banned_phrase_hits(docs, ["ab", "cd"], mode="join")
-    assert "ResolvedHint" in hinted._jdf.queryExecution().analyzed().toString()
-    unhinted = banned_phrase_hits(docs, ["ab", "cd", "bc"], mode="join")
-    assert (
-        "ResolvedHint"
-        not in unhinted._jdf.queryExecution().analyzed().toString()
-    )
-    # and the two tiers still agree
-    assert _rows(hinted) == [(1, "ab", 1), (1, "cd", 1)]
-    assert _rows(unhinted) == [(1, "ab", 1), (1, "bc", 1), (1, "cd", 1)]
-
-
-def test_ac_automaton_unit():
-    """Driver-side automaton sanity: merged output links report every
-    pattern ending at a position, including suffix patterns."""
-    goto, fail, out = TA._aho_corasick(["he", "she", "his", "hers"])
-    node = 0
-    hits = []
-    for i, ch in enumerate("ushers"):
-        while node and ch not in goto[node]:
-            node = fail[node]
-        node = goto[node].get(ch, 0)
-        for pi in out[node]:
-            hits.append((i, pi))
-    # 'she' ends at 3 (idx 1), 'he' ends at 3 (idx 0), 'hers' at 5 (3)
-    assert (3, 1) in hits and (3, 0) in hits and (5, 3) in hits
-    assert len(hits) == 3
 
 
 # --- winnow_report: the df-cap drop mass made visible ---
@@ -202,37 +87,6 @@ def test_contamination_report_structure(spark, sf_dir):
             assert r.max_leak_jaccard == 0.0
         else:
             assert 0.0 < r.max_leak_jaccard <= 1.0
-
-
-# --- streaming blocklist gate: injection-safe phrase literals ---
-
-
-def test_stream_blocklist_gate_sql_significant_phrases(spark, tmp_path):
-    """ADVICE item 3: phrases carrying quotes, newlines and other
-    SQL-literal-significant characters must count correctly (the old
-    string-interpolated F.expr escaped only backslash and quote)."""
-    from gpd_lite_toolbox_spark.streaming.grid_stream import (
-        run_streaming_blocklist_gate,
-    )
-
-    evil = "it's a\ntrap"
-    docs = spark.createDataFrame(
-        [
-            (1, f"prefix {evil} suffix {evil}!"),
-            (2, "clean document"),
-            (3, "ends with it's a\ntrap"),
-        ],
-        "doc_id long, text string",
-    )
-    src = str(tmp_path / "docs.parquet")
-    docs.write.parquet(src)
-    out = run_streaming_blocklist_gate(
-        spark, src, [evil, "back\\slash", "clean doc"]
-    )
-    got = _rows(out)
-    assert (1, evil, 2) in got
-    assert (3, evil, 1) in got
-    assert (2, "clean doc", 1) in got
 
 
 # --- trigram_logprob counts= substrate is used (ADVICE item 1) ---
@@ -723,89 +577,10 @@ def test_bench_sf1_rejects_unknown_query_names():
     assert "unknown query names" in (p.stderr + p.stdout)
 
 
-def test_stream_blocklist_ac_equals_batch_and_inline_stream(
-    spark, tmp_path
-):
-    """The foreachBatch Aho-Corasick gate must land on exactly the
-    rows of (a) the batch AC tier over the whole corpus and (b) the
-    inline per-phrase streaming fold — across multiple genuine
-    micro-batches (two parquet files, maxFilesPerTrigger=1)."""
-    from gpd_lite_toolbox_spark.streaming.grid_stream import (
-        run_streaming_blocklist_gate,
-        run_streaming_blocklist_gate_ac,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "fast merge table value fast merge"),
-            (2, "nothing banned here"),
-            (3, "key agg row KEY AGG ROW"),
-            (4, None),
-        ],
-        "doc_id long, text string",
-    )
-    src = str(tmp_path / "docs")
-    docs.repartition(2).write.parquet(src)
-    phrases = BANNED_FIXTURE_PHRASES
-    ac_stream = _rows(
-        run_streaming_blocklist_gate_ac(spark, src, phrases)
-    )
-    inline_stream = _rows(run_streaming_blocklist_gate(spark, src, phrases))
-    batch = _rows(
-        banned_phrase_hits(
-            docs.select(F.col("doc_id").alias("id"), "text"),
-            phrases,
-            mode="ac",
-        )
-    )
-    assert ac_stream == inline_stream == batch
-    assert (1, "fast merge", 2) in ac_stream
-    assert (3, "key agg row", 2) in ac_stream
-
-
 # --- property tests (hypothesis): the new tiers vs naive references ---
 
 from hypothesis import given, settings  # noqa: E402
 from hypothesis import strategies as st  # noqa: E402
-
-
-def _naive_overlap_counts(text: str, phrases: list) -> dict:
-    out = {}
-    for p in phrases:
-        c = sum(
-            1
-            for i in range(len(text) - len(p) + 1)
-            if text[i : i + len(p)] == p
-        )
-        if c:
-            out[p] = c
-    return out
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    text=st.text(alphabet="abc", max_size=60),
-    phrases=st.lists(
-        st.text(alphabet="abc", min_size=1, max_size=5),
-        min_size=1,
-        max_size=8,
-        unique=True,
-    ),
-)
-def test_ac_automaton_matches_naive_scan(text, phrases):
-    """Driver-side property: the Aho-Corasick walk reports EXACTLY the
-    naive per-position overlapping counts for every phrase, on a
-    3-letter alphabet dense with nested/overlapping patterns."""
-    goto, fail, out = TA._aho_corasick(phrases)
-    counts: dict = {}
-    node = 0
-    for ch in text:
-        while node and ch not in goto[node]:
-            node = fail[node]
-        node = goto[node].get(ch, 0)
-        for pi in out[node]:
-            counts[phrases[pi]] = counts.get(phrases[pi], 0) + 1
-    assert counts == _naive_overlap_counts(text, phrases)
 
 
 @settings(max_examples=60, deadline=None)
@@ -853,19 +628,6 @@ def test_minhash_index_single_definition(spark, sf_dir):
     finally:
         E._mhidx_paths.clear()
         E._mhidx_paths.update(prior)
-
-
-def test_ac_tier_plan_shape(spark, sf_dir):
-    """PLANS.md round-10 plan-audit pin: the AC tier's corpus side is
-    scan -> project -> MapInPandas with ZERO exchanges below the
-    Python node (the automaton rides a broadcast variable, not the
-    plan); the only exchange is the post-scan hit aggregate."""
-    corpus = FX.fixture_df(spark, sf_dir, "corpus")
-    df = banned_phrase_hits(corpus, BANNED_FIXTURE_PHRASES, mode="ac")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
-    below = plan.split("MapInPandas", 1)[1]
-    assert "Exchange" not in below, below[:1500]
 
 
 def test_em_array_mstep_matches_retired_relational_mstep(spark, sf_dir):

@@ -496,82 +496,3 @@ def test_cc_star_random_graphs_match_union_find(spark):
         assert got == {
             v: want[v] for v in touched
         }, f"trial {trial} (n={n}, m={len(edges)})"
-
-
-# --- dictionary-join blocklist scan ---
-
-from gpd_lite_toolbox_spark.text.analysis import (  # noqa: E402
-    banned_phrase_hits,
-)
-
-
-def test_banned_phrase_hits_semantics(spark):
-    docs = spark.createDataFrame(
-        [
-            (1, "aaa and AAA again"),
-            (2, "the Fast Merge path"),
-            (3, "nothing here"),
-        ],
-        "id long, text string",
-    )
-    out = {
-        (r.id, r.phrase): r.n_hits
-        for r in banned_phrase_hits(
-            docs, ["aa", "fast merge", "absent phrase"]
-        ).collect()
-    }
-    # overlapping occurrences: "aaa" yields 2, case-folded AAA 2 more
-    assert out[(1, "aa")] == 4
-    assert out[(2, "fast merge")] == 1  # case-insensitive by default
-    assert (3, "aa") not in out
-    assert not any(p == "absent phrase" for (_, p) in out)
-    # case-sensitive mode: AAA no longer matches
-    strict = {
-        (r.id, r.phrase): r.n_hits
-        for r in banned_phrase_hits(
-            docs, ["aa"], case_insensitive=False
-        ).collect()
-    }
-    assert strict[(1, "aa")] == 2
-
-
-def test_banned_phrase_hits_dataframe_input_and_guard(spark):
-    docs = spark.createDataFrame([(1, "x y z")], "id long, text string")
-    ph = spark.createDataFrame([("x y",), ("x y",)], "phrase string")
-    out = banned_phrase_hits(docs, ph).collect()
-    assert len(out) == 1 and out[0].n_hits == 1
-    with pytest.raises(ValueError, match="non-empty"):
-        banned_phrase_hits(docs, [])
-
-
-def test_stream_blocklist_equals_batch(spark, sf_dir, tmp_path):
-    """The streaming row-local fold and the batch slice-join are
-    different derivations of one contract — identical rows."""
-    import gpd_lite_toolbox_spark.fixtures as _FX
-    from gpd_lite_toolbox_spark.streaming.grid_stream import (
-        run_streaming_blocklist_gate,
-    )
-    from gpd_lite_toolbox_spark.text.analysis import (
-        BANNED_FIXTURE_PHRASES,
-    )
-
-    _FX.register_base_tables(spark, sf_dir)
-    batch = sorted(
-        map(
-            tuple,
-            banned_phrase_hits(
-                _corpus(spark, sf_dir), BANNED_FIXTURE_PHRASES
-            ).collect(),
-        )
-    )
-    stream = sorted(
-        map(
-            tuple,
-            run_streaming_blocklist_gate(
-                spark,
-                f"{sf_dir}/documents.parquet",
-                BANNED_FIXTURE_PHRASES,
-            ).collect(),
-        )
-    )
-    assert batch == stream and len(batch) > 0
