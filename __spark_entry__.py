@@ -19,25 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from gpd_lite_toolbox_spark import fixtures as FX  # noqa: E402
 from gpd_lite_toolbox_spark import oracles as OR  # noqa: E402
-
-
-def _configure(spark: SparkSession) -> SparkSession:
-    """Session knobs the engine needs regardless of who built the session."""
-    from gpd_lite_toolbox_spark.deploy import ship_package
-
-    ship_package(spark)  # workers can't import the package otherwise
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Local test files are single small parquets, so a default-config
-    # scan is ONE partition and per-row compute (Arrow kernels,
-    # interpreted folds) serializes on one core. On a real deployment
-    # the inputs split into many partitions by size; a 1 MB split
-    # target reproduces that scan parallelism at test scale.
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "1m")
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass  # static conf on some builds; events table is then unused
-    return spark
+from gpd_lite_toolbox_spark.session import configure as _configure  # noqa: E402
 
 
 # --------------------------------------------------------------- queries

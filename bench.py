@@ -310,19 +310,10 @@ def _round_board_path(
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
+    from gpd_lite_toolbox_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("gpd_lite_toolbox_spark_bench")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        .getOrCreate()
-    )
+    os.environ.setdefault("SPARK_DRIVER_MEM", "16g")
+    spark = get_spark("gpd_lite_toolbox_spark_bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as E
@@ -332,9 +323,6 @@ def main() -> None:
     #-mode startup cost to whichever query happens to run first (a
     # long-lived cluster amortizes this to zero).
     from pyspark.sql import functions as F
-    from gpd_lite_toolbox_spark.deploy import ship_package
-
-    ship_package(spark)
 
     @F.pandas_udf("double")
     def _warm(v):

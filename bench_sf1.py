@@ -441,27 +441,14 @@ def _time_query(spark, fn, sf_dir):
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
+    from gpd_lite_toolbox_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("gpd_lite_toolbox_spark_bench_sf1")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g")
-        )
-        .getOrCreate()
-    )
+    os.environ.setdefault("SPARK_DRIVER_MEM", "16g")
+    spark = get_spark("gpd_lite_toolbox_spark_bench_sf1")
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as E
-    from gpd_lite_toolbox_spark.deploy import ship_package
 
-    ship_package(spark)
     generate(spark)
 
     # optional argv subset (round 8): run only the named queries and

@@ -18,7 +18,9 @@ _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
 _REPO_DIR = os.path.dirname(_PKG_DIR)
 _ZIP_PATH = os.path.join(_REPO_DIR, ".build", "gpd_lite_toolbox_spark.zip")
 
-_shipped: set[int] = set()
+# keyed on the application id, not id(sc): a new context can reuse a
+# stopped one's address, and would then never be shipped the package
+_shipped: set[str] = set()
 
 
 def _build_zip() -> str:
@@ -49,7 +51,7 @@ def _build_zip() -> str:
 def ship_package(spark) -> None:
     """Idempotently register the package zip with this session's workers."""
     sc = spark.sparkContext
-    key = id(sc)
+    key = sc.applicationId
     if key in _shipped:
         return
     sc.addPyFile(_build_zip())

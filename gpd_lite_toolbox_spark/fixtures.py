@@ -31,6 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from .geometry.functions import st_point, st_rect
+from .session import configure
 
 FRAME = 100_000.0
 POLY_GRID = 32
@@ -320,17 +321,10 @@ def register_base_tables(spark: SparkSession, sf_dir: str) -> None:
     """
     from pyspark.sql import functions as F
 
-    from .deploy import ship_package
-
-    ship_package(spark)  # UDF closures reference this package: workers
-    # launched from a non-repo cwd cannot import it otherwise
+    configure(spark)
     key = id(spark)
     if _last_registered.get(key) == sf_dir:
         return
-    try:  # events.parquet is TIMESTAMP(NANOS); runtime-settable on 4.x
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
     for name in TPCH_TABLES:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         if name == "events":

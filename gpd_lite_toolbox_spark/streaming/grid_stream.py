@@ -26,8 +26,8 @@ def _normalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     """Normalize the event-time column to TIMESTAMP (LTZ): driver
     parquet has shipped it as int64 nanos and as timestamp[us]-no-tz
     (TIMESTAMP_NTZ on Spark 4); watermarks and unix_micros require
-    TIMESTAMP. Session tz is pinned to UTC by the session builders, so
-    the NTZ cast preserves the wall-clock value."""
+    TIMESTAMP. Session tz is pinned to UTC by ``session.ENGINE_CONF``,
+    so the NTZ cast preserves the wall-clock value."""
     dt = dict(df.dtypes).get(col)
     if dt == "bigint":
         # integer div, not /1000 via double: ~1.7e18 ns exceeds double

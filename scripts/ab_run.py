@@ -26,26 +26,16 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ab_run")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        .getOrCreate()
-    )
+    # imported after TREE_DIR is on sys.path: the session comes from it
+    from gpd_lite_toolbox_spark.session import get_spark
+
+    os.environ.setdefault("SPARK_DRIVER_MEM", "16g")
+    spark = get_spark("ab_run")
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as E
-    from gpd_lite_toolbox_spark.deploy import ship_package
-
-    ship_package(spark)
 
     @F.pandas_udf("double")
     def _warm(v):

@@ -64,30 +64,19 @@ def corpus(spark):
 
 def main() -> None:
     trees = [os.path.abspath(p) for p in sys.argv[1:3]]
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("skew_winnow_fixture")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g")
-        )
-        .getOrCreate()
-    )
+    # the session comes from the first tree (get_spark ships its package)
+    sys.path.insert(0, trees[0])
+    from gpd_lite_toolbox_spark.session import get_spark
+
+    os.environ.setdefault("SPARK_DRIVER_MEM", "16g")
+    spark = get_spark("skew_winnow_fixture")
     spark.sparkContext.setLogLevel("ERROR")
     docs = corpus(spark).localCheckpoint()
 
     # ---- posting-mass layout (tree-independent: fingerprints are
     # identical in both trees) --------------------------------------
-    sys.path.insert(0, trees[0])
-    from gpd_lite_toolbox_spark.deploy import ship_package
-
-    ship_package(spark)
     import gpd_lite_toolbox_spark.text.dedup as D0
 
     fps = D0.winnow_fingerprints(docs).localCheckpoint()

@@ -366,9 +366,6 @@ def test_jpeg_tier_wired_into_decode_image_pixels(spark):
     df = spark.createDataFrame(
         [(1, bytearray(payload))], "id long, media binary"
     )
-    from gpd_lite_toolbox_spark.deploy import ship_package
-
-    ship_package(spark)
     row = MM.decode_image_pixels(df).collect()[0]
     expected_codec = "pil" if MM.pil_available() else "jpeg"
     assert row.px_codec == expected_codec
@@ -494,9 +491,6 @@ def test_wav_tier_wired_into_decode_audio_samples(spark):
         [(1, bytearray(wav)), (2, bytearray(fake))],
         "id long, media binary",
     )
-    from gpd_lite_toolbox_spark.deploy import ship_package
-
-    ship_package(spark)
     rows = {r.id: r for r in MM.decode_audio_samples(df).collect()}
     r1 = rows[1]
     assert r1.au_codec == "wav"
@@ -546,9 +540,6 @@ def test_audio_raw_fallback_huge_sr_and_short_payload(spark):
     (au_sr is bigint, not a wrapping int32), and header_bytes smaller
     than the 16-byte header must not raise struct.error on short
     payloads — the operator-is-total contract."""
-    from gpd_lite_toolbox_spark.deploy import ship_package
-
-    ship_package(spark)
     evil = struct.pack("<IIII", 0, 0, 0xFFFFFFFF, 1) + b"\x01\x02"
     short = b"0123456789"  # 10 bytes < 16
     df = spark.createDataFrame(
