@@ -359,9 +359,17 @@ def main() -> None:
         "uptime_sec": _uptime(),
     }
 
+    # Janino compiles, read around (never inside) the timed runs: the
+    # warm-up below claims only compile state stays warm, so a query
+    # whose timed runs still compile plans new code on every run or
+    # has outgrown the codegen cache
+    codegen_metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    janino = codegen_metrics.METRIC_COMPILATION_TIME()
+
     qs = E.queries()
     timings: dict[str, float] = {}
     load1: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     errors: dict[str, str] = {}
     for name in BENCH_QUERIES:
         if name not in qs:
@@ -387,11 +395,13 @@ def main() -> None:
             # reproduces, not a lucky cache, and three samples make a
             # single-burst collision twice as unlikely as two.
             best = float("inf")
+            n_compiled = janino.getCount()
             for _ in range(3):
                 spark.catalog.clearCache()
                 t0 = time.perf_counter()
                 df.write.mode("overwrite").format("noop").save()
                 best = min(best, time.perf_counter() - t0)
+            compiles[name] = janino.getCount() - n_compiled
             timings[name] = round(best, 3)
             # 1-min loadavg right after the query: a row that doubled
             # under loadavg 40 on a 32-cpu host is noise, not a
@@ -410,6 +420,7 @@ def main() -> None:
         "sf": sf,
         "host": {**host, "loadavg_end": list(os.getloadavg())},
         "loadavg_after_query": load1,
+        "codegen_compiles": compiles,
     }
     if errors:
         full["errors"] = errors

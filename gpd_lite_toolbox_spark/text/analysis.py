@@ -517,10 +517,26 @@ def _aho_corasick(plist: list[str]):
     return goto, fail, out
 
 
+# Most distinct phrases a DataFrame blocklist may bring to the driver.
+# Blocklists run to hundreds of thousands of entries, and the
+# Aho-Corasick automaton is built driver-side from the collected list
+# at a Python dict per trie node; past the cap the collect stops at
+# cap + 1 rows and fails with a sized error.
+PHRASE_COLLECT_CAP = 1_000_000
+
+
 def _normalize_phrases(phrases, case_insensitive: bool) -> list[str]:
     if isinstance(phrases, DataFrame):
         pcol = phrases.columns[0]
-        plist = [r[0] for r in phrases.select(pcol).distinct().collect()]
+        cap = PHRASE_COLLECT_CAP
+        rows = phrases.select(pcol).distinct().limit(cap + 1).collect()
+        if len(rows) > cap:
+            raise ValueError(
+                f"phrases DataFrame holds more than PHRASE_COLLECT_CAP={cap} "
+                "distinct phrases; the blocklist is collected to the driver "
+                "to build the automaton"
+            )
+        plist = [r[0] for r in rows]
     else:
         plist = list(dict.fromkeys(phrases))
     plist = [p for p in plist if p]

@@ -134,6 +134,20 @@ def test_dataframe_phrase_input_and_empty_guard(spark):
         banned_phrase_hits(docs, [])
 
 
+def test_dataframe_phrase_collect_cap(spark, monkeypatch):
+    """A DataFrame blocklist is collected to the driver: past the cap
+    it fails with a sized error instead of collecting the column."""
+    from gpd_lite_toolbox_spark.text import analysis as A
+
+    docs = spark.createDataFrame([(1, "ab cd")], "id long, text string")
+    ph = spark.createDataFrame([("ab",), ("cd",), ("cd",)], "phrase string")
+    monkeypatch.setattr(A, "PHRASE_COLLECT_CAP", 2)
+    assert len(banned_phrase_hits(docs, ph).collect()) == 2
+    monkeypatch.setattr(A, "PHRASE_COLLECT_CAP", 1)
+    with pytest.raises(ValueError, match="PHRASE_COLLECT_CAP=1"):
+        banned_phrase_hits(docs, ph)
+
+
 def test_join_mode_raises(spark):
     """``mode`` survives for existing callers, but only "ac" is
     accepted: the dictionary-join tier is gone."""

@@ -2,11 +2,18 @@
 
 from __future__ import annotations
 
+import os
 import re
 from pathlib import Path
 
+import pytest
+
 from gpd_lite_toolbox_spark import deploy
-from gpd_lite_toolbox_spark.session import ENGINE_CONF, configure
+from gpd_lite_toolbox_spark.session import (
+    CODEGEN_CACHE_ENTRIES,
+    ENGINE_CONF,
+    configure,
+)
 
 _REPO = Path(__file__).resolve().parents[1]
 
@@ -40,6 +47,51 @@ def test_declared_query_leaves_session_conf_unchanged(spark, sf_dir):
     before = new.conf.getAll
     assert E.queries()["make_grid"](new, sf_dir).count() > 0
     assert new.conf.getAll == before
+
+
+def test_get_spark_sizes_codegen_cache(spark):
+    """The cache size is a static conf: get_spark's builder sets it,
+    and a runtime set (what configure does with ENGINE_CONF) raises."""
+    key = "spark.sql.codegen.cache.maxEntries"
+    assert spark.conf.get(key) == str(CODEGEN_CACHE_ENTRIES)
+    with pytest.raises(Exception, match="static"):
+        spark.conf.set(key, str(CODEGEN_CACHE_ENTRIES))
+
+
+def test_warm_text_chain_reuses_compiled_classes(spark, sf_dir):
+    """A second run of the dedup -> trigram-gate chain finds its
+    generated classes in the codegen cache instead of Janino-compiling
+    them again. At Spark's default 100-entry cache the chain evicts its
+    own classes and every run recompiles about as much as the first."""
+    from pyspark.sql import functions as F
+
+    from gpd_lite_toolbox_spark import (
+        dup_groups_star,
+        perplexity_buckets,
+        release_caches,
+        trigram_logprob,
+    )
+
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
+        F.col("doc_id").alias("id"), "text"
+    )
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = metrics.METRIC_COMPILATION_TIME()
+
+    def run_chain() -> int:
+        n0 = compiles.getCount()
+        dup_groups_star(docs).localCheckpoint()
+        perplexity_buckets(docs, scorer=trigram_logprob).localCheckpoint()
+        return compiles.getCount() - n0
+
+    first = run_chain()
+    release_caches()
+    second = run_chain()
+    # Measured at sf0.001: first 178, second 8-16 (each `limit` stage's
+    # generated code carries a JVM-wide counter, so those never hit the
+    # cache); at 100 entries, 178 then 173. The floor covers a first run
+    # that found the chain's classes cached by earlier tests.
+    assert second <= max(32, first // 4), (first, second)
 
 
 def test_package_shipped_once_per_application_id(monkeypatch):
