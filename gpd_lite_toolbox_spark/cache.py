@@ -1,17 +1,18 @@
-"""Explicit lifecycle for operator-internal persists.
+"""The one lifecycle for operator-internal persists.
 
-Pair/model operators ``persist()`` intermediates that feed both sides
-of a join (signatures, band tables, per-class aggregates) and return a
-LAZY frame that depends on them — they cannot unpersist before the
-caller consumes the result, and before this module the only recourse
-for a long-lived driver was the GLOBAL ``spark.catalog.clearCache()``.
+Only this module calls ``persist``, ``cache`` or ``unpersist``
+(guarded by ``tests/test_cache.py``). ``tracked_persist()`` records
+every persist, and one rule says who frees it:
 
-``tracked_persist()`` is a drop-in replacement for ``df.persist()``
-that records the handle; ``release_caches()`` unpersists everything
-recorded, so a service calling pair operators per batch frees exactly
-the package's caches and nothing else.  Operators that materialize
-internally and release their own caches (dup_groups, pagerank, hits)
-do not need the registry and stay self-managing.
+- a frame a RETURNED lazy result depends on: ``release_caches()``,
+  which frees the package's caches, never the application's;
+- a frame nothing returned depends on: ``with scoped_release():``,
+  which frees it when the block exits or raises.
+
+``release(df)`` frees one tracked frame early (``transform_cartogram``
+drops each iteration once the next is materialized).
+``localCheckpoint()`` stays outside the registry: it is a lineage cut,
+not a CacheManager entry, so ``unpersist()`` cannot free it.
 """
 
 from __future__ import annotations
@@ -30,11 +31,18 @@ def tracked_persist(df: DataFrame) -> DataFrame:
     return df
 
 
+def release(df: DataFrame) -> None:
+    """Unpersist a tracked ``df`` and drop it from the registry; a
+    no-op for a frame the package did not track."""
+    if any(t is df for t in _TRACKED):
+        df.unpersist()
+        _TRACKED[:] = [t for t in _TRACKED if t is not df]
+
+
 def release_caches() -> int:
     """Unpersist every intermediate recorded by ``tracked_persist()``
     and clear the registry; returns the number released.  Safe at any
     time: results already consumed recompute from lineage if re-used,
-    an intermediate an operator released itself unpersists as a no-op,
     and the call never touches caches the APPLICATION created."""
     n = len(_TRACKED)
     for df in _TRACKED:
@@ -47,7 +55,8 @@ def release_caches() -> int:
 
 class scoped_release:
     """Context manager releasing exactly the intermediates
-    ``tracked_persist`` records INSIDE the with-block — for drivers of
+    ``tracked_persist`` records INSIDE the with-block, on exit or on a
+    raise — for operators' internal frames and for drivers of
     unbounded loops (a streaming ``foreachBatch`` probing per
     micro-batch) where the global ``release_caches()`` would also
     evict long-lived memoized frames, and NO release would accumulate

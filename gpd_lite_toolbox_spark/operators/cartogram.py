@@ -37,6 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import release, tracked_persist
 from ..geometry import wkb as W
 from ..geometry.functions import st_area, st_centroid_xy
 
@@ -129,21 +130,21 @@ def transform_cartogram(
 ) -> DataFrame:
     """Continuous cartogram: returns the input with ``geometry`` replaced
     by the transformed polygons. Validates a strictly positive numeric
-    value field (cycartogram.pyx:62-67)."""
+    value field (cycartogram.pyx:62-67). The result is persisted and
+    tracked: ``release_caches()`` frees it."""
     if iterations <= 0:
         raise ValueError("iterations must be >= 1")
     dtype = dict(gdf.dtypes).get(field_name)
     if dtype not in ("bigint", "double", "int", "float"):
         raise ValueError("value field must be numeric")
-    cur = gdf
-    prev = None
+    cur = prev = gdf
     for _ in range(iterations):
         # the stats pass materializes cur's cache; once it has, the
-        # PREVIOUS iteration's cache is dead — unpersist it so storage
+        # PREVIOUS iteration's cache is dead — release it so storage
         # holds at most two copies of the layer, not `iterations` copies
         st = _feature_stats(cur, field_name, id_col)
-        if prev is not None:
-            prev.unpersist()
+        if prev is not gdf:
+            release(prev)
         # not (v > 0).all(), NOT (v <= 0).any(): NaN (a NULL value
         # field cast to double) compares False on BOTH <= and >, and
         # would otherwise slip through, poison every per-iteration
@@ -161,7 +162,7 @@ def transform_cartogram(
                 yield pdf
 
         prev = cur
-        cur = cur.mapInPandas(mapper, schema=cur.schema).cache()
+        cur = tracked_persist(cur.mapInPandas(mapper, schema=cur.schema))
     return cur
 
 

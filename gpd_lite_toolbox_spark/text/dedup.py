@@ -26,15 +26,11 @@ document-frequency counts and emit duplicate signatures. Run
 keys; this is the same contract every id-keyed operator in the
 package already assumes.
 
-Cache lifecycle: the pair operators persist intermediates that feed
-both sides of a join (signatures, the shingle layout, sorted sets)
-and return a LAZY frame that depends on them — they cannot unpersist
-before the caller consumes the result. Those persists go through
-``cache.tracked_persist``; a long-lived service calling pair
-operators per batch frees exactly the package's caches with
-``gpd_lite_toolbox_spark.release_caches()`` (no global
-``spark.catalog.clearCache()`` needed). ``dup_groups``, which
-materializes internally, releases its own caches.
+Cache lifecycle (``cache``'s one rule): the pair operators return
+LAZY frames that read their persisted signatures, shingle layouts and
+sorted sets, which ``release_caches()`` frees; ``dup_groups``' edge
+table and the index writer's signatures feed nothing returned and are
+freed by ``scoped_release`` before the operator returns or raises.
 """
 
 from __future__ import annotations
@@ -42,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cache import tracked_persist
+from ..cache import scoped_release, tracked_persist
 
 # minhash parameters (documented constants — change = new signature space)
 SHINGLE_K = 8
@@ -456,24 +452,24 @@ def append_to_minhash_index(
 def _write_minhash_index(
     corpus: DataFrame, path: str, mode: str, id_col: str, text_col: str
 ) -> None:
-    sig = minhash_signatures(corpus, id_col=id_col, text_col=text_col).persist()
-    bands = minhash_band_keys(sig).withColumn(
-        "bucket", F.substring("band_key", 1, _IDX_BUCKET_HEX)
-    )
-    bands.write.mode(mode).partitionBy("band", "bucket").parquet(
-        f"{path}/bands"
-    )
-    docs = sig.join(
-        _widen(corpus).select(
-            F.col(id_col).alias("id"),
-            F.array_sort(shingle_str_array_expr(text_col)).alias(
-                "shingle_set"
+    with scoped_release():
+        sig = tracked_persist(minhash_signatures(corpus, id_col, text_col))
+        bands = minhash_band_keys(sig).withColumn(
+            "bucket", F.substring("band_key", 1, _IDX_BUCKET_HEX)
+        )
+        bands.write.mode(mode).partitionBy("band", "bucket").parquet(
+            f"{path}/bands"
+        )
+        docs = sig.join(
+            _widen(corpus).select(
+                F.col(id_col).alias("id"),
+                F.array_sort(shingle_str_array_expr(text_col)).alias(
+                    "shingle_set"
+                ),
             ),
-        ),
-        "id",
-    )
-    docs.write.mode(mode).parquet(f"{path}/docs")
-    sig.unpersist()
+            "id",
+        )
+        docs.write.mode(mode).parquet(f"{path}/docs")
 
 
 def ingest_near_dups(
@@ -505,31 +501,9 @@ def ingest_near_dups(
     from functools import reduce
     from operator import or_
 
-    # the batch's (id, text) projection is consumed TWICE per run —
-    # the signature fill below and the exact-verify shingle sets
-    # (sets_n) — and the batch is typically an upstream filter/union
-    # lineage that would otherwise re-scan per consumer (round 11,
-    # the r10 "Not yet optimized" item; guide §5).  Widened once here
-    # so both folds run at full task width and the persisted layout
-    # is already wide.
-    bt = tracked_persist(
-        _widen(batch).select(F.col(id_col), F.col(text_col))
-    )
-    sig_n = tracked_persist(
-        minhash_signatures(bt, id_col=id_col, text_col=text_col)
-    )
-    bands_n = minhash_band_keys(sig_n).withColumn(
-        "bucket", F.substring("band_key", 1, _IDX_BUCKET_HEX)
-    )
-    probed = (
-        bands_n.select("band", "bucket").distinct().collect()
-    )
-    by_band: dict[int, list[str]] = {}
-    for r in probed:
-        by_band.setdefault(r.band, []).append(r.bucket)
     from pyspark.errors import AnalysisException
 
-    try:
+    try:  # before any persist: the day-1 empty return persists nothing
         idx_bands = spark.read.parquet(f"{path}/bands")
     except AnalysisException as e:
         # Legitimate DAY-1 EMPTY states only — anything else must
@@ -556,13 +530,33 @@ def ingest_near_dups(
         )
         if cond != "PATH_NOT_FOUND" and not committed_empty:
             raise
-        sig_n.unpersist()
-        bt.unpersist()
         return batch.select(
             F.col(id_col).alias("id_a"),
             F.col(id_col).alias("id_b"),
             F.lit(0.0).alias("jaccard"),
         ).limit(0)
+    # the batch's (id, text) projection is consumed TWICE per run —
+    # the signature fill below and the exact-verify shingle sets
+    # (sets_n) — and the batch is typically an upstream filter/union
+    # lineage that would otherwise re-scan per consumer (round 11,
+    # the r10 "Not yet optimized" item; guide §5).  Widened once here
+    # so both folds run at full task width and the persisted layout
+    # is already wide.
+    bt = tracked_persist(
+        _widen(batch).select(F.col(id_col), F.col(text_col))
+    )
+    sig_n = tracked_persist(
+        minhash_signatures(bt, id_col=id_col, text_col=text_col)
+    )
+    bands_n = minhash_band_keys(sig_n).withColumn(
+        "bucket", F.substring("band_key", 1, _IDX_BUCKET_HEX)
+    )
+    probed = (
+        bands_n.select("band", "bucket").distinct().collect()
+    )
+    by_band: dict[int, list[str]] = {}
+    for r in probed:
+        by_band.setdefault(r.band, []).append(r.bucket)
     if by_band:
         cond = reduce(
             or_,
@@ -1184,70 +1178,70 @@ def dup_groups(
         pairs = minhash_lsh_pairs(
             corpus, threshold=threshold, id_col=id_col, text_col=text_col
         )
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(
+    with scoped_release():  # nothing returned reads the edge table
+        edges = tracked_persist(
             pairs.select(
-                F.col("id_b").alias("src"), F.col("id_a").alias("dst")
+                F.col("id_a").alias("src"), F.col("id_b").alias("dst")
+            ).unionByName(
+                pairs.select(
+                    F.col("id_b").alias("src"), F.col("id_a").alias("dst")
+                )
             )
         )
-        .persist()
-    )
-    # eager localCheckpoint per round: the label frame restarts from a
-    # materialized partition set each iteration, so the logical plan
-    # (and driver heap) stays flat no matter how many rounds a long
-    # chain needs — the GraphFrames connected-components discipline
-    labels = (
-        corpus.select(F.col(id_col).alias("id"))
-        .distinct()
-        .withColumn("group_id", F.col("id"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iter):
-        nbr = (
-            edges.join(
-                labels.select(
-                    F.col("id").alias("src"), F.col("group_id").alias("lbl")
-                ),
-                "src",
-            )
-            .groupBy("dst")
-            .agg(F.min("lbl").alias("nbr_min"))
-            .withColumnRenamed("dst", "id")
-        )
-        stepped = (
-            labels.join(nbr, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("group_id"),
-                    F.coalesce(F.col("nbr_min"), F.col("group_id")),
-                ).alias("group_id"),
-                (F.col("nbr_min") < F.col("group_id")).alias("_chg"),
-            )
+        # eager localCheckpoint per round: the label frame restarts from a
+        # materialized partition set each iteration, so the logical plan
+        # (and driver heap) stays flat no matter how many rounds a long
+        # chain needs — the GraphFrames connected-components discipline
+        labels = (
+            corpus.select(F.col(id_col).alias("id"))
+            .distinct()
+            .withColumn("group_id", F.col("id"))
             .localCheckpoint()
         )
-        changed = stepped.filter("_chg").count()
-        labels = stepped.drop("_chg")
-        if changed == 0:
-            break
-    else:
-        # exhausting max_iter with labels still moving means some
-        # nodes carry non-minimal group ids: the keep-id==group_id
-        # rule would then keep several representatives of one true
-        # cluster. Loud, not silent — and fatal under strict.
-        msg = (
-            f"dup_groups did not converge within max_iter={max_iter} "
-            f"rounds ({changed} labels still changing) — a pair chain "
-            "longer than max_iter exists; raise max_iter"
-        )
-        if strict:
-            edges.unpersist()
-            raise RuntimeError(msg)
-        import warnings
+        for _ in range(max_iter):
+            nbr = (
+                edges.join(
+                    labels.select(
+                        F.col("id").alias("src"),
+                        F.col("group_id").alias("lbl"),
+                    ),
+                    "src",
+                )
+                .groupBy("dst")
+                .agg(F.min("lbl").alias("nbr_min"))
+                .withColumnRenamed("dst", "id")
+            )
+            stepped = (
+                labels.join(nbr, "id", "left")
+                .select(
+                    "id",
+                    F.least(
+                        F.col("group_id"),
+                        F.coalesce(F.col("nbr_min"), F.col("group_id")),
+                    ).alias("group_id"),
+                    (F.col("nbr_min") < F.col("group_id")).alias("_chg"),
+                )
+                .localCheckpoint()
+            )
+            changed = stepped.filter("_chg").count()
+            labels = stepped.drop("_chg")
+            if changed == 0:
+                break
+        else:
+            # exhausting max_iter with labels still moving means some
+            # nodes carry non-minimal group ids: the keep-id==group_id
+            # rule would then keep several representatives of one true
+            # cluster. Loud, not silent — and fatal under strict.
+            msg = (
+                f"dup_groups did not converge within max_iter={max_iter}"
+                f" rounds ({changed} labels still changing) — a pair"
+                " chain longer than max_iter exists; raise max_iter"
+            )
+            if strict:
+                raise RuntimeError(msg)
+            import warnings
 
-        warnings.warn(msg, stacklevel=2)
-    edges.unpersist()
+            warnings.warn(msg, stacklevel=2)
     sizes = labels.groupBy("group_id").agg(
         F.count("*").alias("group_size")
     )

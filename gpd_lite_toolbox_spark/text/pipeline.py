@@ -549,44 +549,46 @@ def write_curation_flags_index(
     ``curation_ledger``'s stages verbatim; every other ledger rule is
     row-local or static-dictionary-joined and stays in-stream.
     """
-    from ..cache import tracked_persist
+    from ..cache import scoped_release, tracked_persist
     from .dedup import dedup_canonical, dup_groups, minhash_lsh_pairs
 
-    c = corpus.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("text")
-    )
-    pairs = minhash_lsh_pairs(c, threshold=threshold)
-    groups = tracked_persist(dup_groups(c, pairs=pairs, max_iter=max_iter))
-    kept = dedup_canonical(c, groups=groups)
-    near = groups.join(
-        kept.select("group_id", "kept_id"), "group_id"
-    ).select(
-        "id",
-        (
-            (F.col("group_size") > 1) & (F.col("id") != F.col("kept_id"))
-        ).alias("near"),
-    )
-    w = Window.partitionBy("_fp")
-    exact = (
-        c.select("id", F.md5("text").alias("_fp"))
-        .withColumn("_minid", F.min("id").over(w))
-        .select(
+    with scoped_release():  # returns None: nothing outlives the write
+        c = corpus.select(
+            F.col(id_col).alias("id"), F.col(text_col).alias("text")
+        )
+        pairs = minhash_lsh_pairs(c, threshold=threshold)
+        groups = tracked_persist(
+            dup_groups(c, pairs=pairs, max_iter=max_iter)
+        )
+        kept = dedup_canonical(c, groups=groups)
+        near = groups.join(
+            kept.select("group_id", "kept_id"), "group_id"
+        ).select(
             "id",
             (
-                F.col("_fp").isNotNull() & (F.col("id") != F.col("_minid"))
-            ).alias("exact"),
+                (F.col("group_size") > 1) & (F.col("id") != F.col("kept_id"))
+            ).alias("near"),
         )
-    )
-    (
-        exact.join(near, "id", "left")
-        .select(
-            "id",
-            "exact",
-            F.coalesce("near", F.lit(False)).alias("near"),
-            (F.col("id") % int(n_buckets)).alias("bk"),
+        w = Window.partitionBy("_fp")
+        exact = (
+            c.select("id", F.md5("text").alias("_fp"))
+            .withColumn("_minid", F.min("id").over(w))
+            .select(
+                "id",
+                (
+                    F.col("_fp").isNotNull() & (F.col("id") != F.col("_minid"))
+                ).alias("exact"),
+            )
         )
-        .write.mode("overwrite")
-        .partitionBy("bk")
-        .parquet(path)
-    )
-    groups.unpersist()
+        (
+            exact.join(near, "id", "left")
+            .select(
+                "id",
+                "exact",
+                F.coalesce("near", F.lit(False)).alias("near"),
+                (F.col("id") % int(n_buckets)).alias("bk"),
+            )
+            .write.mode("overwrite")
+            .partitionBy("bk")
+            .parquet(path)
+        )

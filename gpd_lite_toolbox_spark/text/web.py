@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..cache import scoped_release, tracked_persist
+
 URL_PATTERN = r"https?://[A-Za-z0-9.-]+(?:/[A-Za-z0-9._/%-]*)?"
 DOMAIN_PATTERN = r"https?://([^/]+)"
 
@@ -299,62 +301,58 @@ def pagerank(
         .groupBy("src", "dst")
         .agg(F.sum("_w").alias("_w"))
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    outw = e.groupBy("src").agg(F.sum("_w").alias("_wout"))
-    trans = (
-        e.join(outw, "src")
-        .select("src", "dst", (F.col("_w") / F.col("_wout")).alias("frac"))
-        .persist()
-    )
-    n_nodes = nodes.count()
-    if n_nodes == 0:
-        out = nodes.select(
-            "node", F.lit(None).cast("double").alias("rank")
+    # ranks are checkpointed: nothing returned reads nodes or trans
+    with scoped_release():
+        nodes = tracked_persist(
+            e.select(F.col("src").alias("node"))
+            .union(e.select(F.col("dst").alias("node")))
+            .distinct()
         )
-        nodes.unpersist()
-        trans.unpersist()
-        return out
-    ranks = nodes.select(
-        "node", F.lit(1.0 / n_nodes).alias("rank")
-    ).localCheckpoint()
-    # dangling test rides the PERSISTED transition table (its distinct
-    # src set), not outw — outw's lineage re-runs the edge aggregation
-    # per iteration
-    has_out = trans.select(F.col("src").alias("node")).distinct()
-    for _ in range(iters):
-        contrib = (
-            trans.join(ranks, trans["src"] == ranks["node"])
-            .select("dst", (F.col("frac") * F.col("rank")).alias("_c"))
-            .groupBy("dst")
-            .agg(F.sum("_c").alias("_contrib"))
-        )
-        dangling = (
-            ranks.join(has_out, "node", "left_anti")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dangling"))
-        )
-        ranks = (
-            nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.lit((1.0 - damping) / n_nodes)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("_contrib"), F.lit(0.0))
-                        + F.col("_dangling") / F.lit(float(n_nodes))
-                    )
-                ).alias("rank"),
+        outw = e.groupBy("src").agg(F.sum("_w").alias("_wout"))
+        trans = tracked_persist(
+            e.join(outw, "src").select(
+                "src", "dst", (F.col("_w") / F.col("_wout")).alias("frac")
             )
-            .localCheckpoint()
         )
-    nodes.unpersist()
-    trans.unpersist()
+        n_nodes = nodes.count()
+        if n_nodes == 0:
+            return nodes.select(
+                "node", F.lit(None).cast("double").alias("rank")
+            )
+        ranks = nodes.select(
+            "node", F.lit(1.0 / n_nodes).alias("rank")
+        ).localCheckpoint()
+        # dangling test rides the PERSISTED transition table (its distinct
+        # src set), not outw — outw's lineage re-runs the edge aggregation
+        # per iteration
+        has_out = trans.select(F.col("src").alias("node")).distinct()
+        for _ in range(iters):
+            contrib = (
+                trans.join(ranks, trans["src"] == ranks["node"])
+                .select("dst", (F.col("frac") * F.col("rank")).alias("_c"))
+                .groupBy("dst")
+                .agg(F.sum("_c").alias("_contrib"))
+            )
+            dangling = (
+                ranks.join(has_out, "node", "left_anti")
+                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dangling"))
+            )
+            ranks = (
+                nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
+                .crossJoin(F.broadcast(dangling))
+                .select(
+                    "node",
+                    (
+                        F.lit((1.0 - damping) / n_nodes)
+                        + F.lit(damping)
+                        * (
+                            F.coalesce(F.col("_contrib"), F.lit(0.0))
+                            + F.col("_dangling") / F.lit(float(n_nodes))
+                        )
+                    ).alias("rank"),
+                )
+                .localCheckpoint()
+            )
     return ranks
 
 
@@ -459,62 +457,56 @@ def hits(
     """
     if iters < 0:
         raise ValueError("iters must be >= 0")
-    e = (
-        edges.select(
-            F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+    # nothing returned reads e or nodes: both score frames are
+    # checkpointed and hold every node once
+    with scoped_release():
+        e = tracked_persist(
+            edges.select(
+                F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+            ).distinct()
         )
-        .distinct()
-        .persist()
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n_nodes = nodes.count()
-    if n_nodes == 0:
-        out = nodes.select(
-            "node",
-            F.lit(None).cast("double").alias("auth"),
-            F.lit(None).cast("double").alias("hub"),
+        nodes = tracked_persist(
+            e.select(F.col("src").alias("node"))
+            .union(e.select(F.col("dst").alias("node")))
+            .distinct()
         )
-        e.unpersist()
-        nodes.unpersist()
-        return out
+        n_nodes = nodes.count()
+        if n_nodes == 0:
+            return nodes.select(
+                "node",
+                F.lit(None).cast("double").alias("auth"),
+                F.lit(None).cast("double").alias("hub"),
+            )
 
-    def _half(score: DataFrame, join_on: str, out_key: str) -> DataFrame:
-        """One half-step: raw = adjacency-sum of the other score over
-        ``join_on`` grouped by ``out_key``, then L1 normalize."""
-        raw = (
-            e.join(score, e[join_on] == score["node"])
-            .groupBy(out_key)
-            .agg(F.sum("s").alias("_r"))
-        )
-        full = nodes.join(
-            raw, nodes["node"] == raw[out_key], "left"
-        ).select("node", F.coalesce(F.col("_r"), F.lit(0.0)).alias("_r"))
-        norm = full.agg(F.sum("_r").alias("_n"))
-        return (
-            full.crossJoin(F.broadcast(norm))
-            .select("node", (F.col("_r") / F.col("_n")).alias("s"))
-            .localCheckpoint()
-        )
+        def _half(score: DataFrame, join_on: str, out_key: str) -> DataFrame:
+            """One half-step: raw = adjacency-sum of the other score over
+            ``join_on`` grouped by ``out_key``, then L1 normalize."""
+            raw = (
+                e.join(score, e[join_on] == score["node"])
+                .groupBy(out_key)
+                .agg(F.sum("s").alias("_r"))
+            )
+            full = nodes.join(
+                raw, nodes["node"] == raw[out_key], "left"
+            ).select("node", F.coalesce(F.col("_r"), F.lit(0.0)).alias("_r"))
+            norm = full.agg(F.sum("_r").alias("_n"))
+            return (
+                full.crossJoin(F.broadcast(norm))
+                .select("node", (F.col("_r") / F.col("_n")).alias("s"))
+                .localCheckpoint()
+            )
 
-    hub = nodes.select(
-        "node", F.lit(1.0 / n_nodes).alias("s")
-    ).localCheckpoint()
-    auth = hub
-    for _ in range(iters):
-        # auth(v) <- sum of hub over in-edges (u, v), normalized
-        auth = _half(hub, "src", "dst")
-        # hub(u) <- sum of auth over out-edges (u, v), normalized
-        hub = _half(auth, "dst", "src")
-    out = (
-        nodes.join(auth.withColumnRenamed("s", "auth"), "node")
+        hub = nodes.select(
+            "node", F.lit(1.0 / n_nodes).alias("s")
+        ).localCheckpoint()
+        auth = hub
+        for _ in range(iters):
+            # auth(v) <- sum of hub over in-edges (u, v), normalized
+            auth = _half(hub, "src", "dst")
+            # hub(u) <- sum of auth over out-edges (u, v), normalized
+            hub = _half(auth, "dst", "src")
+    return (
+        auth.withColumnRenamed("s", "auth")
         .join(hub.withColumnRenamed("s", "hub"), "node")
         .select("node", "auth", "hub")
     )
-    e.unpersist()
-    nodes.unpersist()
-    return out

@@ -566,13 +566,13 @@ def lsh_bands(
     shorter than the vectors would null out every projection and
     silently collapse all buckets (degenerating LSH to all-pairs).
 
-    The returned table is ``persist()``-ed (bands are always consumed
-    by both sides of a join; without the cache the Arrow projection
-    runs once per side). Cache lifecycle belongs to the CALLER: a
-    long-lived service issuing many calls should ``.unpersist()`` each
-    returned frame once consumed, or pass ``cache=False`` and manage
-    reuse itself — Spark's ContextCleaner only reclaims the cached
-    partitions when the DataFrame is garbage collected.
+    The returned table is persisted with ``tracked_persist`` (bands are
+    always consumed by both sides of a join; without the cache the
+    Arrow projection runs once per side). A long-lived service issuing
+    many calls should free each returned frame once consumed, with
+    ``release_caches()`` or ``.unpersist()``, or pass ``cache=False``
+    and manage reuse itself — Spark's ContextCleaner only reclaims the
+    cached partitions when the DataFrame is garbage collected.
     """
     if dims is None:
         # probe a NON-NULL row (an arbitrary first row may carry a
@@ -637,7 +637,7 @@ def lsh_bands(
     # bands are always consumed by a (self-)join's two sides: persist
     # the |ids| x B-row table so the projection runs once, not per side
     # (lifecycle note in the docstring — callers in a serving loop
-    # unpersist or opt out)
+    # release or opt out)
     out = sums.select(
         "id", F.explode(F.array(*structs)).alias("_bb")
     ).select("id", "_bb.band", "_bb.bucket")

@@ -41,6 +41,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..cache import scoped_release, tracked_persist
+
 M_SUB = 8
 K_CODES = 16
 DIMS = 64
@@ -277,8 +279,8 @@ def fit_pq(
     ).select(
         "id", "sub", F.transform("sv", lambda x: x.cast("double")).alias("sv")
     )
-    subs = subs.persist()
-    try:
+    with scoped_release():
+        subs = tracked_persist(subs)
         # deterministic seeding: k md5-smallest rows per subspace
         wseed = Window.partitionBy("sub").orderBy("_h")
         seeded = (
@@ -336,8 +338,6 @@ def fit_pq(
             )
             for r in means:  # empty clusters keep their old centroid
                 cbs[r["sub"]][r["code"]][r["dim"]] = float(r["mv"])
-    finally:
-        subs.unpersist()
     return cbs
 
 

@@ -1,24 +1,13 @@
-"""Regression tests for the round-4 ADVICE items: cache lifecycle
-(tracked_persist / release_caches), text_col threading through the
-group-level dedup operators, the strict non-convergence option, and
-write_warc's shared-POSIX path contract."""
+"""Regression tests for the round-4 ADVICE items: text_col threading
+through the group-level dedup operators, the strict non-convergence
+option, and write_warc's shared-POSIX path contract. The cache
+lifecycle tests live in tests/test_cache.py."""
 
 import pytest
 
 from pyspark.sql import functions as F
 
-
-def _corpus_body(spark):
-    """Tiny corpus whose text column is NOT named 'text' — the shape
-    that used to break dup_groups/dedup_canonical/split_leakage's
-    default-pairs path (they hardcoded text_col='text')."""
-    base = "the quick brown fox jumps over the lazy dog " * 4
-    rows = [
-        (1, base),
-        (2, base + "tail"),  # near-dup of 1
-        (3, "completely different content with its own words " * 4),
-    ]
-    return spark.createDataFrame(rows, "id bigint, body string")
+from tests.util import corpus_body as _corpus_body
 
 
 # round 11 (r10 VERDICT item 1): two full dup_groups label-propagation runs (~20 s) — full lane only.
@@ -79,18 +68,6 @@ def test_dup_groups_strict_raises_on_nonconvergence(spark):
     with pytest.warns(UserWarning, match="did not converge"):
         out = dup_groups(ids, pairs=chain, max_iter=1).collect()
     assert len(out) == 5
-
-
-def test_release_caches_frees_tracked_intermediates(spark):
-    from gpd_lite_toolbox_spark import release_caches
-    from gpd_lite_toolbox_spark.text.dedup import minhash_lsh_pairs
-
-    release_caches()  # drain anything earlier tests tracked
-    corpus = _corpus_body(spark).withColumnRenamed("body", "text")
-    minhash_lsh_pairs(corpus, threshold=0.3).collect()
-    n = release_caches()
-    assert n >= 1
-    assert release_caches() == 0  # registry drained; idempotent
 
 
 def test_write_warc_rejects_uri_paths(spark):

@@ -1,4 +1,5 @@
-"""Shared test helpers: the driver-style Spark-vs-DuckDB comparison."""
+"""Shared test helpers: the driver-style Spark-vs-DuckDB comparison
+and a tiny near-duplicate corpus."""
 
 from __future__ import annotations
 
@@ -59,3 +60,16 @@ def assert_parity(spark_df, sql: str, sf_dir: str, rel_tol: float = 1e-9):
                 (i, a, b) for i, (a, b) in enumerate(zip(lv, rv)) if a != b
             ]
             assert not mism, f"{c}: first mismatches {mism[:5]}"
+
+
+def corpus_body(spark):
+    """Tiny corpus whose text column is NOT named 'text' — the shape
+    that used to break dup_groups/dedup_canonical/split_leakage's
+    default-pairs path (they hardcoded text_col='text')."""
+    base = "the quick brown fox jumps over the lazy dog " * 4
+    rows = [
+        (1, base),
+        (2, base + "tail"),  # near-dup of 1
+        (3, "completely different content with its own words " * 4),
+    ]
+    return spark.createDataFrame(rows, "id bigint, body string")
