@@ -218,12 +218,6 @@ def points_in_geom(px: np.ndarray, py: np.ndarray, geom) -> np.ndarray:
 
 
 # --------------------------------------------------------------- distances
-def pairwise_min_dist(a: np.ndarray, b: np.ndarray) -> float:
-    """min over vertex pairs of euclidean distance (used in NN kernels)."""
-    d = a[:, None, :] - b[None, :, :]
-    return float(np.sqrt((d * d).sum(axis=2)).min())
-
-
 def max_pairwise_dist(a: np.ndarray, b: np.ndarray) -> float:
     """Exact variant of the reference's line distance
     (``utils.py:77-80`` fh2_dist_lines2): max euclidean distance over the
@@ -474,13 +468,6 @@ def _edge_arrays(parts: list[list[np.ndarray]]) -> tuple[np.ndarray, np.ndarray]
             ps.append(r)
             ds.append(q - r)
     return np.vstack(ps), np.vstack(ds)
-
-
-def _pts_in_parts(px: np.ndarray, py: np.ndarray, parts) -> np.ndarray:
-    res = np.zeros(len(px), dtype=bool)
-    for rings in parts:
-        res |= points_in_polygon(px, py, rings)
-    return res
 
 
 def _rings_pre(parts) -> list[list[tuple]]:

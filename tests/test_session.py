@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import os
 import re
-from pathlib import Path
 
 import pytest
 
@@ -14,8 +13,7 @@ from gpd_lite_toolbox_spark.session import (
     ENGINE_CONF,
     configure,
 )
-
-_REPO = Path(__file__).resolve().parents[1]
+from tests.util import repo_sources as _repo_sources
 
 
 def _engine_conf(session) -> dict:
@@ -129,15 +127,6 @@ _ENGINE_CONF_SET = re.compile(
     r"conf\.set\(\s*[\"'](" + "|".join(map(re.escape, ENGINE_CONF)) + r")[\"']"
 )
 _SESSION = "gpd_lite_toolbox_spark/session.py"
-
-
-def _repo_sources():
-    for path in sorted(_REPO.rglob("*.py")):
-        rel = path.relative_to(_REPO)
-        # plans/ holds captured plan dumps; hidden dirs are tool state
-        if rel.parts[0] == "plans" or any(p.startswith(".") for p in rel.parts):
-            continue
-        yield rel.as_posix(), path.read_text(encoding="utf-8")
 
 
 def test_only_session_py_builds_or_configures_sessions():

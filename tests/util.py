@@ -1,14 +1,18 @@
-"""Shared test helpers: the driver-style Spark-vs-DuckDB comparison
-and a tiny near-duplicate corpus."""
+"""Shared test helpers: the driver-style Spark-vs-DuckDB comparison,
+a tiny near-duplicate corpus and the repo source walk the structural
+guards share."""
 
 from __future__ import annotations
 
 import math
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
 from gpd_lite_toolbox_spark.fixtures import TPCH_TABLES
+
+_REPO = Path(__file__).resolve().parents[1]
 
 
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -73,3 +77,13 @@ def corpus_body(spark):
         (3, "completely different content with its own words " * 4),
     ]
     return spark.createDataFrame(rows, "id bigint, body string")
+
+
+def repo_sources():
+    """(repo-relative posix path, text) of every ``.py`` in the repo."""
+    for path in sorted(_REPO.rglob("*.py")):
+        rel = path.relative_to(_REPO)
+        # plans/ holds captured plan dumps; hidden dirs are tool state
+        if rel.parts[0] == "plans" or any(p.startswith(".") for p in rel.parts):
+            continue
+        yield rel.as_posix(), path.read_text(encoding="utf-8")
