@@ -13,8 +13,9 @@ weights toward a target domain. Run it locally:
     python examples/lm_quality_stack.py [sf_dir]
 
 Every stage is a DataFrame transformation; only the final small
-report tables collect. All five scorers share the persisted per-doc
-count substrates, so the corpus text is folded once per grain.
+report tables collect. Every scorer sums its model tables from one
+per-doc n-gram table (``ngram_doc_counts`` at the scorer's order),
+so each scorer folds the corpus text once.
 """
 
 from __future__ import annotations

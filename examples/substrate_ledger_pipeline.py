@@ -40,11 +40,10 @@ def run(spark, sf_dir, substrate_path=None):
     day1 = corpus.filter(F.col("id") % 7 != 3)
     G.write_substrate(day1, substrate_path)
 
-    # 2. an admitted batch folds in incrementally (per-doc substrates
-    # append; the corpus-level vocabulary aggregate is rebuilt)
+    # 2. an admitted batch folds in incrementally (every substrate is
+    # per-doc, so the batch's rows append)
     batch = corpus.filter(F.col("id") % 7 == 3)
     G.append_to_substrate(batch, substrate_path)
-    G.write_substrate(corpus, substrate_path, which=["unigram_counts"])
 
     # 3. day-2 queries: an EMPTY corpus frame proves no raw-text read
     no_text = spark.createDataFrame([], "id bigint, text string")
@@ -54,8 +53,7 @@ def run(spark, sf_dir, substrate_path=None):
     )
     lm_scores = G.bigram_logprob(
         no_text,
-        counts=G.read_substrate(spark, substrate_path, "bigram_counts"),
-        unigrams=G.read_substrate(spark, substrate_path, "unigram_counts"),
+        counts=G.read_substrate(spark, substrate_path, "ngram_counts"),
     )
 
     # 4. the sign-off artifact: one status per document under the full

@@ -55,7 +55,6 @@ def bbox_join(
     cell_size: float,
     tol_left: float = 0.0,
     tol_right: float = 0.0,
-    broadcast_right: bool = False,
     salt: int = 0,
 ) -> DataFrame:
     """Candidate pairs whose tolerance-expanded bboxes intersect.
@@ -74,7 +73,7 @@ def bbox_join(
     """
     # widen narrow scans BEFORE the cell explode: a one-file layer
     # otherwise runs the whole derivation + join on one task (the
-    # geometry twin of text's _widen; wide inputs pass through)
+    # same helper the text folds use; wide inputs pass through)
     from ..parallelism import widen
 
     l = _with_cells(widen(left), cell_size, tol_left, "l")
@@ -90,8 +89,6 @@ def bbox_join(
             "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
         )
         join_keys = ["cx", "cy", "_salt"]
-    if broadcast_right:
-        r = F.broadcast(r)
     j = l.join(r, join_keys)
     # exact bbox-overlap refine (tolerance-expanded, closed intervals)
     j = j.filter(

@@ -550,41 +550,31 @@ def unigram_logprob(
     filter of a training-data pipeline (documents full of corpus-rare
     tokens score high; boilerplate scores low).
 
-    Plan shape: one token explode feeding TWO consumers — the vocab
-    count (groupBy token, partial-combined: the exchange carries at
-    most |vocab| rows per partition, so hot stopwords never
-    concentrate) and the per-doc score join. The count-lookup join is
-    left to AQE — vocab-sized sides broadcast, and a tokenizer that
-    explodes the vocab past the threshold degrades to a shuffled hash
-    join on token instead of OOMing the driver; corpus total N is a
-    single-row broadcast. The final per-doc aggregate is the only
-    corpus-wide exchange.
+    Plan shape: one order-1 ``ngram_doc_counts`` table ``(id, w3, n)``
+    read ONCE — the vocab count is a window partitioned by token over
+    its doc-vocab-sized rows (one exchange; a token's partition holds
+    one row per document containing it, not one per occurrence), and
+    the corpus total N is the whitespace token count of the text
+    (``_ntok_expr``, the same count split yields) summed into a
+    single-row broadcast. The final per-doc aggregate of the
+    n-weighted NLL (``_per_doc_nll``) is the only other corpus-wide
+    exchange.
 
     Columns: ``(id, n_tokens, avg_neg_logprob)`` with the score
     rounded 6 for cross-engine hashing.
     """
-    toks = corpus.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.col(text_col), " ")).alias("tok"),
-    )
-    vocab = toks.groupBy("tok").agg(F.count("*").alias("n_tok"))
-    # total token mass from the token table, NOT sum(vocab.n_tok):
-    # identical value, but it keeps the vocab aggregate evaluated ONCE
-    # (an unpersisted vocab consumed by both the join and its own
-    # rollup would recompute the shingle scan + exchange twice)
-    total = toks.agg(F.count("*").alias("n_total"))
+    total = corpus.agg(F.sum(_ntok_expr(text_col)).alias("n_total"))
     scored = (
-        toks.join(vocab, "tok")
+        ngram_doc_counts(corpus, 1, id_col, text_col)
+        .withColumn("n_tok", F.sum("n").over(Window.partitionBy("w3")))
         .crossJoin(F.broadcast(total))
         .select(
             "id",
+            "n",
             (-F.log(F.col("n_tok") / F.col("n_total"))).alias("_nll"),
         )
     )
-    return scored.groupBy("id").agg(
-        F.count("*").alias("n_tokens"),
-        F.round(F.avg("_nll"), 6).alias("avg_neg_logprob"),
-    )
+    return _per_doc_nll(scored, "n_tokens")
 
 
 def _ntok_expr(text_col: str) -> "F.Column":
@@ -955,13 +945,13 @@ def kmv_vocab_sketch(
     task keeps only its local k smallest hashes before the shuffle —
     state per task is k rows per stratum, never the vocabulary.
     """
-    from .dedup import _widen
+    from ..parallelism import widen
 
     if k < 2:
         raise ValueError("k must be >= 2 (the estimator uses k-1)")
     w = Window.partitionBy("source").orderBy("h")
     hashes = (
-        _widen(docs).select(
+        widen(docs).select(
             F.col(strata_col).alias("source"),
             F.explode(F.split(F.col(text_col), " ")).alias("tok"),
         )
@@ -1077,9 +1067,9 @@ def unigram_divergence(
     global token table derives from it by a second combinable rollup;
     per-stratum totals and the one-row grand total broadcast back.
     """
-    from .dedup import _widen
+    from ..parallelism import widen
 
-    toks = _widen(docs).select(
+    toks = widen(docs).select(
         F.col(strata_col).alias("source"),
         F.explode(F.split(F.col(text_col), " ")).alias("tok"),
     )
@@ -1295,67 +1285,120 @@ def leakage_safe_split(
     )
 
 
-def bigram_doc_counts(
-    corpus: DataFrame, id_col: str = "id", text_col: str = "text"
+# the n-gram columns of an order-3 table: w3 is the scored token, w2
+# and w1 its predecessors; an order-k table keeps the last k of them
+_NGRAM_COLS = ("w1", "w2", "w3")
+
+
+def ngram_doc_counts(
+    corpus: DataFrame,
+    order: int = 3,
+    id_col: str = "id",
+    text_col: str = "text",
 ) -> DataFrame:
-    """Per-doc bigram-count table ``(id, w1, w2, n)`` — the shared
-    substrate of the bigram LM scorers (public builder form, used by
-    ``substrate.write_substrate`` to persist the fold once per corpus
-    version). Pairing is zip_with
-    over two slices of ONE hoisted split (`_t` projected first): the
-    earlier transform(sequence) form called element_at(split(text), i)
-    INSIDE the lambda, re-splitting the text per element — O(len^2)
-    per document (measured 4.8 -> 0.7 s for the stream alone at
-    sf0.1). explode_OUTER (+ the null filter) rather than plain
-    explode so Catalyst cannot push the generator's size()>0 predicate
-    below the projection and evaluate the pairing twice (the
-    dedup._sets_exploded lesson). The CASE guards the degenerate doc:
-    slice(_t, 2, -1) on a 1-token doc would be invalid under ANSI."""
-    bg = (
+    """Per-doc n-gram table ``(id, [w1,] [w2,] w3, n)`` — the one
+    substrate of the self-trained LM scorers (public builder form, used
+    by ``substrate.write_substrate`` to persist the fold once per
+    corpus version). One row per distinct (doc, token, predecessors):
+    ``w3`` runs over every token position, ``w2``/``w1`` are its one-
+    and two-back predecessors, NULL before the doc start; an order-k
+    table keeps the last k of ``w1, w2, w3``. Every lower order is a
+    sum over it: trigrams are the rows with non-null ``w1``, bigrams
+    the rows with non-null ``w2`` keyed ``(w2, w3)``, the unigram
+    vocab all rows keyed ``w3``, N is ``sum(n)``.
+
+    Plan: one hoisted split (``_t`` projected first, so the lambda
+    indexes an array instead of re-splitting the text per element —
+    O(len) per doc, not O(len^2)), one indexed transform whose lags are
+    CASE-guarded (an index before the doc start is an error under
+    ANSI), one explode partial-combining straight into the per-doc
+    count table — no position self-join. ``w3`` comes out non-nullable
+    (split never yields a NULL element), so the not-NULL filters the
+    model joins infer on it are pruned and the consumers of one model
+    table keep identical, reusable exchanges."""
+    if order not in (1, 2, 3):
+        raise ValueError(f"order must be 1, 2 or 3, got {order}")
+    cols = _NGRAM_COLS[-order:]
+    # x is the token at 0-based position i; w{3-k} lags it by k
+    fields = ", ".join(
+        [
+            f"CASE WHEN i >= {k} THEN _t[i - {k}] END AS w{3 - k}"
+            for k in range(order - 1, 0, -1)
+        ]
+        + ["x AS w3"]
+    )
+    grams = (
         corpus.select(
             F.col(id_col).alias("id"),
             F.split(F.col(text_col), " ").alias("_t"),
         )
         .select(
             "id",
-            F.explode_outer(
-                F.expr(
-                    "CASE WHEN size(_t) < 2"
-                    " THEN CAST(NULL AS array<struct<w1: string, w2: string>>)"
-                    " ELSE zip_with(slice(_t, 1, size(_t) - 1),"
-                    "               slice(_t, 2, size(_t) - 1),"
-                    " (a, b) -> struct(a AS w1, b AS w2)) END"
-                )
-            ).alias("_b"),
+            F.explode(
+                F.expr(f"transform(_t, (x, i) -> struct({fields}))")
+            ).alias("_g"),
         )
-        .filter(F.col("_b").isNotNull())
-        .select("id", F.col("_b.w1"), F.col("_b.w2"))
+        .select("id", *[F.col(f"_g.{c}") for c in cols])
     )
-    return bg.groupBy("id", "w1", "w2").agg(F.count("*").alias("n"))
+    return grams.groupBy("id", *cols).agg(F.count("*").alias("n"))
 
 
-def _bigram_counts(
+def _ngram_table(
     corpus: DataFrame,
+    order: int,
     id_col: str,
     text_col: str,
     counts: DataFrame | None = None,
 ) -> DataFrame:
-    """Session-persisted ``bigram_doc_counts`` (or the caller-supplied
-    precomputed table — substrate 'bigram_counts' — verbatim)."""
-    if counts is not None:
+    """A scorer's ``ngram_doc_counts`` table at its own ``order``:
+    built and session-persisted, or the caller's precomputed table
+    (substrate 'ngram_counts') — verbatim at the same order, collapsed
+    by one per-doc aggregate from a higher one."""
+    if counts is None:
+        return tracked_persist(
+            ngram_doc_counts(corpus, order, id_col, text_col)
+        )
+    have = sum(c in counts.columns for c in _NGRAM_COLS)
+    if have < order:
+        raise ValueError(
+            f"counts= is an order-{have} ngram_doc_counts table; this "
+            f"scorer needs order {order} or higher"
+        )
+    if have == order:
         return counts
-    return tracked_persist(bigram_doc_counts(corpus, id_col, text_col))
+    return counts.groupBy("id", *_NGRAM_COLS[-order:]).agg(
+        F.sum("n").alias("n")
+    )
 
 
-def _per_doc_nll(scored: DataFrame) -> DataFrame:
-    """(id, n, _nll) -> (id, n_bigrams, avg_neg_logprob): n-weighted
+def _per_doc_nll(scored: DataFrame, n_name: str) -> DataFrame:
+    """(id, n, _nll) -> (id, <n_name>, avg_neg_logprob): n-weighted
     mean NLL — same value as the per-instance mean, |doc-vocab|-sized
     input instead of corpus-sized."""
     return scored.groupBy("id").agg(
-        F.sum("n").cast("bigint").alias("n_bigrams"),
+        F.sum("n").cast("bigint").alias(n_name),
         F.round(F.sum(F.col("n") * F.col("_nll")) / F.sum("n"), 6).alias(
             "avg_neg_logprob"
         ),
+    )
+
+
+def _per_doc_lattice_nll(tg: DataFrame, types: DataFrame) -> DataFrame:
+    """Per-doc trigram mean of the per-TYPE lattice NLL ``types(w1, w2,
+    w3, _nll)`` (already qdec'd): ONE corpus-sized join on the natural
+    (w1, w2, w3) key, then the n-weighted sum exact on the decimal
+    lattice (dsum — partition-order independent) and one deterministic
+    rounding back to double. Columns: ``(id, n_trigrams,
+    avg_neg_logprob)``."""
+    from ..numerics import dsum, r6
+
+    scored = tg.join(types, ["w1", "w2", "w3"]).select("id", "n", "_nll")
+    return scored.groupBy("id").agg(
+        F.sum("n").cast("bigint").alias("n_trigrams"),
+        r6(
+            dsum(F.col("n") * F.col("_nll"))
+            / F.sum("n").cast("double")
+        ).alias("avg_neg_logprob"),
     )
 
 
@@ -1365,10 +1408,9 @@ def bigram_logprob(
     text_col: str = "text",
     add_k: int = 1,
     counts: DataFrame | None = None,
-    unigrams: DataFrame | None = None,
 ) -> DataFrame:
     """Bigram language-model scoring with add-k smoothing: train the
-    conditional model P(w2|w1) = (c(w1,w2)+k) / (c(w1,·)+k·V) on the
+    conditional model P(w3|w2) = (c(w2,w3)+k) / (c(w2,·)+k·V) on the
     corpus itself and score each document by its mean negative
     log-likelihood over bigrams — one order up from
     ``unigram_logprob`` (the CCNet-style perplexity filter's shape:
@@ -1379,36 +1421,23 @@ def bigram_logprob(
     scored (mirrored by the oracle). Columns: ``(id, n_bigrams,
     avg_neg_logprob)``, score rounded 6.
 
-    Scale shape: bigram assembly is a row-local higher-order transform
-    (no position self-join) that is EVALUATED ONCE — the corpus-sized
-    explode partial-combines straight into the persisted per-doc
-    bigram-count table ``(id, w1, w2, n)``, and the model counts
-    (c2 by summing over ids, c1 by summing c2 over w2) AND the
-    scoring join are all derived from that one table, so nothing
-    re-reads the raw text a second time (A/B at sf0.1: 5.5 -> ~2 s;
-    previously the un-persisted scoring stream re-ran the explode).
-    Count lookups are joins AQE sizes (broadcast under the threshold,
-    shuffled-hash above); the smoothing vocab size V is a one-row
-    broadcast. Per-doc scores aggregate the n-weighted NLL — same
-    value as the per-instance mean, |doc-vocab|-sized input instead
-    of corpus-sized.
+    Scale shape: everything derives from the ONE persisted order-2
+    ``ngram_doc_counts`` table (or ``counts=``, an order-2-or-higher
+    table): c2 sums its rows with a predecessor, c1 sums c2 over w3,
+    and the smoothing vocab size V counts its distinct w3 — nothing
+    re-reads the raw text. Count lookups are joins AQE sizes
+    (broadcast under the threshold, shuffled-hash above); V is a
+    one-row broadcast.
     """
-    dg = _bigram_counts(corpus, id_col, text_col, counts=counts)
-    c2 = dg.groupBy("w1", "w2").agg(F.sum("n").alias("n2"))
-    c1 = c2.groupBy("w1").agg(F.sum("n2").alias("n1"))
-    # ``unigrams`` passes the precomputed (tok, n) corpus vocabulary
-    # (substrate 'unigram_counts') so the smoothing V needs no second
-    # pass over the raw text; the distinct-token count is identical.
-    if unigrams is not None:
-        vsize = unigrams.agg(F.count("*").alias("v"))
-    else:
-        vsize = corpus.select(
-            F.explode(F.split(F.col(text_col), " ")).alias("tok")
-        ).agg(F.countDistinct("tok").alias("v"))
+    t = _ngram_table(corpus, 2, id_col, text_col, counts=counts)
+    dg = t.filter(F.col("w2").isNotNull())
+    c2 = dg.groupBy("w2", "w3").agg(F.sum("n").alias("n2"))
+    c1 = c2.groupBy("w2").agg(F.sum("n2").alias("n1"))
+    vsize = t.agg(F.countDistinct("w3").alias("v"))
     k = int(add_k)
     scored = (
-        dg.join(c2, ["w1", "w2"])
-        .join(c1, "w1")
+        dg.join(c2, ["w2", "w3"])
+        .join(c1, "w2")
         .crossJoin(F.broadcast(vsize))
         .select(
             "id",
@@ -1421,7 +1450,7 @@ def bigram_logprob(
             ).alias("_nll"),
         )
     )
-    return _per_doc_nll(scored)
+    return _per_doc_nll(scored, "n_bigrams")
 
 
 def kn_bigram_logprob(
@@ -1437,10 +1466,10 @@ def kn_bigram_logprob(
     backs the freed mass into the CONTINUATION unigram, so boilerplate
     that always follows one fixed context stops looking fluent):
 
-        P(w2|w1) = max(c(w1,w2) - d, 0)/c(w1,.)
-                   + lambda(w1) * Pcont(w2)
-        lambda(w1) = d * |{w2: c(w1,w2)>0}| / c(w1,.)
-        Pcont(w2)  = |{w1: c(w1,w2)>0}| / |bigram types|
+        P(w3|w2) = max(c(w2,w3) - d, 0)/c(w2,.)
+                   + lambda(w2) * Pcont(w3)
+        lambda(w2) = d * |{w3: c(w2,w3)>0}| / c(w2,.)
+        Pcont(w3)  = |{w2: c(w2,w3)>0}| / |bigram types|
 
     Scored on the training corpus itself, every bigram instance is
     seen, so no unseen-event branch is reachable (the oracle mirrors
@@ -1448,25 +1477,27 @@ def kn_bigram_logprob(
     ``bigram_logprob``: ``(id, n_bigrams, avg_neg_logprob)``, round 6,
     sub-2-token docs unscored.
 
-    Scale shape: everything derives from the ONE persisted per-doc
-    bigram-count table (the ``bigram_logprob`` substrate) — c2, c1,
-    the two continuation-type counts, and the type total are
-    progressively smaller aggregates of it; the scoring join is
-    AQE-sized and the type total is a one-row broadcast.
+    Scale shape: everything derives from the ONE persisted order-2
+    ``ngram_doc_counts`` table (or ``counts=``) — c2, c1, the two
+    continuation-type counts, and the type total are progressively
+    smaller aggregates of it; the scoring join is AQE-sized and the
+    type total is a one-row broadcast.
     """
     d = float(discount)
     if not (0.0 < d <= 1.0):
         raise ValueError(f"discount must be in (0, 1], got {discount}")
-    dg = _bigram_counts(corpus, id_col, text_col, counts=counts)
+    dg = _ngram_table(corpus, 2, id_col, text_col, counts=counts).filter(
+        F.col("w2").isNotNull()
+    )
     c2 = tracked_persist(
-        dg.groupBy("w1", "w2").agg(F.sum("n").alias("n2"))
+        dg.groupBy("w2", "w3").agg(F.sum("n").alias("n2"))
     )
-    c1 = c2.groupBy("w1").agg(
+    c1 = c2.groupBy("w2").agg(
         F.sum("n2").alias("n1"),
-        F.count("*").alias("nfol"),  # |{w2: c(w1,w2)>0}|
+        F.count("*").alias("nfol"),  # |{w3: c(w2,w3)>0}|
     )
-    nprec = c2.groupBy("w2").agg(
-        F.count("*").alias("nprec")  # |{w1: c(w1,w2)>0}|
+    nprec = c2.groupBy("w3").agg(
+        F.count("*").alias("nprec")  # |{w2: c(w2,w3)>0}|
     )
     types = c2.agg(F.count("*").alias("t"))
     p = (
@@ -1476,52 +1507,13 @@ def kn_bigram_logprob(
         * (F.col("nprec") / F.col("t").cast("double"))
     )
     scored = (
-        dg.join(c2, ["w1", "w2"])
-        .join(c1, "w1")
-        .join(nprec, "w2")
+        dg.join(c2, ["w2", "w3"])
+        .join(c1, "w2")
+        .join(nprec, "w3")
         .crossJoin(F.broadcast(types))
         .select("id", "n", (-F.log(p)).alias("_nll"))
     )
-    return _per_doc_nll(scored)
-
-
-def trigram_doc_counts(
-    corpus: DataFrame, id_col: str = "id", text_col: str = "text"
-) -> DataFrame:
-    """Per-doc trigram-count table ``(id, w1, w2, w3, n)`` — the
-    ``bigram_doc_counts`` recipe one order up: THREE slices of one
-    hoisted split zipped row-locally (no position self-join), the
-    explode partial-combining straight into the per-doc count table.
-    Docs under 3 tokens emit nothing (CASE-guarded, ANSI-safe)."""
-    tg = (
-        corpus.select(
-            F.col(id_col).alias("id"),
-            F.split(F.col(text_col), " ").alias("_t"),
-        )
-        .select(
-            "id",
-            F.explode_outer(
-                F.expr(
-                    "CASE WHEN size(_t) < 3"
-                    " THEN CAST(NULL AS"
-                    "   array<struct<w1: string, w2: string, w3: string>>)"
-                    " ELSE zip_with("
-                    "   slice(_t, 1, size(_t) - 2),"
-                    "   zip_with(slice(_t, 2, size(_t) - 2),"
-                    "            slice(_t, 3, size(_t) - 2),"
-                    "            (b, c) -> struct(b AS w2, c AS w3)),"
-                    "   (a, bc) ->"
-                    "     struct(a AS w1, bc.w2 AS w2, bc.w3 AS w3))"
-                    " END"
-                )
-            ).alias("_g"),
-        )
-        .filter(F.col("_g").isNotNull())
-        .select("id", F.col("_g.w1"), F.col("_g.w2"), F.col("_g.w3"))
-    )
-    return tg.groupBy("id", "w1", "w2", "w3").agg(
-        F.count("*").alias("n")
-    )
+    return _per_doc_nll(scored, "n_bigrams")
 
 
 def trigram_logprob(
@@ -1530,7 +1522,6 @@ def trigram_logprob(
     text_col: str = "text",
     lambdas: tuple[float, float, float] = (0.7, 0.2, 0.1),
     counts: DataFrame | None = None,
-    bigram_counts: DataFrame | None = None,
 ) -> DataFrame:
     """Interpolated trigram language-model scoring — the top of the
     CCNet/KenLM-style stack next to ``bigram_logprob`` (add-k) and
@@ -1556,89 +1547,49 @@ def trigram_logprob(
     rounding hands the mean back to double — a plain double SUM of
     -log values would be partition-order dependent in the last ulp.
 
-    Scale shape: the corpus collapses into THREE persisted/shared
-    substrates — the per-doc trigram table (built here, one row-local
-    zip + one partial-combined exchange), the per-doc bigram table
-    (``bigram_doc_counts``, session-persisted and SHARED with the
-    bigram scorers via ``counts=``/substrate), and the unigram vocab
-    (one more partial-combined aggregate of the bigram table's w1
-    column plus the per-doc tail correction — see below). Model
-    tables (c3, c2ctx, c2, c1, unigram) are progressively smaller
-    aggregates; the scoring joins are AQE-sized; N is a one-row
-    broadcast. Nothing re-reads raw text beyond the two doc-count
-    builders.
+    Scale shape: the corpus collapses into ONE persisted order-3
+    ``ngram_doc_counts`` table (or ``counts=``). Every model table is
+    a progressively smaller aggregate of it: c3 and its context
+    marginal from the rows with a full context, c2/c1 from the rows
+    with a predecessor (so each doc's first bigram counts), the
+    unigram vocab and N from all rows. The per-type NLL is assembled
+    from model tables only (type/vocab-sized joins AQE sizes), and the
+    corpus-sized per-doc table joins it ONCE on its natural (w1, w2,
+    w3) key.
     """
-    from ..numerics import dsum, qdec, r6
+    from ..numerics import qdec
 
     l3, l2, l1 = (float(x) for x in lambdas)
     if not all(x >= 0 for x in (l3, l2, l1)) or (l3 + l2 + l1) <= 0:
         raise ValueError(f"lambdas must be non-negative, got {lambdas}")
 
-    tg = (
-        counts
-        if counts is not None
-        else tracked_persist(trigram_doc_counts(corpus, id_col, text_col))
-    )
-    bgdoc = _bigram_counts(corpus, id_col, text_col, counts=bigram_counts)
-    # trigram model: c3 and its context marginal
+    t = _ngram_table(corpus, 3, id_col, text_col, counts=counts)
+    tg = t.filter(F.col("w1").isNotNull())
     c3 = tg.groupBy("w1", "w2", "w3").agg(F.sum("n").alias("n3"))
     c2ctx = c3.groupBy("w1", "w2").agg(F.sum("n3").alias("nctx3"))
-    # bigram model over (w2, w3): counts from the FULL bigram table
-    # (the trigram table misses each doc's first bigram)
-    c2 = bgdoc.groupBy("w1", "w2").agg(F.sum("n").alias("n2"))
-    c1 = c2.groupBy("w1").agg(F.sum("n2").alias("n1"))
-    # unigram model: token counts from one explode (the vocab shape
-    # of unigram_logprob); N is its one-row rollup
-    toks = corpus.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.col(text_col), " ")).alias("tok"),
+    c2 = (
+        t.filter(F.col("w2").isNotNull())
+        .groupBy("w2", "w3")
+        .agg(F.sum("n").alias("n2"))
     )
-    uni = tracked_persist(
-        toks.groupBy("tok").agg(F.count("*").alias("nu"))
-    )
+    c1 = c2.groupBy("w2").agg(F.sum("n2").alias("n1"))
+    uni = t.groupBy("w3").agg(F.sum("n").alias("nu"))
     total = uni.agg(F.sum("nu").alias("n_total"))
     p = (
         F.lit(l3) * (F.col("n3") / F.col("nctx3").cast("double"))
         + F.lit(l2) * (F.col("n2") / F.col("n1").cast("double"))
         + F.lit(l1) * (F.col("nu") / F.col("n_total").cast("double"))
     )
-    # Round-10 restructure (guide §3 / §8): the per-type NLL is a
-    # function of MODEL tables only, so assemble it on the trigram-
-    # TYPE side (five type/vocab-sized joins) and join the corpus-
-    # sized per-doc table ONCE on its natural (w1, w2, w3) key —
-    # previously tg itself rode all five joins on five DIFFERENT keys,
-    # which at model sizes past the broadcast threshold means five
-    # corpus-sized shuffles instead of one.  Values are unchanged: the
-    # same counts attach to each type, the NLL expression is the same
-    # IEEE double expression, and every model join is key-unique so
-    # cardinalities are preserved; the per-doc sum rides the decimal
-    # lattice (dsum), so it is partition-order independent by
-    # construction.
+    # every model join is key-unique, so cardinalities are preserved
     types = (
         c3.join(c2ctx, ["w1", "w2"])
-        .join(
-            c2.select(
-                F.col("w1").alias("w2"),
-                F.col("w2").alias("w3"),
-                "n2",
-            ),
-            ["w2", "w3"],
-        )
-        .join(c1.select(F.col("w1").alias("w2"), "n1"), "w2")
-        .join(uni.select(F.col("tok").alias("w3"), "nu"), "w3")
+        .join(c2, ["w2", "w3"])
+        .join(c1, "w2")
+        .join(uni, "w3")
         .crossJoin(F.broadcast(total))
         .select("w1", "w2", "w3", qdec(-F.log(p)).alias("_nll"))
     )
-    scored = tg.join(types, ["w1", "w2", "w3"]).select(
-        "id", "n", "_nll"
-    )
-    return scored.groupBy("id").agg(
-        F.sum("n").cast("bigint").alias("n_trigrams"),
-        r6(
-            dsum(F.col("n") * F.col("_nll"))
-            / F.sum("n").cast("double")
-        ).alias("avg_neg_logprob"),
-    )
+    return _per_doc_lattice_nll(tg, types)
 
 
 def kn_trigram_logprob(
@@ -1671,20 +1622,20 @@ def kn_trigram_logprob(
     ``(id, n_trigrams, avg_neg_logprob)``, sub-3-token docs unscored,
     qdec-lattice per-type NLL + exact decimal per-doc weighted mean.
 
-    Scale shape: ONE persisted per-doc trigram table (shared with
-    ``trigram_logprob`` via ``counts=``); c3, cctx, and all four
-    continuation tables are progressively smaller aggregates of it;
-    scoring joins are AQE-sized; T is a one-row broadcast.
+    Scale shape: the trigram rows of ONE persisted order-3
+    ``ngram_doc_counts`` table (or ``counts=``, shared with
+    ``trigram_logprob``); c3, cctx, and all four continuation tables
+    are progressively smaller aggregates of it; the per-type NLL comes
+    from model tables only and joins the per-doc table once; T is a
+    one-row broadcast.
     """
-    from ..numerics import dsum, qdec, r6
+    from ..numerics import qdec
 
     d = float(discount)
     if not (0.0 < d <= 1.0):
         raise ValueError(f"discount must be in (0, 1], got {discount}")
-    tg = (
-        counts
-        if counts is not None
-        else tracked_persist(trigram_doc_counts(corpus, id_col, text_col))
+    tg = _ngram_table(corpus, 3, id_col, text_col, counts=counts).filter(
+        F.col("w1").isNotNull()
     )
     c3 = tracked_persist(
         tg.groupBy("w1", "w2", "w3").agg(F.sum("n").alias("n3"))
@@ -1714,10 +1665,6 @@ def kn_trigram_logprob(
         + ((F.lit(d) * F.col("nfol3")) / F.col("nctx").cast("double"))
         * p2
     )
-    # same round-10 restructure as trigram_logprob: per-type NLL from
-    # model tables only (c3 IS the type table), then ONE corpus-sized
-    # join on (w1, w2, w3) — four corpus-keyed joins removed; values
-    # identical (key-unique joins, same expression, dsum lattice)
     types = (
         c3.join(cctx, ["w1", "w2"])
         .join(ctab, ["w2", "w3"])
@@ -1726,16 +1673,7 @@ def kn_trigram_logprob(
         .crossJoin(F.broadcast(ttot))
         .select("w1", "w2", "w3", qdec(-F.log(p)).alias("_nll"))
     )
-    scored = tg.join(types, ["w1", "w2", "w3"]).select(
-        "id", "n", "_nll"
-    )
-    return scored.groupBy("id").agg(
-        F.sum("n").cast("bigint").alias("n_trigrams"),
-        r6(
-            dsum(F.col("n") * F.col("_nll"))
-            / F.sum("n").cast("double")
-        ).alias("avg_neg_logprob"),
-    )
+    return _per_doc_lattice_nll(tg, types)
 
 
 def quality_blend(

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..cache import scoped_release, tracked_persist
+from ..parallelism import widen
 
 # minhash parameters (documented constants — change = new signature space)
 SHINGLE_K = 8
@@ -66,16 +67,6 @@ _IDX_BUCKET_HEX = 1
 def _hash32(col):
     """Shared cross-engine 32-bit hash: first 8 hex chars of md5."""
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
-
-
-def _widen(df: DataFrame) -> DataFrame:
-    """Restore task parallelism ahead of a heavy per-row projection
-    (md5-fold signatures, shingle arrays, gram tables) — the shared
-    ``parallelism.widen`` helper; kept under its module-local name for
-    this module's many call sites."""
-    from ..parallelism import widen
-
-    return widen(df)
 
 
 def exact_dedup(corpus: DataFrame, id_col: str = "id", text_col: str = "text") -> DataFrame:
@@ -126,7 +117,7 @@ def shingles(
         else shingle_str_array_expr(text_col)
     )
     return (
-        _widen(corpus)
+        widen(corpus)
         .select(
             F.col(id_col).alias("id"), F.explode(arr).alias("shingle")
         )
@@ -203,14 +194,14 @@ def minhash_signatures(
 ) -> DataFrame:
     """Per-doc minhash signature: one row per doc, h0..h{N-1} columns.
     The signature itself is a zero-shuffle projection (see
-    ``minhash_sig_expr``); ``_widen`` may prepend one document-sized
+    ``minhash_sig_expr``); ``widen`` may prepend one document-sized
     round-robin exchange when the input scan is narrower than the
     core count (never on wide or streaming inputs). Two chained
     selects on purpose: the struct is an expensive expression
     referenced once per field, and CollapseProject declines to merge
     projects that would duplicate a non-cheap expression — so the fold
     runs once per row, not once per extracted field."""
-    staged = _widen(corpus).select(
+    staged = widen(corpus).select(
         F.col(id_col).alias("id"), minhash_sig_expr(text_col).alias("_sig")
     )
     return staged.select(
@@ -374,7 +365,7 @@ def minhash_lsh_pairs(
         # ~+1 s/query at sf0.1 where the fold itself costs 0.25 s;
         # at index scale the substrate path passes verify_sets anyway)
         sets_ = tracked_persist(
-            _widen(corpus).select(
+            widen(corpus).select(
                 F.col(id_col).alias("id"),
                 F.array_sort(
                     shingle_str_array_expr(text_col)
@@ -461,7 +452,7 @@ def _write_minhash_index(
             f"{path}/bands"
         )
         docs = sig.join(
-            _widen(corpus).select(
+            widen(corpus).select(
                 F.col(id_col).alias("id"),
                 F.array_sort(shingle_str_array_expr(text_col)).alias(
                     "shingle_set"
@@ -543,7 +534,7 @@ def ingest_near_dups(
     # so both folds run at full task width and the persisted layout
     # is already wide.
     bt = tracked_persist(
-        _widen(batch).select(F.col(id_col), F.col(text_col))
+        widen(batch).select(F.col(id_col), F.col(text_col))
     )
     sig_n = tracked_persist(
         minhash_signatures(bt, id_col=id_col, text_col=text_col)
@@ -905,7 +896,7 @@ def ngram_doc_sets(
     is the deliberate optimum, not an accident."""
     if set_expr is None:
         set_expr = shingle_array_expr
-    return _widen(corpus).select(
+    return widen(corpus).select(
         F.col(id_col).alias("id"),
         F.array_sort(set_expr(text_col)).alias("_fs"),
     ).withColumn("n_sh", F.size("_fs").cast("bigint"))
@@ -922,7 +913,7 @@ def _sets_exploded(sets: DataFrame) -> DataFrame:
     plain ``explode(_fs)`` makes Catalyst push its implicit
     ``size(_fs) > 0`` pruning predicate BELOW the sets projection,
     re-inlining the entire md5 shingle fold into a Filter that runs a
-    second time per row — and on the narrow pre-_widen partitions
+    second time per row — and on the narrow pre-widen partitions
     (measured 8x on the containment path: 6.1 -> 0.8 s at sf0.1 when
     the sets table is not materialized). explode_outer generates no
     pushable predicate; the null rows of empty sets drop in a cheap
@@ -1712,7 +1703,7 @@ def contamination_report(
     # ``pairs`` leaves the coverage pass as the corpus's only reader,
     # so the corpus persist is skipped there (it would only hold cache
     # memory).
-    corpus_pt = _widen(corpus).select(F.col(id_col), F.col(text_col))
+    corpus_pt = widen(corpus).select(F.col(id_col), F.col(text_col))
     if pairs is None:
         corpus_pt = tracked_persist(corpus_pt)
     splits_pt = tracked_persist(
@@ -1831,7 +1822,7 @@ def exact_substring_spans(
         """
     )
     src = corpus  # verify joins read (id, text) only — no widen needed
-    corpus = _widen(corpus)
+    corpus = widen(corpus)
     g = (
         corpus.filter(F.length(text_col) >= L)
         .select(F.col(id_col).alias("id"), F.posexplode(arr).alias("pos0", "gram"))
@@ -2133,7 +2124,7 @@ def ngram_jaccard_prefix_pairs(
     )
     # posexplode_OUTER + isnotnull for the same reason _sets_exploded
     # documents: plain posexplode pushes its size()>0 pruning predicate
-    # below the projection, re-inlining the md5 fold into a pre-_widen
+    # below the projection, re-inlining the md5 fold into a pre-widen
     # Filter (second evaluation on narrow partitions)
     prefix = sets_.select(
         "id",
@@ -2655,7 +2646,7 @@ def bloom_decontaminate(
     # a broadcast side, so shingle co-location would be a wasted
     # corpus-sized shuffle here
     probe = positions(
-        _widen(corpus).select(
+        widen(corpus).select(
             F.col(id_col).alias("id"),
             F.explode(shingle_array_expr(text_col)).alias("shingle"),
         )
@@ -2731,7 +2722,7 @@ def rabin_chunks(
         "c - element_at(_cuts, i + 1) AS length))"
     )
     return (
-        _widen(corpus)
+        widen(corpus)
         .select(
             F.col(id_col).alias("id"),
             F.col(text_col).alias("_t"),
@@ -2831,7 +2822,7 @@ def repeated_ngrams(
     subset.
     """
     ln = int(length)
-    grams = _widen(corpus).select(
+    grams = widen(corpus).select(
         F.col(id_col).alias("id"),
         F.explode(
             F.expr(
@@ -2987,7 +2978,7 @@ def winnow_fingerprints(
           j -> array_min(slice(_g, CAST(j AS INT), {int(w)}))))"""
     )
     return (
-        _widen(corpus.filter(F.length(text_col) >= int(k)))
+        widen(corpus.filter(F.length(text_col) >= int(k)))
         .select(F.col(id_col).alias("id"), codes.alias("_cs"))
         .select("id", grams.alias("_g"))
         .select("id", F.explode(sel).alias("fp"))

@@ -3,8 +3,9 @@ ONCE per corpus version, serve every later query from parquet.
 
 The dedup/LM families each derive from a small set of per-doc tables
 that are pure functions of the corpus text — char-shingle sets,
-word-n-gram sets, minhash signatures, bigram counts, the token
-vocabulary. One-shot operators rebuild them per session (behind
+word-n-gram sets, minhash signatures, and the per-doc n-gram counts
+every self-trained LM scorer sums its model tables from. One-shot
+operators rebuild them per session (behind
 ``cache.tracked_persist``), which is right for exploratory use; a
 production curation pipeline instead materializes them next to the
 corpus and runs every day-2 query off the materialized form — the
@@ -20,13 +21,15 @@ Contract:
   tests/test_substrate.py).
 - ``read_substrate(spark, path, name)`` returns the parquet scan; the
   consumers accept it via their ``sets= / sig= / verify_sets= /
-  counts= / unigrams=`` parameters and then never touch the raw text.
+  counts=`` parameters and then never touch the raw text.
+- Every substrate is per-doc (rows keyed by doc id), so
+  ``append_to_substrate`` admits a batch into any of them.
 
 Scale shape: every substrate is one partial-combined pass over the
 corpus (or a pure projection) and writes doc-sized or vocab-sized
 rows; reads are plain columnar scans that prune to the columns each
 consumer needs. At 100 TB this converts the per-query corpus fold —
-the measured floor of the ngram/minhash/bigram bench rows — into a
+the measured floor of the ngram/minhash/LM bench rows — into a
 once-per-corpus-version batch cost, which is how curation pipelines
 actually amortize (Dolma, RefinedWeb, CCNet all checkpoint shards of
 exactly these tables between passes).
@@ -59,28 +62,19 @@ def _build_minhash_sigs(corpus, id_col, text_col):
 
 
 def _build_minhash_verify_sets(corpus, id_col, text_col):
-    from .dedup import _widen, shingle_str_array_expr
+    from ..parallelism import widen
+    from .dedup import shingle_str_array_expr
 
-    return _widen(corpus).select(
+    return widen(corpus).select(
         F.col(id_col).alias("id"),
         F.array_sort(shingle_str_array_expr(text_col)).alias("_ss"),
     )
 
 
-def _build_bigram_counts(corpus, id_col, text_col):
-    from .corpus import bigram_doc_counts
+def _build_ngram_counts(corpus, id_col, text_col):
+    from .corpus import ngram_doc_counts
 
-    return bigram_doc_counts(corpus, id_col, text_col)
-
-
-def _build_unigram_counts(corpus, id_col, text_col):
-    return (
-        corpus.select(
-            F.explode(F.split(F.col(text_col), " ")).alias("tok")
-        )
-        .groupBy("tok")
-        .agg(F.count("*").alias("n"))
-    )
+    return ngram_doc_counts(corpus, 3, id_col, text_col)
 
 
 # name -> builder; each builder's output schema is the exact input
@@ -90,9 +84,23 @@ SUBSTRATES = {
     "word_ngram_sets": _build_word_ngram_sets,  # ngram_containment_pairs sets=
     "minhash_sigs": _build_minhash_sigs,  # minhash_lsh_pairs sig=
     "minhash_verify_sets": _build_minhash_verify_sets,  # ... verify_sets=
-    "bigram_counts": _build_bigram_counts,  # bigram/kn_bigram counts=
-    "unigram_counts": _build_unigram_counts,  # bigram_logprob unigrams=
+    # order 3: every LM scorer's counts= (unigram..trigram orders are
+    # sums over it)
+    "ngram_counts": _build_ngram_counts,
 }
+
+
+def _materialize(corpus, path, which, id_col, text_col, mode):
+    names = list(SUBSTRATES) if which is None else list(which)
+    unknown = [n for n in names if n not in SUBSTRATES]
+    if unknown:
+        raise ValueError(
+            f"unknown substrates {unknown}; available: {sorted(SUBSTRATES)}"
+        )
+    for name in names:
+        df = SUBSTRATES[name](corpus, id_col, text_col)
+        df.write.mode(mode).parquet(f"{path}/{name}")
+    return names
 
 
 def write_substrate(
@@ -107,16 +115,7 @@ def write_substrate(
     semantics per substrate directory — rewriting one name never
     touches the others, so incremental corpus-version bumps can
     refresh only the folds whose definition changed."""
-    names = list(SUBSTRATES) if which is None else list(which)
-    unknown = [n for n in names if n not in SUBSTRATES]
-    if unknown:
-        raise ValueError(
-            f"unknown substrates {unknown}; available: {sorted(SUBSTRATES)}"
-        )
-    for name in names:
-        df = SUBSTRATES[name](corpus, id_col, text_col)
-        df.write.mode("overwrite").parquet(f"{path}/{name}")
-    return names
+    return _materialize(corpus, path, which, id_col, text_col, "overwrite")
 
 
 def append_to_substrate(
@@ -126,40 +125,12 @@ def append_to_substrate(
     id_col: str = "id",
     text_col: str = "text",
 ) -> list[str]:
-    """Admit an ingest batch into the materialized substrates — the
-    day-2 maintenance step after the batch survives dedup (mirrors
-    ``append_to_minhash_index``). Per-doc substrates (sets,
-    signatures, bigram counts) append cleanly because their rows are
-    keyed by doc id; ids must not already exist (the writer's
-    unique-id contract).
-
-    ``unigram_counts`` is deliberately NOT appendable: it is a
-    corpus-LEVEL aggregate (appending per-batch counts would leave
-    duplicate ``tok`` rows and silently inflate the vocabulary
-    consumers count). Rebuild it with
-    ``write_substrate(corpus, path, which=['unigram_counts'])`` on
-    the admitted corpus, or maintain it transactionally outside this
-    layer."""
-    names = (
-        [n for n in SUBSTRATES if n != "unigram_counts"]
-        if which is None
-        else list(which)
-    )
-    unknown = [n for n in names if n not in SUBSTRATES]
-    if unknown:
-        raise ValueError(
-            f"unknown substrates {unknown}; available: {sorted(SUBSTRATES)}"
-        )
-    if "unigram_counts" in names:
-        raise ValueError(
-            "unigram_counts is a corpus-level aggregate and cannot be "
-            "appended per batch; rebuild it with write_substrate(..., "
-            "which=['unigram_counts'])"
-        )
-    for name in names:
-        df = SUBSTRATES[name](batch, id_col, text_col)
-        df.write.mode("append").parquet(f"{path}/{name}")
-    return names
+    """Admit an ingest batch into the materialized substrates (default:
+    all) — the day-2 maintenance step after the batch survives dedup
+    (mirrors ``append_to_minhash_index``). Every substrate is per-doc,
+    keyed by doc id, so the batch's rows append cleanly; ids must not
+    already exist (the writer's unique-id contract)."""
+    return _materialize(batch, path, which, id_col, text_col, "append")
 
 
 def read_substrate(spark: SparkSession, path: str, name: str) -> DataFrame:

@@ -402,7 +402,7 @@ def test_cdc_randomized_against_python_reference(spark):
 def test_new_operator_plan_shapes(spark):
     """Pin the claimed plan shapes: split is a pure projection, the
     funnel's only exchange is its single-row reduce, unigram stays at
-    its minimal five (vocab agg, token join side, total broadcast +
+    its minimal five (n-gram table agg, vocab window, total broadcast +
     its 1-row reduce, per-doc agg) — and none of them touch Python."""
     from gpd_lite_toolbox_spark.text.corpus import (
         split_corpus,

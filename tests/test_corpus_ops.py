@@ -313,3 +313,56 @@ def test_mixture_plan_closed_form(spark):
         mixture_plan(df, {"a": 0}, 64)
     with _pytest.raises(ValueError):
         mixture_plan(df, {"a": 1}, 0)
+
+
+_TOKENIZE = {"split", "explode", "explode_outer", "posexplode"}
+_LM_SCORERS = (
+    "unigram_logprob",
+    "bigram_logprob",
+    "kn_bigram_logprob",
+    "trigram_logprob",
+    "kn_trigram_logprob",
+)
+
+
+def _tokenize_calls(fn) -> list[str]:
+    """Names of the split/explode calls in a function body, from
+    Python calls and from SQL strings (``F.expr("explode(...)")``)."""
+    import ast
+
+    doc = fn.body[0].value if ast.get_docstring(fn) is not None else None
+    found = []
+    for node in ast.walk(fn):
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(
+                f, "id", None
+            )
+            if name in _TOKENIZE:
+                found.append(name)
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            if node is not doc and any(
+                f"{t}(" in node.value for t in _TOKENIZE
+            ):
+                found.append(node.value)
+    return found
+
+
+def test_only_ngram_doc_counts_tokenizes_for_the_lm_family():
+    """The LM scorers sum their model tables from ngram_doc_counts;
+    a split or explode in a scorer body is a second text fold."""
+    import ast
+    from pathlib import Path
+
+    import gpd_lite_toolbox_spark.text.corpus as C
+
+    tree = ast.parse(Path(C.__file__).read_text(encoding="utf-8"))
+    fns = {
+        n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)
+    }
+    assert _tokenize_calls(fns["ngram_doc_counts"])  # the guard sees one
+    assert {
+        name: _tokenize_calls(fns[name])
+        for name in _LM_SCORERS
+        if _tokenize_calls(fns[name])
+    } == {}

@@ -283,7 +283,7 @@ def test_round6_ops_empty_inputs(spark, tmp_path):
     # substrate of an empty corpus: writes commit, reads are empty,
     # consumers produce empty results (not errors)
     path = str(tmp_path / "sub")
-    write_substrate(corpus, path, which=["ngram_sets", "bigram_counts"])
+    write_substrate(corpus, path, which=["ngram_sets", "ngram_counts"])
     sets = read_substrate(spark, path, "ngram_sets")
     assert sets.count() == 0
     from gpd_lite_toolbox_spark.text.dedup import ngram_jaccard_pairs

@@ -242,21 +242,21 @@ def test_bucket_cap_suppresses_degenerate_bucket(spark):
 
 
 def test_widen_semantics(spark, tmp_path):
-    """_widen restores parallelism on narrow batch inputs, leaves
+    """widen restores parallelism on narrow batch inputs, leaves
     already-wide inputs untouched, and passes streaming frames
     through (repartition before a stateful op would be illegal)."""
-    from gpd_lite_toolbox_spark.text.dedup import _widen
+    from gpd_lite_toolbox_spark.parallelism import widen
 
     width = spark.sparkContext.defaultParallelism
     narrow = spark.createDataFrame([(1, "x")], "id long, text string").coalesce(1)
-    assert _widen(narrow).rdd.getNumPartitions() == width
+    assert widen(narrow).rdd.getNumPartitions() == width
 
     wide = spark.range(1000).repartition(width + 4)
-    assert _widen(wide) is wide
+    assert widen(wide) is wide
 
     d = str(tmp_path / "widen_stream")
     spark.range(10).selectExpr("id", "CAST(id AS STRING) AS text").write.mode(
         "overwrite"
     ).parquet(d)
     stream = spark.readStream.schema("id long, text string").parquet(d)
-    assert _widen(stream) is stream
+    assert widen(stream) is stream

@@ -94,7 +94,7 @@ def test_contamination_report_structure(spark, sf_dir):
 
 def test_trigram_logprob_counts_substrate_used(spark, sf_dir):
     from gpd_lite_toolbox_spark.text.corpus import (
-        trigram_doc_counts,
+        ngram_doc_counts,
         trigram_logprob,
     )
 
@@ -102,11 +102,11 @@ def test_trigram_logprob_counts_substrate_used(spark, sf_dir):
         F.col("id") % 7 == 0
     )
     base = trigram_logprob(corpus)
-    same = trigram_logprob(corpus, counts=trigram_doc_counts(corpus))
+    same = trigram_logprob(corpus, counts=ngram_doc_counts(corpus))
     assert _rows(base) == _rows(same)
     # a deliberately different substrate must change the output —
     # proof the parameter is consumed, not recomputed and ignored
-    half = trigram_doc_counts(corpus.filter(F.col("id") % 14 == 0))
+    half = ngram_doc_counts(corpus.filter(F.col("id") % 14 == 0))
     other = trigram_logprob(corpus, counts=half)
     assert _rows(other) != _rows(base)
 

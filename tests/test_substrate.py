@@ -87,27 +87,52 @@ def test_minhash_day2_matches_and_skips_text(spark, corpus, sub_path):
     assert _rows(day1) == _rows(day2)
 
 
-def test_bigram_scorers_day2_match_and_skip_text(spark, corpus, sub_path):
+def test_lm_scorers_day2_match_and_skip_text(spark, corpus, sub_path):
+    """All four counts= scorers run off the one order-3 ngram_counts
+    substrate (the bigram pair collapses it to order 2) with an EMPTY
+    corpus, row-identical to the one-shot build."""
     from gpd_lite_toolbox_spark.text.corpus import (
         bigram_logprob,
         kn_bigram_logprob,
+        kn_trigram_logprob,
+        trigram_logprob,
     )
 
-    counts = read_substrate(spark, sub_path, "bigram_counts")
-    unigrams = read_substrate(spark, sub_path, "unigram_counts")
-    assert _rows(bigram_logprob(corpus)) == _rows(
-        bigram_logprob(_dummy(spark), counts=counts, unigrams=unigrams)
+    counts = read_substrate(spark, sub_path, "ngram_counts")
+    for scorer in (
+        bigram_logprob,
+        kn_bigram_logprob,
+        trigram_logprob,
+        kn_trigram_logprob,
+    ):
+        assert _rows(scorer(corpus)) == _rows(
+            scorer(_dummy(spark), counts=counts)
+        ), scorer.__name__
+
+
+def test_counts_of_lower_order_is_rejected(spark, corpus):
+    from gpd_lite_toolbox_spark.text.corpus import (
+        bigram_logprob,
+        kn_trigram_logprob,
+        ngram_doc_counts,
+        trigram_logprob,
     )
-    assert _rows(kn_bigram_logprob(corpus)) == _rows(
-        kn_bigram_logprob(_dummy(spark), counts=counts)
-    )
+
+    with pytest.raises(ValueError, match="order-2"):
+        trigram_logprob(corpus, counts=ngram_doc_counts(corpus, order=2))
+    with pytest.raises(ValueError, match="order-2"):
+        kn_trigram_logprob(corpus, counts=ngram_doc_counts(corpus, order=2))
+    with pytest.raises(ValueError, match="order-1"):
+        bigram_logprob(corpus, counts=ngram_doc_counts(corpus, order=1))
+    with pytest.raises(ValueError, match="order must be"):
+        ngram_doc_counts(corpus, order=4)
 
 
 def test_partial_rewrite_and_unknown_names(spark, corpus, sub_path, tmp_path):
     # rewriting ONE substrate leaves the others intact
-    n0 = read_substrate(spark, sub_path, "unigram_counts").count()
-    write_substrate(corpus, sub_path, which=["bigram_counts"])
-    assert read_substrate(spark, sub_path, "unigram_counts").count() == n0
+    n0 = read_substrate(spark, sub_path, "ngram_sets").count()
+    write_substrate(corpus, sub_path, which=["ngram_counts"])
+    assert read_substrate(spark, sub_path, "ngram_sets").count() == n0
     with pytest.raises(ValueError, match="unknown substrate"):
         write_substrate(corpus, str(tmp_path), which=["nope"])
     with pytest.raises(ValueError, match="unknown substrate"):
@@ -148,13 +173,31 @@ def test_append_then_day2_equals_full_rebuild(spark, corpus, tmp_path):
     )
 
 
-def test_append_refuses_unigram_counts(spark, corpus, tmp_path):
+def test_append_ngram_counts_scores_equal_full_rebuild(
+    spark, corpus, tmp_path
+):
+    """ngram_counts is per-doc, so an appended batch leaves the same
+    table a full rebuild writes: the LM scorers fed from either agree
+    row for row."""
+    from gpd_lite_toolbox_spark.text.corpus import (
+        bigram_logprob,
+        trigram_logprob,
+    )
     from gpd_lite_toolbox_spark.text.substrate import append_to_substrate
 
-    with pytest.raises(ValueError, match="corpus-level"):
-        append_to_substrate(
-            corpus, str(tmp_path), which=["unigram_counts"]
-        )
-    # default 'all' silently EXCLUDES the non-appendable aggregate
-    names = append_to_substrate(corpus.limit(0), str(tmp_path / "x"))
-    assert "unigram_counts" not in names and "ngram_sets" in names
+    base = corpus.filter(F.col("id") % 7 != 0)
+    batch = corpus.filter(F.col("id") % 7 == 0)
+    inc = str(tmp_path / "inc")
+    write_substrate(base, inc, which=["ngram_counts"])
+    assert append_to_substrate(batch, inc, which=["ngram_counts"]) == [
+        "ngram_counts"
+    ]
+    full = str(tmp_path / "full")
+    write_substrate(corpus, full, which=["ngram_counts"])
+    d = _dummy(spark)
+    for scorer in (bigram_logprob, trigram_logprob):
+        assert _rows(
+            scorer(d, counts=read_substrate(spark, inc, "ngram_counts"))
+        ) == _rows(
+            scorer(d, counts=read_substrate(spark, full, "ngram_counts"))
+        ), scorer.__name__
