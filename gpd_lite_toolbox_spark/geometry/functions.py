@@ -146,22 +146,6 @@ def st_contains_xy(geom: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-@F.pandas_udf(T.BinaryType())
-def st_buffer_mitre(geom: pd.Series, tol: pd.Series) -> pd.Series:
-    """Mitre/square buffer — exact for axis-aligned rectangles (bbox
-    expansion), bbox-expansion approximation otherwise. The reference's
-    round shapely buffers (``core.py:158``) are used only as a pairing
-    tolerance, for which the mitre variant is the scale-friendly choice.
-    """
-    out = []
-    for g, t in zip(geom, tol):
-        # bbox over ALL parts (a first-ring shortcut would drop every
-        # other part of a MultiPolygon), expanded by the tolerance
-        x0, y0, x1, y1 = K.geom_bounds(W.decode(g))
-        out.append(W.rect_wkb(x0 - t, y0 - t, x1 + t, y1 + t))
-    return pd.Series(out)
-
-
 def st_buffer_round(dist: float, quad_segs: int = 8, concave: str = "raise"):
     """TRUE round buffer (reference core.py:158 ``buffer(tol)``
     semantics) as an Arrow UDF factory: Points grow inscribed circles,
@@ -171,8 +155,8 @@ def st_buffer_round(dist: float, quad_segs: int = 8, concave: str = "raise"):
     Concave shells are where general offsetting needs a full overlay;
     per the engine's no-silent-approximation rule the default RAISES
     for them. ``concave="hull"`` opts into buffering the convex hull
-    (a documented over-approximation); st_buffer_mitre remains the
-    bbox-style pairing tolerance."""
+    (a documented over-approximation); pair statistics take a
+    tolerance of their own (``st_pair_stats``)."""
     from . import kernels as K
 
     @F.pandas_udf(T.BinaryType())
@@ -239,8 +223,8 @@ def st_pair_stats(
     shared boundaries and corner contact. Buffered rows (a nonzero
     tolerance) mitre-offset the CONVEX shells and clip those — exact
     for convex parts; concave shells and holes of *buffered* inputs
-    are approximated by their shells (round buffers are out of scope,
-    see st_buffer_mitre). The native bbox-column fast path in
+    are approximated by their shells (round buffers are
+    ``st_buffer_round``'s job). The native bbox-column fast path in
     operators/joins.py is byte-equal to this kernel for axis-aligned
     rectangles (differential-tested both ways).
     """

@@ -519,20 +519,21 @@ def run_streaming_ingest_near_dups(
     with scoped_release():
         ingest_near_dups(
             spark, index_path, empty, threshold, id_col, text_col
-        ).write.mode("append").parquet(out_dir)
+        ).write.parquet(f"{out_dir}/seed")
 
-    def _probe(mb, _bid):
+    def _probe(mb, bid):
         # bounded state on an unbounded stream: the probe's internal
         # tracked_persist (signature table) is released per micro-batch
         # once its results are written — without the scope, a long-
-        # running stream accumulates one persisted frame per batch
-        from ..cache import scoped_release
-
+        # running stream accumulates one persisted frame per batch.
+        # Per-batch-id target + overwrite, and a probe that ignores the
+        # batch's own admitted docs: a replayed micro-batch (foreachBatch
+        # is at-least-once) rewrites the same rows, and its admit is a
+        # no-op store append
         with scoped_release():
-            res = ingest_near_dups(
+            ingest_near_dups(
                 spark, index_path, mb, threshold, id_col, text_col
-            )
-            res.write.mode("append").parquet(out_dir)
+            ).write.mode("overwrite").parquet(f"{out_dir}/batch_{bid}")
             if admit:
                 append_to_minhash_index(mb, index_path, id_col, text_col)
 
@@ -542,7 +543,9 @@ def run_streaming_ingest_near_dups(
         .parquet(parquet_dir)
     )
     _run_foreach_batch(stream, _probe)
-    return spark.read.parquet(out_dir)
+    return spark.read.option("recursiveFileLookup", "true").parquet(
+        out_dir
+    )
 
 
 def run_streaming_decontaminate(
@@ -632,6 +635,7 @@ def run_streaming_curation_ledger(
     import shutil
     import tempfile
 
+    from .. import store
     from ..cache import scoped_release, tracked_persist
     from ..text.analysis import (
         gopher_passes_cond,
@@ -648,11 +652,11 @@ def run_streaming_curation_ledger(
     )
     out_dir = tempfile.mkdtemp(prefix="ledger_stream_out_")
     atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
-    spark.createDataFrame([], "id bigint, status string").write.mode(
-        "append"
-    ).parquet(out_dir)
+    spark.createDataFrame([], "id bigint, status string").write.parquet(
+        f"{out_dir}/seed"
+    )
 
-    def _decide(mb, _bid):
+    def _decide(mb, bid):
         with scoped_release():
             c = mb.select(
                 F.col(id_col).alias("id"), F.col(text_col).alias("text")
@@ -668,7 +672,7 @@ def run_streaming_curation_ledger(
             if not bks:
                 return
             flags = (
-                spark.read.parquet(flags_path)
+                store.read(spark, flags_path, "flags")
                 .filter(F.col("bk").isin(bks))
                 .select("id", "exact", "near")
             )
@@ -707,9 +711,10 @@ def run_streaming_curation_ledger(
                 .when(F.col("_pts") < 2, F.lit("low_quality"))
                 .otherwise(F.lit("kept"))
             )
+            # per-batch-id overwrite: idempotent under replay
             ledger.select("id", status.alias("status")).write.mode(
-                "append"
-            ).parquet(out_dir)
+                "overwrite"
+            ).parquet(f"{out_dir}/batch_{bid}")
 
     # the run-scoped dictionary releases AND deregisters on exit
     # (tracked_persist + bare unpersist would leak its registry entry
@@ -728,16 +733,10 @@ def run_streaming_curation_ledger(
             .option("maxFilesPerTrigger", int(max_files_per_trigger))
             .parquet(parquet_dir)
         )
-        q = (
-            stream.writeStream.foreachBatch(_decide)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.read.parquet(out_dir)
+        _run_foreach_batch(stream, _decide)
+    return spark.read.option("recursiveFileLookup", "true").parquet(
+        out_dir
+    )
 
 
 def run_streaming_quality_gate(

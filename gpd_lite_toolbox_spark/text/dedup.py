@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import store
 from ..cache import scoped_release, tracked_persist
 from ..parallelism import widen
 
@@ -372,32 +373,40 @@ def minhash_lsh_pairs(
                 ).alias("_ss"),
             )
         )
-    out = (
+    return _verified(
         cand.join(
             sets_.select(F.col("id").alias("id_a"), F.col("_ss").alias("_sa")),
             "id_a",
-        )
-        .join(
+        ).join(
             sets_.select(F.col("id").alias("id_b"), F.col("_ss").alias("_sb")),
             "id_b",
-        )
-        .withColumn(
+        ),
+        threshold,
+    ).select("id_a", "id_b", "jaccard")
+
+
+def _verified(pairs: DataFrame, threshold: float) -> DataFrame:
+    """``pairs`` with the exact ``jaccard`` of their sorted shingle
+    sets ``_sa``/``_sb`` (rounded to 6 places), kept at >= threshold."""
+    n = F.col("n_inter")
+    return (
+        pairs.withColumn(
             "n_inter", F.size(F.array_intersect("_sa", "_sb")).cast("long")
         )
         .withColumn(
             "jaccard",
-            F.round(
-                F.col("n_inter")
-                / (
-                    F.size("_sa") + F.size("_sb") - F.col("n_inter")
-                ).cast("double"),
-                6,
-            ),
+            F.round(n / (F.size("_sa") + F.size("_sb") - n).cast("double"), 6),
         )
         .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
     )
-    return out
+
+
+# the minhash index's store description (store.py): band rows keyed by
+# the (band, bucket) a probe prunes to, and one docs row per id
+MINHASH_INDEX = {
+    "bands": store.Part(("band", "bucket")),
+    "docs": store.Part(id_col="id"),
+}
 
 
 def write_minhash_index(
@@ -411,18 +420,18 @@ def write_minhash_index(
     the day-2 shape of near-dup dedup at 100 TB (the one-shot
     ``minhash_lsh_pairs`` is the bootstrap form).
 
-    Layout:
-      ``<path>/bands``: (id, band_key, band, bucket) partitioned by
+    A ``store.py`` store with two parts, committed together:
+      ``bands``: (id, band_key, band, bucket) partitioned by
         (band, bucket) — bucket is the first ``_IDX_BUCKET_HEX`` hex
         chars of the band key (16 per band), so an ingest batch's
         candidate lookup
         reads only the partitions its own band keys land in (static
         partition filter, same discipline as ann_ivf_topk_indexed);
-      ``<path>/docs``: (id, h0..h{N-1}, shingle_set) — everything the
+      ``docs``: (id, h0..h{N-1}, shingle_set) — everything the
         signature prefilter and the exact-Jaccard verify need, so
         ingest NEVER touches the original corpus text.
     """
-    _write_minhash_index(corpus, path, "overwrite", id_col, text_col)
+    _write_minhash_index(corpus, path, False, id_col, text_col)
 
 
 def append_to_minhash_index(
@@ -433,23 +442,19 @@ def append_to_minhash_index(
 ) -> None:
     """Admit an ingest batch into the persisted index — the step after
     ``ingest_near_dups`` decided which batch documents survive dedup.
-    Appends the batch's band and docs rows under the same layout;
-    partitionBy(band, bucket) append only touches the batch's own
-    bucket directories. Same unique-id contract as the writer: ids
-    must not already exist in the index."""
-    _write_minhash_index(batch, path, "append", id_col, text_col)
+    The batch's band and docs rows commit together as one store batch
+    that only adds files. A retried append of the same batch is a
+    no-op; ids another batch already committed raise ``ValueError``."""
+    _write_minhash_index(batch, path, True, id_col, text_col)
 
 
 def _write_minhash_index(
-    corpus: DataFrame, path: str, mode: str, id_col: str, text_col: str
+    corpus: DataFrame, path: str, append: bool, id_col: str, text_col: str
 ) -> None:
     with scoped_release():
         sig = tracked_persist(minhash_signatures(corpus, id_col, text_col))
         bands = minhash_band_keys(sig).withColumn(
             "bucket", F.substring("band_key", 1, _IDX_BUCKET_HEX)
-        )
-        bands.write.mode(mode).partitionBy("band", "bucket").parquet(
-            f"{path}/bands"
         )
         docs = sig.join(
             widen(corpus).select(
@@ -460,7 +465,11 @@ def _write_minhash_index(
             ),
             "id",
         )
-        docs.write.mode(mode).parquet(f"{path}/docs")
+        parts = {"bands": bands, "docs": docs}
+        if append:
+            store.append(path, MINHASH_INDEX, corpus, parts, id_col)
+        else:
+            store.write(path, MINHASH_INDEX, parts)
 
 
 def ingest_near_dups(
@@ -480,7 +489,10 @@ def ingest_near_dups(
 
     Contract: batch ids are disjoint from index ids (same unique-id
     contract as the rest of the module); in-batch duplicates are the
-    batch's own ``minhash_lsh_pairs`` run.
+    batch's own ``minhash_lsh_pairs`` run. Index documents that carry
+    a batch id (the batch itself, once admitted) are never candidates,
+    so probing a batch again after admitting it returns the same pairs.
+    A never-written index is the day-1 empty state: no pairs.
 
     Scale: the batch's (band, bucket) set — at most B x 16 values
     at the default ``_IDX_BUCKET_HEX``, typically fewer — is collected into a static partition filter,
@@ -492,35 +504,9 @@ def ingest_near_dups(
     from functools import reduce
     from operator import or_
 
-    from pyspark.errors import AnalysisException
-
-    try:  # before any persist: the day-1 empty return persists nothing
-        idx_bands = spark.read.parquet(f"{path}/bands")
-    except AnalysisException as e:
-        # Legitimate DAY-1 EMPTY states only — anything else must
-        # propagate (swallowing an IO / permission / corrupt-footer
-        # error would silently admit every batch document as
-        # non-duplicate), so the error CLASS is checked, not just the
-        # exception type (ADVICE r5):
-        #   PATH_NOT_FOUND          — index never written;
-        #   UNABLE_TO_INFER_SCHEMA  — index written over an EMPTY
-        #     corpus (partitionBy writes no part files for zero rows,
-        #     only the _SUCCESS commit marker), accepted ONLY when
-        #     that marker proves the write COMPLETED — the same error
-        #     class on a half-written or corrupt directory (no
-        #     _SUCCESS) re-raises.  The marker is resolved through
-        #     Hadoop's FileSystem API, not os.path, so an index
-        #     committed to remote storage (s3a://, hdfs://) is
-        #     recognised too (round-6 ADVICE).
-        from ..errors import analysis_condition
-        from ..fs import success_marker_exists
-
-        cond = analysis_condition(e)
-        committed_empty = cond == "UNABLE_TO_INFER_SCHEMA" and success_marker_exists(
-            spark, f"{path}/bands"
-        )
-        if cond != "PATH_NOT_FOUND" and not committed_empty:
-            raise
+    # before any persist: the day-1 empty return persists nothing
+    idx_bands = store.read(spark, path, "bands", missing_ok=True)
+    if idx_bands is None:
         return batch.select(
             F.col(id_col).alias("id_a"),
             F.col(id_col).alias("id_b"),
@@ -567,11 +553,11 @@ def ingest_near_dups(
             ),
             ["band", "bucket", "band_key"],
         )
-        .filter(F.col("new_id") != F.col("idx_id"))
         .select("new_id", "idx_id")
         .distinct()
+        .join(bt.select(F.col(id_col).alias("idx_id")), "idx_id", "left_anti")
     )
-    docs = spark.read.parquet(f"{path}/docs")
+    docs = store.read(spark, path, "docs")
     sig_a = sig_n.select(
         F.col("id").alias("new_id"),
         *[F.col(f"h{i}").alias(f"_a{i}") for i in range(N_HASHES)],
@@ -594,34 +580,19 @@ def ingest_near_dups(
         F.col(id_col).alias("new_id"),
         F.array_sort(shingle_str_array_expr(text_col)).alias("_sa"),
     )
-    return (
-        cand.join(sets_n, "new_id")
-        .join(
+    return _verified(
+        cand.join(sets_n, "new_id").join(
             docs.select(
                 F.col("id").alias("idx_id"),
                 F.col("shingle_set").alias("_sb"),
             ),
             "idx_id",
-        )
-        .withColumn(
-            "n_inter", F.size(F.array_intersect("_sa", "_sb")).cast("long")
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter")
-                / (
-                    F.size("_sa") + F.size("_sb") - F.col("n_inter")
-                ).cast("double"),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select(
-            F.least("new_id", "idx_id").alias("id_a"),
-            F.greatest("new_id", "idx_id").alias("id_b"),
-            "jaccard",
-        )
+        ),
+        threshold,
+    ).select(
+        F.least("new_id", "idx_id").alias("id_a"),
+        F.greatest("new_id", "idx_id").alias("id_b"),
+        "jaccard",
     )
 
 

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import store
 from .analysis import lang_id, quality_score, token_stats
 
 MIN_QUALITY = 0.666667  # >= 2 of 3 quality checks (rounded as emitted)
@@ -461,34 +462,15 @@ def curation_ledger(
     table is computed ONCE and feeds both the clustering and the
     retention argmax (``groups=`` passthrough).
     """
-    from ..cache import tracked_persist
     from .analysis import (
         gopher_passes_cond,
         gopher_stat_exprs,
         quality_points_expr,
     )
-    from .dedup import (
-        decontaminate,
-        dedup_canonical,
-        dup_groups,
-        minhash_lsh_pairs,
-    )
+    from .dedup import decontaminate
 
     c = corpus.select(
         F.col(id_col).alias("id"), F.col(text_col).alias("text")
-    )
-    pairs = minhash_lsh_pairs(c, threshold=threshold)
-    groups = tracked_persist(
-        dup_groups(c, pairs=pairs, max_iter=max_iter)
-    )
-    kept = dedup_canonical(c, groups=groups)
-    near = groups.join(
-        kept.select("group_id", "kept_id"), "group_id"
-    ).select(
-        "id",
-        (
-            (F.col("group_size") > 1) & (F.col("id") != F.col("kept_id"))
-        ).alias("_near"),
     )
     bench = c.filter(F.col("id") % benchmark_mod == 0)
     train = c.filter(F.col("id") % benchmark_mod != 0)
@@ -498,26 +480,19 @@ def curation_ledger(
     staged = c.select(
         "id",
         "text",
-        F.md5("text").alias("_fp"),
         quality_points_expr("text").alias("_pts"),
         *[col.alias(n) for n, col in gopher_stat_exprs("text")],
     ).withColumn("_pass", gopher_passes_cond())
-    w = Window.partitionBy("_fp")
-    ledger = (
-        staged.join(near, "id", "left")
-        .join(hits, "id", "left")
-        .withColumn("_minid", F.min("id").over(w))
-    )
+    ledger = staged.join(
+        _dup_flags(c, threshold, max_iter), "id", "left"
+    ).join(hits, "id", "left")
     status = (
         F.when(F.col("text").isNull(), F.lit("null_text"))
         .when(
             F.col("id") % benchmark_mod == 0, F.lit("benchmark")
         )
-        .when(
-            F.col("_fp").isNotNull() & (F.col("id") != F.col("_minid")),
-            F.lit("exact_dup"),
-        )
-        .when(F.coalesce("_near", F.lit(False)), F.lit("near_dup"))
+        .when(F.col("exact"), F.lit("exact_dup"))
+        .when(F.col("near"), F.lit("near_dup"))
         .when(F.coalesce("_cont", F.lit(False)), F.lit("contaminated"))
         .when(
             ~F.coalesce(F.col("_pass"), F.lit(False)),
@@ -527,6 +502,10 @@ def curation_ledger(
         .otherwise(F.lit("kept"))
     )
     return ledger.select("id", status.alias("status"))
+
+
+# the flags index's store description: one row per id, bucketed by id
+CURATION_FLAGS = {"flags": store.Part(("bk",), id_col="id")}
 
 
 def write_curation_flags_index(
@@ -541,54 +520,56 @@ def write_curation_flags_index(
     """Day-1 artifact for the STREAMING curation ledger: the two
     GLOBAL per-doc dedup decisions — ``exact`` (not the min-id member
     of its md5 group) and ``near`` (in a minhash-LSH cluster and not
-    its retained member) — materialized once over the corpus and
-    written id-bucket-partitioned (``bk = id % n_buckets``), so a
+    its retained member) — materialized once over the corpus as the
+    ``flags`` part of a ``store.py`` store, (id, exact, near)
+    partitioned by id bucket (``bk = id % n_buckets``), so a
     micro-batch probe collapses its ids' buckets into a static
     partition filter and never scans the corpus (the
-    ``write_minhash_index`` day-2 discipline).  Both flags replay
-    ``curation_ledger``'s stages verbatim; every other ledger rule is
-    row-local or static-dictionary-joined and stays in-stream.
+    ``write_minhash_index`` day-2 discipline).  Both flags come from
+    ``_dup_flags``, as ``curation_ledger``'s do; every other ledger
+    rule is row-local or static-dictionary-joined and stays in-stream.
     """
-    from ..cache import scoped_release, tracked_persist
-    from .dedup import dedup_canonical, dup_groups, minhash_lsh_pairs
+    from ..cache import scoped_release
 
     with scoped_release():  # returns None: nothing outlives the write
         c = corpus.select(
             F.col(id_col).alias("id"), F.col(text_col).alias("text")
         )
-        pairs = minhash_lsh_pairs(c, threshold=threshold)
-        groups = tracked_persist(
-            dup_groups(c, pairs=pairs, max_iter=max_iter)
+        flags = _dup_flags(c, threshold, max_iter).withColumn(
+            "bk", F.col("id") % int(n_buckets)
         )
-        kept = dedup_canonical(c, groups=groups)
-        near = groups.join(
-            kept.select("group_id", "kept_id"), "group_id"
-        ).select(
+        store.write(path, CURATION_FLAGS, {"flags": flags})
+
+
+def _dup_flags(c: DataFrame, threshold: float, max_iter: int) -> DataFrame:
+    """(id, exact, near) over an (id, text) corpus: ``exact`` = not the
+    min-id member of its md5 group, ``near`` = in a minhash-LSH cluster
+    and not its retained member. The pair table is computed once and
+    feeds both the clustering and the retention argmax."""
+    from ..cache import tracked_persist
+    from .dedup import dedup_canonical, dup_groups, minhash_lsh_pairs
+
+    pairs = minhash_lsh_pairs(c, threshold=threshold)
+    groups = tracked_persist(dup_groups(c, pairs=pairs, max_iter=max_iter))
+    kept = dedup_canonical(c, groups=groups)
+    near = groups.join(
+        kept.select("group_id", "kept_id"), "group_id"
+    ).select(
+        "id",
+        (
+            (F.col("group_size") > 1) & (F.col("id") != F.col("kept_id"))
+        ).alias("near"),
+    )
+    exact = (
+        c.select("id", F.md5("text").alias("_fp"))
+        .withColumn("_minid", F.min("id").over(Window.partitionBy("_fp")))
+        .select(
             "id",
             (
-                (F.col("group_size") > 1) & (F.col("id") != F.col("kept_id"))
-            ).alias("near"),
+                F.col("_fp").isNotNull() & (F.col("id") != F.col("_minid"))
+            ).alias("exact"),
         )
-        w = Window.partitionBy("_fp")
-        exact = (
-            c.select("id", F.md5("text").alias("_fp"))
-            .withColumn("_minid", F.min("id").over(w))
-            .select(
-                "id",
-                (
-                    F.col("_fp").isNotNull() & (F.col("id") != F.col("_minid"))
-                ).alias("exact"),
-            )
-        )
-        (
-            exact.join(near, "id", "left")
-            .select(
-                "id",
-                "exact",
-                F.coalesce("near", F.lit(False)).alias("near"),
-                (F.col("id") % int(n_buckets)).alias("bk"),
-            )
-            .write.mode("overwrite")
-            .partitionBy("bk")
-            .parquet(path)
-        )
+    )
+    return exact.join(near, "id", "left").select(
+        "id", "exact", F.coalesce("near", F.lit(False)).alias("near")
+    )

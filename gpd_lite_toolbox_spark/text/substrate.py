@@ -15,15 +15,18 @@ mthh/gpd_lite_toolbox, per the LLM-pipeline mandate).
 
 Contract:
 - ``write_substrate(corpus, path)`` builds each substrate with the
-  IDENTICAL expression its one-shot operator uses and writes it to
-  ``<path>/<name>`` as parquet — so a query fed from the substrate is
-  hash-identical to the one-shot form (pinned in
+  IDENTICAL expression its one-shot operator uses and writes it as
+  one part of a ``store.py`` store at ``path`` — so a query fed from
+  the substrate is hash-identical to the one-shot form (pinned in
   tests/test_substrate.py).
-- ``read_substrate(spark, path, name)`` returns the parquet scan; the
-  consumers accept it via their ``sets= / sig= / verify_sets= /
-  counts=`` parameters and then never touch the raw text.
+- ``read_substrate(spark, path, name)`` returns the committed rows of
+  that part; the consumers accept them via their ``sets= / sig= /
+  verify_sets= / counts=`` parameters and then never touch the raw
+  text.
 - Every substrate is per-doc (rows keyed by doc id), so
-  ``append_to_substrate`` admits a batch into any of them.
+  ``append_to_substrate`` admits a batch into any of them as one
+  store batch: a retried append is a no-op, and ids another batch
+  already committed raise ``ValueError``.
 
 Scale shape: every substrate is one partial-combined pass over the
 corpus (or a pure projection) and writes doc-sized or vocab-sized
@@ -39,6 +42,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .. import store
 
 
 def _build_ngram_sets(corpus, id_col, text_col):
@@ -88,18 +93,22 @@ SUBSTRATES = {
     # sums over it)
     "ngram_counts": _build_ngram_counts,
 }
+# the substrates' store description: one part per substrate
+SUBSTRATE_STORE = {name: store.Part(id_col="id") for name in SUBSTRATES}
 
 
-def _materialize(corpus, path, which, id_col, text_col, mode):
+def _materialize(corpus, path, which, id_col, text_col, append):
     names = list(SUBSTRATES) if which is None else list(which)
     unknown = [n for n in names if n not in SUBSTRATES]
     if unknown:
         raise ValueError(
             f"unknown substrates {unknown}; available: {sorted(SUBSTRATES)}"
         )
-    for name in names:
-        df = SUBSTRATES[name](corpus, id_col, text_col)
-        df.write.mode(mode).parquet(f"{path}/{name}")
+    parts = {n: SUBSTRATES[n](corpus, id_col, text_col) for n in names}
+    if append:
+        store.append(path, SUBSTRATE_STORE, corpus, parts, id_col)
+    else:
+        store.write(path, SUBSTRATE_STORE, parts)
     return names
 
 
@@ -111,11 +120,11 @@ def write_substrate(
     text_col: str = "text",
 ) -> list[str]:
     """Materialize the named substrates (default: all) of ``corpus``
-    under ``<path>/<name>``; returns the names written.  Overwrite
-    semantics per substrate directory — rewriting one name never
+    as parts of the store at ``path``; returns the names written.
+    Overwrite semantics per substrate — rewriting one name never
     touches the others, so incremental corpus-version bumps can
     refresh only the folds whose definition changed."""
-    return _materialize(corpus, path, which, id_col, text_col, "overwrite")
+    return _materialize(corpus, path, which, id_col, text_col, False)
 
 
 def append_to_substrate(
@@ -128,18 +137,24 @@ def append_to_substrate(
     """Admit an ingest batch into the materialized substrates (default:
     all) — the day-2 maintenance step after the batch survives dedup
     (mirrors ``append_to_minhash_index``). Every substrate is per-doc,
-    keyed by doc id, so the batch's rows append cleanly; ids must not
-    already exist (the writer's unique-id contract)."""
-    return _materialize(batch, path, which, id_col, text_col, "append")
+    keyed by doc id, so the batch's rows append cleanly as one store
+    batch; ids another batch already committed raise ``ValueError``."""
+    return _materialize(batch, path, which, id_col, text_col, True)
 
 
 def read_substrate(spark: SparkSession, path: str, name: str) -> DataFrame:
     """Scan one materialized substrate. Raises (AnalysisException)
-    when the directory is missing — a silent empty fallback here
-    would let a day-2 dedup pass admit everything, the same hazard
-    class ingest_near_dups guards against."""
+    when it was never written — a silent empty fallback here would let
+    a day-2 dedup pass admit everything."""
     if name not in SUBSTRATES:
         raise ValueError(
             f"unknown substrate {name!r}; available: {sorted(SUBSTRATES)}"
         )
-    return spark.read.parquet(f"{path}/{name}")
+    df = store.read(spark, path, name, missing_ok=True)
+    if df is None:
+        from pyspark.errors import AnalysisException
+
+        raise AnalysisException(
+            message=f"substrate {name!r} of {path} was never written"
+        )
+    return df

@@ -20,6 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import store
 from ..cache import tracked_persist
 
 
@@ -269,27 +270,41 @@ def _coarse_cells_arrow(coarse):
     (oracles.ANN_IVF_TOPK), so all three forms are bit-identical."""
     from pyspark.sql.functions import pandas_udf
 
+    from .pq import _nearest
+
     C = np.asarray(coarse, dtype=np.float64)
-    nc, cdims = C.shape
 
     @pandas_udf("int")
     def cells(v: pd.Series) -> pd.Series:
         if len(v) == 0:
             return pd.Series(np.zeros(0, dtype=np.int32))
         X = np.vstack(v.to_numpy()).astype(np.float64)
-        n = X.shape[0]
-        cd = np.zeros((n, nc), dtype=np.float64)
-        for i in range(nc):
-            acc = np.zeros(n, dtype=np.float64)
-            for d in range(cdims):
-                t = X[:, d] - C[i, d]
-                acc = acc + t * t
-            cd[:, i] = acc
-        return pd.Series(np.argmin(cd, axis=1).astype(np.int32))
+        return pd.Series(_nearest(X, C))
 
     # deterministic value; flag only stops Catalyst re-evaluating the
     # projection per consumer (same recipe as _dot_arrow)
     return cells.asNondeterministic()
+
+
+def _ivf_cells(
+    vectors, n_centroids, id_col, vec_col, seed, max_iter, dims, centroids
+):
+    """(inverted, centers) of an IVF quantizer: the cell-assigned
+    corpus and the (cell, cv) centroid table. Explicit ``centroids``
+    assign cells with a map-only Arrow argmin; otherwise the KMeans
+    fit of ``_fit_ivf``."""
+    if centroids is None:
+        return _fit_ivf(
+            vectors, n_centroids, id_col, vec_col, seed, max_iter, dims
+        )
+    inverted = _corpus_side(vectors, id_col, vec_col, dims).withColumn(
+        "cell", _coarse_cells_arrow(centroids)(F.col("nv"))
+    )
+    centers = vectors.sparkSession.createDataFrame(
+        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
+        "cell int, cv array<double>",
+    )
+    return inverted, centers
 
 
 def ann_ivf_topk(
@@ -329,24 +344,21 @@ def ann_ivf_topk(
     n_centroids instead of |corpus|. Recall is tunable by n_probe
     (n_probe = n_centroids degenerates to exact brute force).
     """
-    if centroids is not None:
-        inverted = _corpus_side(vectors, id_col, vec_col, dims).withColumn(
-            "cell", _coarse_cells_arrow(centroids)(F.col("nv"))
-        )
-        centers = vectors.sparkSession.createDataFrame(
-            [
-                (i, [float(x) for x in c])
-                for i, c in enumerate(centroids)
-            ],
-            "cell int, cv array<double>",
-        )
-    else:
-        inverted, centers = _fit_ivf(
-            vectors, n_centroids, id_col, vec_col, seed, max_iter, dims
-        )
+    inverted, centers = _ivf_cells(
+        vectors, n_centroids, id_col, vec_col, seed, max_iter, dims, centroids
+    )
     q = _query_side(queries, id_col, vec_col, dims)
     probes = _route_probes(q, centers, n_probe)
     return _rank_topk(_score_pairs(probes.join(inverted, "cell"), dims), k)
+
+
+# the IVF index's store description: vectors by cell, the centroid
+# table, and the tombstones of merge-on-read deletes
+IVF_INDEX = {
+    "cells": store.Part(("cell",), id_col="neighbor_id"),
+    "centroids": store.Part(),
+    "tombstones": store.Part(tombstones=True),
+}
 
 
 def write_ivf_index(
@@ -372,33 +384,24 @@ def write_ivf_index(
     ``ann_ivf_topk``) skips the KMeans fit and makes every later read
     of the index deterministic end-to-end — the hash-gateable form.
 
-    Layout: ``<path>/cells/cell=<i>/...`` with (neighbor_id, nv, nn)
-    and ``<path>/centroids`` with (cell, cv).
+    A ``store.py`` store: part ``cells`` with (neighbor_id, nv, nn)
+    partitioned by cell, part ``centroids`` with (cell, cv), and the
+    ``tombstones`` part that ``delete_from_ivf_index`` appends to.
     """
-    if centroids is not None:
-        inverted = _corpus_side(vectors, id_col, vec_col, dims).withColumn(
-            "cell", _coarse_cells_arrow(centroids)(F.col("nv"))
-        )
-        centers = vectors.sparkSession.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-            "cell int, cv array<double>",
-        )
-    else:
-        inverted, centers = _fit_ivf(
-            vectors, n_centroids, id_col, vec_col, seed, max_iter, dims
-        )
-    inverted.write.mode("overwrite").partitionBy("cell").parquet(
-        f"{path}/cells"
+    inverted, centers = _ivf_cells(
+        vectors, n_centroids, id_col, vec_col, seed, max_iter, dims, centroids
     )
-    centers.repartition(1).write.mode("overwrite").parquet(
-        f"{path}/centroids"
+    store.write(
+        path,
+        IVF_INDEX,
+        {"cells": inverted, "centroids": centers.repartition(1)},
     )
 
 
 def delete_from_ivf_index(spark, path: str, ids) -> None:
-    """Logical delete from a persisted IVF index: append the ids to a
-    TOMBSTONE table (``<path>/tombstones``) instead of rewriting cell
-    files — the delete costs O(|batch|) regardless of index size, and
+    """Logical delete from a persisted IVF index: append the ids to
+    the index's ``tombstones`` part instead of rewriting cell files —
+    the delete costs O(|batch|) regardless of index size, and
     ``ann_ivf_topk_indexed`` filters tombstoned vectors out of every
     probe. The physical rewrite is deferred to ``compact_ivf_index``
     (run when the tombstone fraction justifies it) — the standard
@@ -413,43 +416,25 @@ def delete_from_ivf_index(spark, path: str, ids) -> None:
         tdf = spark.createDataFrame(
             [(int(i),) for i in ids], "neighbor_id long"
         )
-    tdf.write.mode("append").parquet(f"{path}/tombstones")
-
-
-def _ivf_tombstones(spark, path: str) -> DataFrame | None:
-    from pyspark.errors import AnalysisException
-
-    from ..errors import is_path_not_found
-
-    try:
-        return spark.read.parquet(f"{path}/tombstones")
-    except AnalysisException as e:
-        # PATH_NOT_FOUND only = no deletes yet. Any other failure
-        # (corrupt footer, permissions, half-written directory) must
-        # propagate: treating it as "no deletes" would serve logically
-        # deleted vectors back out of every probe.
-        if is_path_not_found(e):
-            return None
-        raise
+    store.delete(path, IVF_INDEX, tdf)
 
 
 def compact_ivf_index(spark, path: str) -> int:
     """Physically apply an IVF index's tombstones: rewrite ONLY the
-    cell partitions that contain a tombstoned vector (dynamic
-    partition overwrite — untouched cells keep their files), then drop
-    the tombstone table. Returns the number of cells rewritten.
+    cell partitions that contain a tombstoned vector into a new store
+    batch, and publish one manifest that drops those cells' old files
+    and the tombstones; the dropped files are deleted after it.
+    Returns the number of cells rewritten.
 
     Scale shape: the affected-cell list is a bounded collect (at most
     n_centroids values); the rewrite reads and writes just those
     partitions — the compaction cost tracks the DELETED data's
     locality, not the index size."""
-    import shutil
-
-    ts = _ivf_tombstones(spark, path)
+    ts = store.read(spark, path, "tombstones", missing_ok=True)
     if ts is None:
         return 0
     dead = F.broadcast(ts.select("neighbor_id").distinct())
-    cells_df = spark.read.parquet(f"{path}/cells")
+    cells_df = store.read(spark, path, "cells")
     affected = [
         r.cell
         for r in cells_df.join(dead, "neighbor_id")
@@ -457,38 +442,10 @@ def compact_ivf_index(spark, path: str) -> int:
         .distinct()
         .collect()
     ]
-    if affected:
-        kept = (
-            cells_df.filter(F.col("cell").isin(affected))
-            .join(dead, "neighbor_id", "left_anti")
-        )
-        survivors = {
-            r.cell for r in kept.select("cell").distinct().collect()
-        }
-        # per-write option, NOT session conf: mutating
-        # spark.sql.sources.partitionOverwriteMode on the session would
-        # silently change overwrite semantics for every later caller
-        # write (sources/sinks.py uses the same per-write form)
-        (
-            kept.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("cell")
-            .parquet(f"{path}/cells")
-        )
-        # dynamic overwrite only rewrites partitions PRESENT in the
-        # write: a cell whose members all died writes nothing and its
-        # stale files would survive — remove those directories
-        # explicitly (local/shared-POSIX path contract, as write_warc).
-        # Failures MUST propagate before the tombstones drop below:
-        # a surviving stale cell dir with its tombstones gone would
-        # silently resurface logically deleted vectors.
-        import os
-
-        for cell in set(affected) - survivors:
-            cell_dir = f"{path}/cells/cell={cell}"
-            if os.path.isdir(cell_dir):
-                shutil.rmtree(cell_dir)
-    shutil.rmtree(f"{path}/tombstones")
+    kept = cells_df.filter(F.col("cell").isin(affected)).join(
+        dead, "neighbor_id", "left_anti"
+    )
+    store.compact(spark, path, IVF_INDEX, "cells", affected, kept)
     return len(affected)
 
 
@@ -511,7 +468,7 @@ def ann_ivf_topk_indexed(
     a join-driven dynamic filter would depend on DPP kicking in.
     Output schema matches cosine_topk; results are identical to
     ``ann_ivf_topk`` run with the same quantizer."""
-    centers = spark.read.parquet(f"{path}/centroids")
+    centers = store.read(spark, path, "centroids")
     q = _query_side(queries, id_col, vec_col, dims)
     probes = _route_probes(q, centers, n_probe)
     # no persist: the centroid routing is |Q| x n_centroids and cheap
@@ -519,13 +476,13 @@ def ann_ivf_topk_indexed(
     # cached partitions for the session lifetime in a serving loop
     # that calls this per query batch
     cells = [r.cell for r in probes.select("cell").distinct().collect()]
-    inverted = spark.read.parquet(f"{path}/cells").filter(
+    inverted = store.read(spark, path, "cells").filter(
         F.col("cell").isin(cells)
     )
     # merge-on-read deletes: tombstoned vectors (delete_from_ivf_index)
     # drop out of every probe via a broadcast anti-join until
     # compact_ivf_index rewrites their cells
-    ts = _ivf_tombstones(spark, path)
+    ts = store.read(spark, path, "tombstones", missing_ok=True)
     if ts is not None:
         inverted = inverted.join(
             F.broadcast(ts.select("neighbor_id").distinct()),

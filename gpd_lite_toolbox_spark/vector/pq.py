@@ -41,6 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import store
 from ..cache import scoped_release, tracked_persist
 
 M_SUB = 8
@@ -68,18 +69,12 @@ def default_codebooks(
     ]
 
 
-def _cb_lit(codebooks) -> "F.Column":
-    return F.array(
-        *[
-            F.array(
-                *[
-                    F.array(*[F.lit(float(v)) for v in cent])
-                    for cent in sub
-                ]
-            )
-            for sub in codebooks
-        ]
-    )
+def _lit(x) -> "F.Column":
+    """A float, or nested lists of floats (centroids, codebooks), as a
+    Spark literal of nested arrays of doubles."""
+    if np.ndim(x) == 0:
+        return F.lit(float(x))
+    return F.array(*[_lit(v) for v in x])
 
 
 def _sub_d2(sub_vec, cent):
@@ -103,7 +98,7 @@ def encode_pq_expr(vec_col, codebooks) -> "F.Column":
     m = len(codebooks)
     k = len(codebooks[0])
     sd = len(codebooks[0][0])
-    cb = _cb_lit(codebooks)
+    cb = _lit(codebooks)
     vec = F.col(vec_col) if isinstance(vec_col, str) else vec_col
 
     def code_for(j):
@@ -137,7 +132,7 @@ def query_lut_expr(vec_col, codebooks) -> "F.Column":
     m = len(codebooks)
     k = len(codebooks[0])
     sd = len(codebooks[0][0])
-    cb = _cb_lit(codebooks)
+    cb = _lit(codebooks)
     vec = F.col(vec_col) if isinstance(vec_col, str) else vec_col
     return F.transform(
         F.sequence(F.lit(0), F.lit(m - 1)),
@@ -154,6 +149,29 @@ def query_lut_expr(vec_col, codebooks) -> "F.Column":
     )
 
 
+def _nearest(X, C):
+    """Per row of ``X``, the index of the nearest row of ``C``: L2²
+    accumulated dim by dim in order, first minimum on ties — the
+    float64 op order of the fold forms and of the DuckDB oracles."""
+    d2 = np.zeros((X.shape[0], C.shape[0]))
+    for i in range(C.shape[0]):
+        acc = np.zeros(X.shape[0])
+        for d in range(C.shape[1]):
+            t = X[:, d] - C[i, d]
+            acc = acc + t * t
+        d2[:, i] = acc
+    return np.argmin(d2, axis=1).astype(np.int32)
+
+
+def _pq_codes(X, cb):
+    """(n, m) PQ codes of the rows of ``X`` under codebooks (m, k, sd)."""
+    sd = cb.shape[2]
+    return np.stack(
+        [_nearest(X[:, j * sd : (j + 1) * sd], cb[j]) for j in range(len(cb))],
+        axis=1,
+    )
+
+
 def _encode_arrow(codebooks):
     """Arrow-vectorized PQ encoder for the HOT corpus side: per
     subspace, distances to all centroids accumulate SEQUENTIALLY over
@@ -166,9 +184,6 @@ def _encode_arrow(codebooks):
     column ops per Arrow batch (the _dot_arrow recipe)."""
     from pyspark.sql.functions import pandas_udf
 
-    m = len(codebooks)
-    k = len(codebooks[0])
-    sd = len(codebooks[0][0])
     cb = np.asarray(codebooks, dtype=np.float64)  # (m, k, sd)
 
     @pandas_udf("array<int>")
@@ -176,19 +191,7 @@ def _encode_arrow(codebooks):
         if len(v) == 0:
             return pd.Series([], dtype=object)
         X = np.vstack(v.to_numpy()).astype(np.float64)  # (n, dims)
-        n = X.shape[0]
-        codes = np.empty((n, m), dtype=np.int32)
-        for j in range(m):
-            S = X[:, j * sd : (j + 1) * sd]
-            d2 = np.zeros((n, k), dtype=np.float64)
-            for c in range(k):
-                acc = np.zeros(n, dtype=np.float64)
-                for d in range(sd):
-                    t = S[:, d] - cb[j, c, d]
-                    acc = acc + t * t
-                d2[:, c] = acc
-            codes[:, j] = np.argmin(d2, axis=1)  # first min, like the fold
-        return pd.Series(list(codes))
+        return pd.Series(list(_pq_codes(X, cb)))
 
     # deterministic value; the flag pins a single evaluation (the
     # _dot_arrow recipe)
@@ -212,36 +215,15 @@ def ann_pq_topk(
     """
     if codebooks is None:
         codebooks = default_codebooks()
-    m = len(codebooks)
     venc = vectors.select(
         F.col(id_col).alias("neighbor_id"),
-        _encode_arrow(codebooks)(F.col(vec_col)).alias("_codes"),
+        _encode_arrow(codebooks)(F.col(vec_col)).alias("codes"),
     )
     qlut = queries.select(
         F.col(id_col).alias("query_id"),
         query_lut_expr(vec_col, codebooks).alias("_lut"),
     )
-    score = F.round(
-        F.aggregate(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            F.lit(0.0),
-            lambda acc, j: acc
-            + F.element_at(
-                F.element_at(F.col("_lut"), (j + 1).cast("int")),
-                (F.element_at(F.col("_codes"), (j + 1).cast("int")) + 1)
-                .cast("int"),
-            ),
-        ),
-        6,
-    )
-    w = Window.partitionBy("query_id").orderBy("adc_d2", "neighbor_id")
-    return (
-        venc.join(F.broadcast(qlut))
-        .withColumn("adc_d2", score)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= int(k))
-        .select("query_id", "neighbor_id", "adc_d2", "rank")
-    )
+    return _adc_topk(venc, qlut, len(codebooks), k)
 
 
 def fit_pq(
@@ -309,7 +291,7 @@ def fit_pq(
                 if cbs[j][c] is None:  # corpus smaller than k: md5 fill
                     cbs[j][c] = fallback[j][c]
         for _ in range(int(iters)):
-            cb = _cb_lit(cbs)
+            cb = _lit(cbs)
             cbj = F.element_at(cb, (F.col("sub") + 1).cast("int"))
             best = F.aggregate(
                 F.sequence(F.lit(0), F.lit(k - 1)),
@@ -346,7 +328,7 @@ def pq_distortion(vectors: DataFrame, codebooks, vec_col: str = "embedding") -> 
     quantity Lloyd descends; the trained-beats-random pytest pins it."""
     m = len(codebooks)
     sd = len(codebooks[0][0])
-    cb = _cb_lit(codebooks)
+    cb = _lit(codebooks)
     err = F.aggregate(
         F.sequence(F.lit(0), F.lit(m - 1)),
         F.lit(0.0),
@@ -397,42 +379,17 @@ def _ivfpq_arrow(coarse, codebooks):
     oracle (first-min ties throughout)."""
     from pyspark.sql.functions import pandas_udf
 
-    m = len(codebooks)
-    k = len(codebooks[0])
-    sd = len(codebooks[0][0])
     C = np.asarray(coarse, dtype=np.float64)     # (c, dims)
     cb = np.asarray(codebooks, dtype=np.float64)  # (m, k, sd)
-    nc, dims = C.shape
 
     @pandas_udf("struct<cell: int, codes: array<int>>")
     def enc(v: pd.Series) -> pd.DataFrame:
         if len(v) == 0:
             return pd.DataFrame({"cell": [], "codes": []})
         X = np.vstack(v.to_numpy()).astype(np.float64)
-        n = X.shape[0]
-        cd = np.zeros((n, nc), dtype=np.float64)
-        for i in range(nc):
-            acc = np.zeros(n, dtype=np.float64)
-            for d in range(dims):
-                t = X[:, d] - C[i, d]
-                acc = acc + t * t
-            cd[:, i] = acc
-        cells = np.argmin(cd, axis=1)
-        R = X - C[cells]
-        codes = np.empty((n, m), dtype=np.int32)
-        for j in range(m):
-            S = R[:, j * sd : (j + 1) * sd]
-            d2 = np.zeros((n, k), dtype=np.float64)
-            for c in range(k):
-                acc = np.zeros(n, dtype=np.float64)
-                for d in range(sd):
-                    t = S[:, d] - cb[j, c, d]
-                    acc = acc + t * t
-                d2[:, c] = acc
-            codes[:, j] = np.argmin(d2, axis=1)
-        return pd.DataFrame(
-            {"cell": cells.astype(np.int32), "codes": list(codes)}
-        )
+        cells = _nearest(X, C)
+        codes = _pq_codes(X - C[cells], cb)
+        return pd.DataFrame({"cell": cells, "codes": list(codes)})
 
     return enc.asNondeterministic()
 
@@ -471,20 +428,17 @@ def ann_ivfpq_topk(
         coarse = default_coarse_centroids()
     if codebooks is None:
         codebooks = default_codebooks()
-    m = len(codebooks)
-    nc = len(coarse)
-    coarse_lit = F.array(
-        *[F.array(*[F.lit(float(x)) for x in c]) for c in coarse]
-    )
-    venc = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        _ivfpq_arrow(coarse, codebooks)(F.col(vec_col)).alias("_s"),
-    ).select("neighbor_id", F.col("_s.cell").alias("cell"),
-             F.col("_s.codes").alias("_codes"))
+    venc = _encode(vectors, coarse, codebooks, id_col, vec_col)
+    probed = _probe_luts(queries, coarse, codebooks, n_probe, id_col, vec_col)
+    return _adc_topk(venc, probed, len(codebooks), k, "cell")
 
-    # query routing: d2 to every coarse centroid (fold — |Q| is small),
-    # n_probe nearest cells, residual LUT per probed cell
-    cell_d2 = lambda cent: _sub_d2(F.col(vec_col), cent)  # noqa: E731
+
+def _probe_luts(queries, coarse, codebooks, n_probe, id_col, vec_col):
+    """(query_id, cell, _lut): each query's ``n_probe`` nearest coarse
+    cells (a fold over the centroids — |Q| is small) with the residual
+    LUT of the query against each probed cell's centroid."""
+    nc = len(coarse)
+    coarse_lit = _lit(coarse)
     probes = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("_qv"),
@@ -498,7 +452,7 @@ def ann_ivfpq_topk(
         ).alias("cell", "_cd"),
     )
     wp = Window.partitionBy("query_id").orderBy("_cd", "cell")
-    probed = (
+    return (
         probes.withColumn("_pr", F.row_number().over(wp))
         .filter(F.col("_pr") <= int(n_probe))
         .select(
@@ -515,6 +469,12 @@ def ann_ivfpq_topk(
             query_lut_expr(F.col("_qres"), codebooks).alias("_lut"),
         )
     )
+
+
+def _adc_topk(venc, luts, m, k, on=None) -> DataFrame:
+    """Rank (neighbor_id, codes) rows by ADC distance against the
+    broadcast query LUTs — joined ``on`` the cell for IVF, every pair
+    otherwise: (query_id, neighbor_id, adc_d2, rank)."""
     score = F.round(
         F.aggregate(
             F.sequence(F.lit(0), F.lit(m - 1)),
@@ -522,7 +482,7 @@ def ann_ivfpq_topk(
             lambda acc, j: acc
             + F.element_at(
                 F.element_at(F.col("_lut"), (j + 1).cast("int")),
-                (F.element_at(F.col("_codes"), (j + 1).cast("int")) + 1)
+                (F.element_at(F.col("codes"), (j + 1).cast("int")) + 1)
                 .cast("int"),
             ),
         ),
@@ -530,7 +490,7 @@ def ann_ivfpq_topk(
     )
     w = Window.partitionBy("query_id").orderBy("adc_d2", "neighbor_id")
     return (
-        venc.join(F.broadcast(probed), "cell")
+        venc.join(F.broadcast(luts), on)
         .withColumn("adc_d2", score)
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= int(k))
@@ -559,9 +519,7 @@ def fit_ivfpq(
     )
     coarse_rows = {r["cell"]: r["cv"] for r in centers.collect()}
     coarse = [coarse_rows[i] for i in range(len(coarse_rows))]
-    coarse_lit = F.array(
-        *[F.array(*[F.lit(float(x)) for x in c]) for c in coarse]
-    )
+    coarse_lit = _lit(coarse)
     residuals = inverted.select(
         F.col("neighbor_id").alias(id_col),
         F.zip_with(
@@ -575,6 +533,13 @@ def fit_ivfpq(
         vec_col=vec_col, dims=dims, seed=seed,
     )
     return coarse, codebooks
+
+
+# the IVF-PQ index's store description: codes by cell, and the layers
+IVFPQ_INDEX = {
+    "cells": store.Part(("cell",), id_col="neighbor_id"),
+    "layers": store.Part(),
+}
 
 
 def write_ivfpq_index(
@@ -593,15 +558,32 @@ def write_ivfpq_index(
     (the write_ivf_index discipline); the layers themselves persist
     alongside so search rebinds to exactly the index's quantizers.
 
-    Layout: ``<path>/cells/cell=<i>/...`` with (neighbor_id, codes)
-    and ``<path>/layers`` with one row (coarse, codebooks) as nested
-    arrays.
+    A ``store.py`` store: part ``cells`` with (neighbor_id, codes)
+    partitioned by cell, and part ``layers`` with one row (coarse,
+    codebooks) as nested arrays.
     """
     if coarse is None:
         coarse = default_coarse_centroids()
     if codebooks is None:
         codebooks = default_codebooks()
-    venc = vectors.select(
+    layers = vectors.sparkSession.createDataFrame(
+        [(coarse, codebooks)],
+        "coarse array<array<double>>, "
+        "codebooks array<array<array<double>>>",
+    ).repartition(1)
+    store.write(
+        path,
+        IVFPQ_INDEX,
+        {
+            "cells": _encode(vectors, coarse, codebooks, id_col, vec_col),
+            "layers": layers,
+        },
+    )
+
+
+def _encode(vectors, coarse, codebooks, id_col, vec_col) -> DataFrame:
+    """(neighbor_id, cell, codes): ``vectors`` coded with the layers."""
+    return vectors.select(
         F.col(id_col).alias("neighbor_id"),
         _ivfpq_arrow(coarse, codebooks)(F.col(vec_col)).alias("_s"),
     ).select(
@@ -609,15 +591,17 @@ def write_ivfpq_index(
         F.col("_s.cell").alias("cell"),
         F.col("_s.codes").alias("codes"),
     )
-    venc.write.mode("overwrite").partitionBy("cell").parquet(
-        f"{path}/cells"
-    )
-    spark = vectors.sparkSession
-    spark.createDataFrame(
-        [(coarse, codebooks)],
-        "coarse array<array<double>>, "
-        "codebooks array<array<array<double>>>",
-    ).repartition(1).write.mode("overwrite").parquet(f"{path}/layers")
+
+
+def _layers(spark, path: str):
+    """(coarse, codebooks) stored with an IVFPQ index."""
+    row = store.read(spark, path, "layers").collect()[0]
+    coarse = [[float(x) for x in c] for c in row["coarse"]]
+    codebooks = [
+        [[float(x) for x in cent] for cent in sub]
+        for sub in row["codebooks"]
+    ]
+    return coarse, codebooks
 
 
 def ann_ivfpq_topk_indexed(
@@ -636,76 +620,13 @@ def ann_ivfpq_topk_indexed(
     ann_ivf_topk_indexed discipline), and scores codes against
     broadcast residual LUTs. Results are identical to
     ``ann_ivfpq_topk`` with the same layers."""
-    row = spark.read.parquet(f"{path}/layers").collect()[0]
-    coarse = [[float(x) for x in c] for c in row["coarse"]]
-    codebooks = [
-        [[float(x) for x in cent] for cent in sub]
-        for sub in row["codebooks"]
-    ]
-    m = len(codebooks)
-    nc = len(coarse)
-    coarse_lit = F.array(
-        *[F.array(*[F.lit(float(x)) for x in c]) for c in coarse]
-    )
-    probes = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(nc - 1)),
-                lambda i: _sub_d2(
-                    F.col(vec_col),
-                    F.element_at(coarse_lit, (i + 1).cast("int")),
-                ),
-            )
-        ).alias("cell", "_cd"),
-    )
-    wp = Window.partitionBy("query_id").orderBy("_cd", "cell")
-    probed = (
-        probes.withColumn("_pr", F.row_number().over(wp))
-        .filter(F.col("_pr") <= int(n_probe))
-        .select(
-            "query_id",
-            F.col("cell").cast("int").alias("cell"),
-            F.zip_with(
-                F.col("_qv"),
-                F.element_at(coarse_lit, (F.col("cell") + 1).cast("int")),
-                lambda x, y: x.cast("double") - y,
-            ).alias("_qres"),
-        )
-        .select(
-            "query_id", "cell",
-            query_lut_expr(F.col("_qres"), codebooks).alias("_lut"),
-        )
-    )
+    coarse, codebooks = _layers(spark, path)
+    probed = _probe_luts(queries, coarse, codebooks, n_probe, id_col, vec_col)
     cells = [
         r["cell"] for r in probed.select("cell").distinct().collect()
     ]
-    venc = spark.read.parquet(f"{path}/cells").filter(
-        F.col("cell").isin(cells)
-    ).select("neighbor_id", F.col("cell").cast("int").alias("cell"),
-             F.col("codes").alias("_codes"))
-    score = F.round(
-        F.aggregate(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            F.lit(0.0),
-            lambda acc, j: acc
-            + F.element_at(
-                F.element_at(F.col("_lut"), (j + 1).cast("int")),
-                (F.element_at(F.col("_codes"), (j + 1).cast("int")) + 1)
-                .cast("int"),
-            ),
-        ),
-        6,
-    )
-    w = Window.partitionBy("query_id").orderBy("adc_d2", "neighbor_id")
-    return (
-        venc.join(F.broadcast(probed), "cell")
-        .withColumn("adc_d2", score)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= int(k))
-        .select("query_id", "neighbor_id", "adc_d2", "rank")
-    )
+    venc = store.read(spark, path, "cells").filter(F.col("cell").isin(cells))
+    return _adc_topk(venc, probed, len(codebooks), k, "cell")
 
 
 def append_to_ivfpq_index(
@@ -717,23 +638,17 @@ def append_to_ivfpq_index(
     """Day-2 ingest for the persisted IVFPQ index: encode a NEW batch
     with the index's OWN stored layers (never retrain on append —
     codes from different codebooks cannot share an ADC scan) and
-    append the cell-partitioned code rows. The encode is one Arrow
-    projection over the batch; existing cells' files are untouched
-    (parquet append), so ingest cost scales with the batch, not the
-    index — the append_to_minhash_index discipline."""
-    spark = vectors.sparkSession
-    row = spark.read.parquet(f"{path}/layers").collect()[0]
-    coarse = [[float(x) for x in c] for c in row["coarse"]]
-    codebooks = [
-        [[float(x) for x in cent] for cent in sub]
-        for sub in row["codebooks"]
-    ]
-    venc = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        _ivfpq_arrow(coarse, codebooks)(F.col(vec_col)).alias("_s"),
-    ).select(
-        "neighbor_id",
-        F.col("_s.cell").alias("cell"),
-        F.col("_s.codes").alias("codes"),
+    append the cell-partitioned code rows as one store batch. The
+    encode is one Arrow projection over the batch; existing cells'
+    files are untouched, so ingest cost scales with the batch, not the
+    index — the append_to_minhash_index discipline. A retried append
+    of the same batch is a no-op; ids another batch already committed
+    raise ``ValueError``."""
+    coarse, codebooks = _layers(vectors.sparkSession, path)
+    store.append(
+        path,
+        IVFPQ_INDEX,
+        vectors,
+        {"cells": _encode(vectors, coarse, codebooks, id_col, vec_col)},
+        id_col,
     )
-    venc.write.mode("append").partitionBy("cell").parquet(f"{path}/cells")

@@ -1,4 +1,6 @@
-"""Dump .explain("formatted") for named queries to plans/<tag>/<query>_<suffix>.txt.
+"""Dump .explain("formatted") for named queries to
+plans/<tag>/<query>_<suffix>.txt under the checkout this script lives
+in (TREE_DIR only picks the code that is explained).
 
     python scripts/dump_plans.py TREE_DIR TAG SUFFIX QUERY [QUERY ...]
 
@@ -10,6 +12,9 @@ from __future__ import annotations
 
 import os
 import sys
+
+# resolved before main() changes directory into TREE_DIR
+_CHECKOUT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> None:
@@ -30,7 +35,7 @@ def main() -> None:
 
     import __spark_entry__ as E
 
-    out_dir = os.path.join("/root/repo", "plans", tag)
+    out_dir = os.path.join(_CHECKOUT, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
     qs = E.queries()
     for name in names:

@@ -143,11 +143,11 @@ def test_ingest_day1_states_stay_legal(spark, tmp_path):
         write_minhash_index,
     )
 
-    # never-written index: PATH_NOT_FOUND -> empty result
+    # never-written index (missing path) -> empty result
     missing = str(tmp_path / "never_written")
     assert ingest_near_dups(spark, missing, _batch(spark)).count() == 0
-    # committed EMPTY index (zero-row corpus writes only _SUCCESS):
-    # UNABLE_TO_INFER_SCHEMA with the commit marker -> empty result
+    # committed EMPTY index (a zero-row corpus: a manifest whose
+    # batches hold no rows) -> empty result
     empty_idx = str(tmp_path / "empty_idx")
     write_minhash_index(
         spark.createDataFrame([], "id long, text string"), empty_idx
@@ -156,17 +156,15 @@ def test_ingest_day1_states_stay_legal(spark, tmp_path):
 
 
 def test_ingest_corrupt_index_propagates(spark, tmp_path):
-    """A bands directory that exists but was never committed (no
-    _SUCCESS — the half-written/corrupt state) must RAISE, not be
+    """A bands directory that exists but was never committed (no store
+    manifest — the half-written/corrupt state) must RAISE, not be
     treated as day-1 empty: swallowing it would silently admit every
     batch document as non-duplicate (ADVICE r5)."""
-    from pyspark.errors import AnalysisException
-
     from gpd_lite_toolbox_spark.text.dedup import ingest_near_dups
 
     corrupt = tmp_path / "corrupt_idx"
     (corrupt / "bands").mkdir(parents=True)
-    with pytest.raises(AnalysisException):
+    with pytest.raises(FileNotFoundError, match="no manifest"):
         ingest_near_dups(spark, str(corrupt), _batch(spark))
 
 
@@ -176,13 +174,13 @@ def test_ingest_corrupt_index_propagates(spark, tmp_path):
 
 
 def test_ivf_corrupt_tombstones_propagate(spark, tmp_path):
-    """A tombstones directory that exists but is unreadable must RAISE
-    from the probe path — 'no deletes yet' there would resurrect
-    logically deleted vectors."""
-    from pyspark.errors import AnalysisException
-
+    """A committed tombstone file that cannot be read must RAISE from
+    the probe path — 'no deletes' there would resurrect logically
+    deleted vectors. A tombstones directory no manifest lists (a
+    delete that never committed) is ignored."""
     from gpd_lite_toolbox_spark.vector.ann import (
         ann_ivf_topk_indexed,
+        delete_from_ivf_index,
         write_ivf_index,
     )
     from gpd_lite_toolbox_spark.vector.pq import default_coarse_centroids
@@ -192,10 +190,32 @@ def test_ivf_corrupt_tombstones_propagate(spark, tmp_path):
     pts = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
     path = str(tmp_path / "idx")
     write_ivf_index(pts, path, dims=64, centroids=seed)
-    (tmp_path / "idx" / "tombstones").mkdir()  # exists, no parquet
     queries = pts.limit(1)
-    with pytest.raises(AnalysisException):
-        ann_ivf_topk_indexed(spark, path, queries, k=2, dims=64).collect()
+
+    def hits():
+        return {
+            r.neighbor_id
+            for r in ann_ivf_topk_indexed(
+                spark, path, queries, k=3, dims=64
+            ).collect()
+        }
+
+    stray = str(tmp_path / "idx" / "tombstones" / "_b=uncommitted")
+    spark.createDataFrame([(0,)], "neighbor_id long").write.parquet(stray)
+    assert hits() == {0, 1, 2}
+
+    delete_from_ivf_index(spark, path, [1])
+    assert hits() == {0, 2}
+    committed = [
+        f
+        for f in (tmp_path / "idx" / "tombstones").rglob("*.parquet")
+        if "_b=uncommitted" not in str(f)
+    ]
+    assert committed
+    for f in committed:
+        f.write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        hits()
 
 
 def test_warc_corrupt_dir_propagates_but_missing_is_empty(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""Round-6 ADVICE regression pins: Hadoop-FS _SUCCESS resolution,
+"""Round-6 ADVICE regression pins: Hadoop-FS store manifest resolution,
 applicationId cache keying, the widen guard on pair stats, and the
 engine-stable day bucketing / feature scaling already covered by the
 lr/event-trend parity gates."""
@@ -8,29 +8,38 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 
-def test_success_marker_resolves_through_hadoop_fs(spark, tmp_path):
-    """success_marker_exists must answer through Hadoop's FileSystem
-    API (scheme-aware), not bare os.path: true for a committed write,
-    false for a missing dir and for a dir without the marker, and
-    identical under an explicit file: URI."""
-    from gpd_lite_toolbox_spark.fs import success_marker_exists
+def test_manifest_resolves_through_hadoop_fs(spark, tmp_path):
+    """The store manifest must be found through Hadoop's FileSystem
+    API (scheme-aware), not bare os.path: a store committed through an
+    explicit file: URI reads back through that URI and the bare path;
+    a missing path is never written; a directory without a manifest
+    is not a committed store."""
+    import os
 
+    import pytest
+
+    from gpd_lite_toolbox_spark import store
+
+    family = {"rows": store.Part()}
     d = str(tmp_path / "committed")
-    spark.range(3).write.parquet(d)
-    assert success_marker_exists(spark, d)
-    assert success_marker_exists(spark, "file:" + d)
-    assert not success_marker_exists(spark, str(tmp_path / "missing"))
-    bare = tmp_path / "nomarker"
-    bare.mkdir()
-    assert not success_marker_exists(spark, str(bare))
+    store.write("file:" + d, family, {"rows": spark.range(3)})
+    assert "v0000000001.json" in os.listdir(f"{d}/_manifest")
+    assert store.read(spark, "file:" + d, "rows").count() == 3
+    assert store.read(spark, d, "rows").count() == 3
+    missing = "file:" + str(tmp_path / "missing")
+    assert store.read(spark, missing, "rows", missing_ok=True) is None
+    bare = tmp_path / "nomanifest"
+    (bare / "rows").mkdir(parents=True)
+    with pytest.raises(FileNotFoundError, match="no manifest"):
+        store.read(spark, "file:" + str(bare), "rows")
 
 
 def test_committed_empty_remote_style_index_returns_no_matches(
     spark, tmp_path
 ):
     """The ingest day-1 empty-index path accepts a committed EMPTY
-    index via the FS-resolved marker (an empty corpus writes only
-    _SUCCESS under partitionBy) — including when addressed through an
+    index via the FS-resolved manifest (an empty corpus commits
+    batches that hold no rows) — including when addressed through an
     explicit file: URI, the local stand-in for a remote scheme."""
     from gpd_lite_toolbox_spark.text.dedup import (
         ingest_near_dups,

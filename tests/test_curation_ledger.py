@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from gpd_lite_toolbox_spark.text.pipeline import curation_ledger
+from tests.util import replay_every_micro_batch
 
 _GOOD = (
     "the quick brown fox jumps over the lazy dog and then walks home "
@@ -118,3 +119,28 @@ def test_ledger_kept_docs_pass_every_gate(spark, sf_dir):
         .count()
     )
     assert dup == 0
+
+
+def test_streaming_ledger_is_idempotent_under_replay(
+    spark, tmp_path, monkeypatch
+):
+    """Each micro-batch run twice with the same id (foreachBatch is
+    at-least-once) leaves the same ledger rows as one run."""
+    from gpd_lite_toolbox_spark.streaming import grid_stream as G
+    from gpd_lite_toolbox_spark.text.pipeline import (
+        write_curation_flags_index,
+    )
+    corpus = _crafted(spark)
+    flags, src = str(tmp_path / "flags"), str(tmp_path / "src")
+    write_curation_flags_index(corpus, flags)
+    corpus.repartition(2).write.parquet(src)
+
+    def run():
+        out = G.run_streaming_curation_ledger(spark, flags, src)
+        return sorted((r.id, r.status) for r in out.collect())
+
+    once = run()
+    replayed = replay_every_micro_batch(monkeypatch)
+    assert run() == once
+    assert len(replayed) == 2  # the ledger runs through _run_foreach_batch
+    assert len(once) == 7

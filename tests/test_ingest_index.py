@@ -14,6 +14,7 @@ from gpd_lite_toolbox_spark.text.dedup import (
     minhash_lsh_pairs,
     write_minhash_index,
 )
+from tests.util import replay_every_micro_batch
 
 
 def _corpus(spark, sf_dir):
@@ -260,3 +261,40 @@ def test_widen_semantics(spark, tmp_path):
     ).parquet(d)
     stream = spark.readStream.schema("id long, text string").parquet(d)
     assert widen(stream) is stream
+
+
+def test_streaming_ingest_admit_is_idempotent_under_replay(
+    spark, tmp_path, monkeypatch
+):
+    """A replayed micro-batch rewrites its own output and re-admits
+    nothing: the replayed run's rows equal a single run's."""
+    from gpd_lite_toolbox_spark.streaming.grid_stream import (
+        run_streaming_ingest_near_dups,
+    )
+
+    base = (
+        "a replayed micro batch must neither duplicate its output rows "
+        "nor admit its documents to the persisted index a second time"
+    )
+    idx_rows = [(i, f"indexed row {i} with its own words") for i in (1, 2)]
+    bdir = str(tmp_path / "streamdocs")
+    for row in ((100, base), (200, base + " zq extra")):
+        spark.createDataFrame([row], "id long, text string").coalesce(
+            1
+        ).write.mode("append").parquet(bdir)
+
+    def run(name):
+        path = str(tmp_path / name)
+        write_minhash_index(
+            spark.createDataFrame(idx_rows, "id long, text string"), path
+        )
+        out = run_streaming_ingest_near_dups(
+            spark, path, bdir, threshold=0.5, admit=True
+        )
+        return sorted((r.id_a, r.id_b, r.jaccard) for r in out.collect())
+
+    once = run("once")
+    replayed = replay_every_micro_batch(monkeypatch)
+    assert run("replayed") == once
+    assert len(replayed) == 2
+    assert [(a, b) for a, b, _ in once] == [(100, 200)]

@@ -110,10 +110,9 @@ def test_ivf_delete_filters_probes_and_compact_rewrites(spark, sf_dir, tmp_path)
 
 
 def test_ivf_compact_removes_emptied_cells(spark, tmp_path):
-    """A cell whose members ALL die must disappear from disk — dynamic
-    partition overwrite alone would leave its stale files."""
-    import os
-
+    """A cell whose members ALL die must disappear: from the committed
+    cells and, once compaction's manifest is published, from disk."""
+    from gpd_lite_toolbox_spark import store
     from gpd_lite_toolbox_spark.vector.ann import (
         compact_ivf_index,
         delete_from_ivf_index,
@@ -128,12 +127,14 @@ def test_ivf_compact_removes_emptied_cells(spark, tmp_path):
     pts = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
     path = str(tmp_path / "idx")
     write_ivf_index(pts, path, dims=64, centroids=seed)
-    assert os.path.isdir(f"{path}/cells/cell=1")
+    cells = tmp_path / "idx" / "cells"
+    assert list(cells.glob("_b=*/cell=1/*.parquet"))
     delete_from_ivf_index(spark, path, [10, 11, 12])
     compact_ivf_index(spark, path)
-    assert not os.path.isdir(f"{path}/cells/cell=1")
-    kept = spark.read.parquet(f"{path}/cells")
+    assert not list(cells.glob("_b=*/cell=1"))
+    kept = store.read(spark, path, "cells")
     assert {r.neighbor_id for r in kept.collect()} == {0, 1, 2}
+    assert {r.cell for r in kept.collect()} == {0}
 
 
 def test_ivf_compact_leaves_session_conf_untouched(spark, tmp_path):

@@ -1,6 +1,6 @@
 """Shared test helpers: the driver-style Spark-vs-DuckDB comparison,
-a tiny near-duplicate corpus and the repo source walk the structural
-guards share."""
+a tiny near-duplicate corpus, the repo source walk the structural
+guards share and a foreachBatch replay."""
 
 from __future__ import annotations
 
@@ -87,3 +87,23 @@ def repo_sources():
         if rel.parts[0] == "plans" or any(p.startswith(".") for p in rel.parts):
             continue
         yield rel.as_posix(), path.read_text(encoding="utf-8")
+
+
+def replay_every_micro_batch(monkeypatch) -> list:
+    """foreachBatch is at-least-once: run each micro-batch function
+    twice with the same batch id, as a restarted query would. Returns
+    the ids of the replayed micro-batches."""
+    from gpd_lite_toolbox_spark.streaming import grid_stream as G
+
+    real, replayed = G._run_foreach_batch, []
+
+    def replaying(stream, fn):
+        def twice(mb, bid):
+            fn(mb, bid)
+            fn(mb, bid)
+            replayed.append(bid)
+
+        real(stream, twice)
+
+    monkeypatch.setattr(G, "_run_foreach_batch", replaying)
+    return replayed
