@@ -773,7 +773,6 @@ def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         k=10,
         n_probe=N_PROBE,
-        dims=64,
         centroids=default_coarse_centroids(),
     )
 
@@ -3528,9 +3527,7 @@ def _q_ann_ivf_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
     FX.register_base_tables(s, sf_dir)
     emb = s.table("embeddings")
     path = os.path.join(tempfile.mkdtemp(prefix="spark_graft_ivf_"), "idx")
-    write_ivf_index(
-        emb, path, dims=64, centroids=default_coarse_centroids()
-    )
+    write_ivf_index(emb, path, centroids=default_coarse_centroids())
     delete_from_ivf_index(
         s, path, emb.filter(F.col("vec_id") % 25 == 0).select("vec_id")
     )
@@ -3541,13 +3538,11 @@ def _q_ann_ivf_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
     before = {
         (r.query_id, r.neighbor_id, r.cosine, r.rank)
         for r in ann_ivf_topk_indexed(
-            s, path, queries, k=10, n_probe=N_PROBE, dims=64
+            s, path, queries, k=10, n_probe=N_PROBE
         ).collect()
     }
     compact_ivf_index(s, path)
-    after = ann_ivf_topk_indexed(
-        s, path, queries, k=10, n_probe=N_PROBE, dims=64
-    )
+    after = ann_ivf_topk_indexed(s, path, queries, k=10, n_probe=N_PROBE)
     got = {
         (r.query_id, r.neighbor_id, r.cosine, r.rank)
         for r in after.collect()

@@ -1,12 +1,12 @@
 """The one module that writes and reads the package's on-disk stores.
 
-Five families keep state between runs: the minhash index
+Four families keep state between runs: the minhash index
 (``text/dedup.py``), the corpus substrates (``text/substrate.py``),
-the curation flags index (``text/pipeline.py``), the IVF index
-(``vector/ann.py``) and the IVF-PQ index (``vector/pq.py``). Each
-family is a description, a dict of part name -> ``Part``: the part's
-partition columns, the id column that must be unique across batches,
-and whether the part holds tombstones. The builders stay in their
+the curation flags index (``text/pipeline.py``) and the IVF index
+(``vector/ann.py``, raw-vector or PQ-coded cells). Each family is a
+description, a dict of part name -> ``Part``: the part's partition
+columns, the id column that must be unique across batches, and
+whether the part holds tombstones. The builders stay in their
 modules; only this module touches the files (guarded by
 ``tests/test_store.py``).
 
@@ -44,9 +44,15 @@ batch) 0.14 s and 0.37 s, within 9.1 s and 4.7 s.
 A manifest lists batch directories, not single files: Spark checks
 and lists every path it is handed, and on the local filesystem that
 cost 7.5-9.5 s for the 2048 files of an sf0.1 minhash ``bands`` part
-written by 32 tasks, against 0.12-0.17 s for its one directory. Compaction drops some
-partitions of committed batches; the manifest records them and the
-reader filters them out until their files are gone.
+written by 32 tasks, against 0.12-0.17 s for its one directory.
+Compaction drops some partitions of committed batches; the manifest
+records them and the reader filters them out until their files are
+gone.
+
+A partitioned part is clustered by its partition columns before the
+write, so each partition value of a batch is one file: the sf0.1
+``bands`` part above is 64 files, one per (band, bucket), where
+written straight from the task layout of ``local[32]`` it was 2048.
 """
 
 from __future__ import annotations
@@ -154,7 +160,12 @@ def _publish(fs: _FS, old: dict | None, parts: dict, drop=()) -> None:
 
 def _write_part(df: DataFrame, target: str, partition_by) -> None:
     """The only parquet write of the store families: one part of one
-    batch, replacing what an earlier failed attempt left there."""
+    batch, replacing what an earlier failed attempt left there. A
+    partitioned part is first clustered by its partition columns, so
+    each partition value is one task's and one file, not one file per
+    task that holds it."""
+    if partition_by:
+        df = df.repartition(*partition_by)
     df.write.mode("overwrite").partitionBy(*partition_by).parquet(target)
 
 

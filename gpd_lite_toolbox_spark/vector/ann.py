@@ -10,6 +10,16 @@
   only same-bucket (or adjacent-probe) pairs are scored. At 100 TB the
   bucket join replaces the all-pairs scan; recall is tunable by
   n_planes and multi-probe.
+- ``ann_ivf_topk``: IVF — a coarse quantizer (KMeans-fit or explicit
+  centroids) splits the corpus into cells and each query scores only
+  its ``n_probe`` nearest cells.
+- The IVF index, the package's one persisted vector index:
+  ``write_ivf_index``, ``append_to_ivf_index``,
+  ``delete_from_ivf_index``, ``compact_ivf_index`` and
+  ``ann_ivf_topk_indexed``. Its cells hold raw vectors (cosine
+  search) or, when written with PQ codebooks, the residual codes of
+  ``vector/pq.py`` (ADC search); both codecs share the router, the
+  cell assignment, the partition pruning and the tombstones.
 """
 
 from __future__ import annotations
@@ -22,6 +32,14 @@ from pyspark.sql import functions as F
 
 from .. import store
 from ..cache import tracked_persist
+from .pq import (
+    _adc_topk,
+    _ivfpq_arrow,
+    _lit,
+    _nearest,
+    _sub_d2,
+    query_lut_expr,
+)
 
 
 def _as_double(col):
@@ -161,59 +179,6 @@ def _rank_topk(scored, k):
     )
 
 
-def _fit_ivf(vectors, n_centroids, id_col, vec_col, seed, max_iter, dims):
-    """(inverted, centers): the KMeans coarse quantizer over the
-    corpus — the single definition ann_ivf_topk and write_ivf_index
-    share, so the quantizer setup cannot diverge between the in-memory
-    and persisted index paths."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    v = vectors.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv")
-    )
-    feat = v.withColumn("features", array_to_vector("nv"))
-    model = KMeans(
-        k=n_centroids, seed=seed, maxIter=max_iter, featuresCol="features"
-    ).fit(feat)
-    inverted = (
-        model.transform(feat)
-        .select("neighbor_id", "nv", F.col("prediction").alias("cell"))
-        .withColumn("nn", _norm_col(F.col("nv"), dims))
-    )
-    centers = vectors.sparkSession.createDataFrame(
-        [
-            (i, [float(x) for x in c])
-            for i, c in enumerate(model.clusterCenters())
-        ],
-        "cell int, cv array<double>",
-    )
-    return inverted, centers
-
-
-def _route_probes(q, centers, n_probe):
-    """Each query's n_probe nearest centroids (centers broadcast;
-    |Q| x n_centroids fold, per-element cast so raw float query
-    vectors match the double centers)."""
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("qv"),
-            F.col("cv"),
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.col("_d2"), F.col("cell"))
-    return (
-        q.crossJoin(F.broadcast(centers))
-        .withColumn("_d2", d2)
-        .withColumn("_pr", F.row_number().over(wq))
-        .filter(F.col("_pr") <= n_probe)
-        .select("query_id", "qv", "qn", "cell")
-    )
-
-
 def cosine_topk(
     queries: DataFrame,
     vectors: DataFrame,
@@ -262,15 +227,32 @@ def cosine_topk(
     return _rank_topk(_score_pairs(v.crossJoin(q), dims), k)
 
 
-def _coarse_cells_arrow(coarse):
-    """Arrow kernel for explicit-quantizer cell assignment: argmin over
-    full-dim L2² to the given centroid list, SEQUENTIAL per-dim
-    accumulation and first-min ties (np.argmin) — the exact op order of
-    the _route_probes fold and of the DuckDB replay
-    (oracles.ANN_IVF_TOPK), so all three forms are bit-identical."""
-    from pyspark.sql.functions import pandas_udf
+def _fit_ivf(vectors, n_centroids, vec_col, seed, max_iter):
+    """The KMeans coarse quantizer over the corpus, as a list of
+    centroids: the one fit ``ann_ivf_topk``, ``write_ivf_index`` and
+    ``fit_ivfpq`` share. Cells are assigned by ``_cells``, never by
+    the model, so a fitted and an explicit quantizer assign alike and
+    an append agrees with the write it extends."""
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
 
-    from .pq import _nearest
+    feat = vectors.select(array_to_vector(vec_col).alias("features"))
+    model = KMeans(k=n_centroids, seed=seed, maxIter=max_iter).fit(feat)
+    return _floats(model.clusterCenters())
+
+
+def _floats(x) -> list:
+    """Centroids or codebooks as nested lists of Python floats."""
+    return np.asarray(x, dtype=np.float64).tolist()
+
+
+def _coarse_cells_arrow(coarse):
+    """Arrow kernel of raw-codec cell assignment: argmin over full-dim
+    L2² to the centroid list, SEQUENTIAL per-dim accumulation and
+    first-min ties (``_nearest``) — the exact op order of the
+    ``_route`` fold and of the DuckDB replay (oracles.ANN_IVF_TOPK),
+    so all three forms are bit-identical."""
+    from pyspark.sql.functions import pandas_udf
 
     C = np.asarray(coarse, dtype=np.float64)
 
@@ -286,25 +268,79 @@ def _coarse_cells_arrow(coarse):
     return cells.asNondeterministic()
 
 
-def _ivf_cells(
-    vectors, n_centroids, id_col, vec_col, seed, max_iter, dims, centroids
-):
-    """(inverted, centers) of an IVF quantizer: the cell-assigned
-    corpus and the (cell, cv) centroid table. Explicit ``centroids``
-    assign cells with a map-only Arrow argmin; otherwise the KMeans
-    fit of ``_fit_ivf``."""
-    if centroids is None:
-        return _fit_ivf(
-            vectors, n_centroids, id_col, vec_col, seed, max_iter, dims
+def _cells(vectors, centroids, codebooks, id_col, vec_col) -> DataFrame:
+    """The cell rows of an IVF index, every vector assigned by the
+    ``_nearest`` argmin. The codec follows ``codebooks``: without
+    them (neighbor_id, nv, nn, cell), the raw vectors and their norms;
+    with them (neighbor_id, cell, codes), the PQ codes of each
+    vector's residual against its cell's centroid, in one Arrow pass."""
+    v = vectors.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv")
+    )
+    if codebooks is not None:
+        s = _ivfpq_arrow(centroids, codebooks)(F.col("nv"))
+        return v.select("neighbor_id", s.alias("_s")).select(
+            "neighbor_id", "_s.cell", "_s.codes"
         )
-    inverted = _corpus_side(vectors, id_col, vec_col, dims).withColumn(
-        "cell", _coarse_cells_arrow(centroids)(F.col("nv"))
+    return v.withColumn(
+        "nn", _norm_col(F.col("nv"), len(centroids[0]))
+    ).withColumn("cell", _coarse_cells_arrow(centroids)(F.col("nv")))
+
+
+def _route(q, centroids, n_probe):
+    """``q``'s rows, once per each query's ``n_probe`` nearest cells:
+    L2² from ``qv`` to every centroid (a left-to-right fold over a
+    literal, per-element cast so float queries match the double
+    centroids), ties broken by cell. The one router of the in-memory
+    and indexed IVF searches for both codecs, in the order the DuckDB
+    replays unroll (oracles.ANN_IVF_TOPK, ANN_IVFPQ_TOPK)."""
+    c = _lit(centroids)
+    d2 = F.transform(
+        F.sequence(F.lit(0), F.lit(len(centroids) - 1)),
+        lambda i: _sub_d2(F.col("qv"), F.element_at(c, i + 1)),
     )
-    centers = vectors.sparkSession.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cell int, cv array<double>",
+    w = Window.partitionBy("query_id").orderBy("_d2", "cell")
+    return (
+        q.select("*", F.posexplode(d2).alias("cell", "_d2"))
+        .withColumn("_pr", F.row_number().over(w))
+        .filter(F.col("_pr") <= int(n_probe))
+        .drop("_d2", "_pr")
     )
-    return inverted, centers
+
+
+def _probes(queries, centroids, codebooks, n_probe, id_col, vec_col):
+    """(query_id, cell, ...): each query routed to its probed cells,
+    carrying what the codec scores with — the query vector and norm
+    (raw), or the LUT of the query's residual against the cell's
+    centroid (PQ)."""
+    if codebooks is None:
+        q = _query_side(queries, id_col, vec_col, len(centroids[0]))
+        return _route(q, centroids, n_probe)
+    q = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+    )
+    residual = F.zip_with(
+        F.col("qv"),
+        F.element_at(_lit(centroids), F.col("cell") + 1),
+        lambda x, y: x.cast("double") - y,
+    )
+    return (
+        _route(q, centroids, n_probe)
+        .select("query_id", "cell", residual.alias("_qres"))
+        .select(
+            "query_id", "cell",
+            query_lut_expr(F.col("_qres"), codebooks).alias("_lut"),
+        )
+    )
+
+
+def _search(probes, cells, codebooks, k, dims) -> DataFrame:
+    """Top-k over the probed cells: (query_id, neighbor_id, cosine,
+    rank) for the raw codec, (query_id, neighbor_id, adc_d2, rank)
+    for PQ."""
+    if codebooks is None:
+        return _rank_topk(_score_pairs(probes.join(cells, "cell"), dims), k)
+    return _adc_topk(cells, probes, len(codebooks), k, "cell")
 
 
 def ann_ivf_topk(
@@ -317,7 +353,6 @@ def ann_ivf_topk(
     vec_col: str = "embedding",
     seed: int = 42,
     max_iter: int = 5,
-    dims: int | None = None,
     centroids: list | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: a KMeans coarse quantizer
@@ -331,32 +366,33 @@ def ann_ivf_topk(
 
     Pass ``centroids`` (a list of centroid vectors, e.g.
     ``vector.pq.default_coarse_centroids()``) to skip the KMeans fit
-    and use an EXPLICIT quantizer: cell assignment becomes a map-only
-    Arrow argmin, the whole route+score path is deterministic, and the
-    result is hash-gateable in DuckDB (oracles.ANN_IVF_TOPK) — the
-    same recipe that gates ann_ivfpq_topk. ``n_centroids`` is ignored
-    in that case.
+    and use an EXPLICIT quantizer: the whole route+score path is
+    deterministic and hash-gateable in DuckDB (oracles.ANN_IVF_TOPK) —
+    the same recipe that gates ann_ivfpq_topk. ``n_centroids`` is
+    ignored in that case. Either way cells are assigned by a map-only
+    Arrow argmin (``_cells``), and the vector length is the centroid
+    length, so norms and dot products run as the Arrow kernels.
 
-    The 100 TB shape: the centroid table is tiny (broadcast to both
-    sides), the corpus is shuffled ONCE by cell id — in a warehouse this
-    is the persisted/bucketed inverted file, amortized across query
-    batches — and per-query scoring cost is ~|corpus| * n_probe /
-    n_centroids instead of |corpus|. Recall is tunable by n_probe
-    (n_probe = n_centroids degenerates to exact brute force).
+    The 100 TB shape: the centroid list is tiny (a literal on both
+    sides), the corpus is shuffled ONCE by cell id — persisted, that
+    is ``write_ivf_index``, amortized across query batches — and
+    per-query scoring cost is ~|corpus| * n_probe / n_centroids
+    instead of |corpus|. Recall is tunable by n_probe (n_probe =
+    n_centroids degenerates to exact brute force).
     """
-    inverted, centers = _ivf_cells(
-        vectors, n_centroids, id_col, vec_col, seed, max_iter, dims, centroids
-    )
-    q = _query_side(queries, id_col, vec_col, dims)
-    probes = _route_probes(q, centers, n_probe)
-    return _rank_topk(_score_pairs(probes.join(inverted, "cell"), dims), k)
+    if centroids is None:
+        centroids = _fit_ivf(vectors, n_centroids, vec_col, seed, max_iter)
+    probes = _probes(queries, centroids, None, n_probe, id_col, vec_col)
+    cells = _cells(vectors, centroids, None, id_col, vec_col)
+    return _search(probes, cells, None, k, len(centroids[0]))
 
 
-# the IVF index's store description: vectors by cell, the centroid
-# table, and the tombstones of merge-on-read deletes
+# the IVF index's store description: the cell rows (raw vectors or PQ
+# codes), the one-row quantizer, and the tombstones of merge-on-read
+# deletes
 IVF_INDEX = {
     "cells": store.Part(("cell",), id_col="neighbor_id"),
-    "centroids": store.Part(),
+    "quantizer": store.Part(),
     "tombstones": store.Part(tombstones=True),
 }
 
@@ -369,33 +405,82 @@ def write_ivf_index(
     vec_col: str = "embedding",
     seed: int = 42,
     max_iter: int = 5,
-    dims: int | None = None,
     centroids: list | None = None,
+    codebooks: list | None = None,
 ) -> None:
     """Persist the IVF inverted file: the cell-assigned corpus written
-    as parquet PARTITIONED BY cell (plus the centroid table alongside),
-    so the quantizer fit and the corpus shuffle are paid ONCE and every
-    later query batch reads only its probed cells via partition pruning
-    — the disk-layout analogue of the in-memory inverted list, and the
-    amortization a real 100 TB serving path needs (the per-batch
-    KMeans refit in ``ann_ivf_topk`` is the exploratory form).
+    as parquet PARTITIONED BY cell, with its quantizer alongside, so
+    the quantizer fit and the corpus shuffle are paid ONCE and every
+    later query batch reads only its probed cells via partition
+    pruning — the disk-layout analogue of the in-memory inverted list
+    (the per-batch KMeans refit in ``ann_ivf_topk`` is the exploratory
+    form).
 
     ``centroids`` (explicit quantizer, same contract as
     ``ann_ivf_topk``) skips the KMeans fit and makes every later read
     of the index deterministic end-to-end — the hash-gateable form.
 
-    A ``store.py`` store: part ``cells`` with (neighbor_id, nv, nn)
-    partitioned by cell, part ``centroids`` with (cell, cv), and the
+    The codec follows the inputs: without ``codebooks`` the cells hold
+    the raw vectors (cosine search, as ``ann_ivf_topk``); with them
+    (e.g. ``default_codebooks()`` or ``fit_ivfpq``'s) they hold the PQ
+    codes of each vector's residual, m small codes instead of the
+    float vector (ADC search, as ``ann_ivfpq_topk``). Residual codes
+    are relative to the centroids they were trained against, so
+    ``codebooks`` without ``centroids`` raises ``ValueError``.
+
+    A ``store.py`` store: part ``cells`` partitioned by cell, part
+    ``quantizer`` with one row (centroids, codebooks — NULL for the
+    raw codec), rewritten whole by every write, and the
     ``tombstones`` part that ``delete_from_ivf_index`` appends to.
     """
-    inverted, centers = _ivf_cells(
-        vectors, n_centroids, id_col, vec_col, seed, max_iter, dims, centroids
+    if codebooks is not None and centroids is None:
+        raise ValueError(
+            "codebooks code residuals against given centroids: pass "
+            "the centroids they were trained with"
+        )
+    if centroids is None:
+        centroids = _fit_ivf(vectors, n_centroids, vec_col, seed, max_iter)
+    centroids = _floats(centroids)
+    codebooks = None if codebooks is None else _floats(codebooks)
+    quantizer = vectors.sparkSession.createDataFrame(
+        [(centroids, codebooks)],
+        "centroids array<array<double>>, "
+        "codebooks array<array<array<double>>>",
     )
     store.write(
         path,
         IVF_INDEX,
-        {"cells": inverted, "centroids": centers.repartition(1)},
+        {
+            "cells": _cells(vectors, centroids, codebooks, id_col, vec_col),
+            "quantizer": quantizer.repartition(1),
+        },
     )
+
+
+def _quantizer(spark, path: str):
+    """(centroids, codebooks) stored with an IVF index; codebooks is
+    None for the raw codec."""
+    row = store.read(spark, path, "quantizer").first()
+    return row.centroids, row.codebooks
+
+
+def append_to_ivf_index(
+    vectors: DataFrame,
+    path: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> None:
+    """Day-2 ingest for a persisted IVF index: assign (and, for the PQ
+    codec, encode) a NEW batch with the index's OWN stored quantizer
+    — never refit on append: cells and codes from another quantizer
+    cannot share a probe — and append the cell-partitioned rows as
+    one store batch. Existing cells' files are untouched, so ingest
+    cost scales with the batch, not the index. A retried append of
+    the same batch is a no-op; ids another batch already committed
+    raise ``ValueError``."""
+    centroids, codebooks = _quantizer(vectors.sparkSession, path)
+    cells = _cells(vectors, centroids, codebooks, id_col, vec_col)
+    store.append(path, IVF_INDEX, vectors, {"cells": cells}, id_col)
 
 
 def delete_from_ivf_index(spark, path: str, ids) -> None:
@@ -457,7 +542,6 @@ def ann_ivf_topk_indexed(
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dims: int | None = None,
 ) -> DataFrame:
     """Top-k search against a persisted IVF index (``write_ivf_index``):
     routes each query to its ``n_probe`` nearest stored centroids, then
@@ -466,13 +550,15 @@ def ann_ivf_topk_indexed(
     n_centroids, never by query count) so the parquet scan shows
     ``PartitionFilters`` and reads ~n_probe/n_centroids of the data;
     a join-driven dynamic filter would depend on DPP kicking in.
-    Output schema matches cosine_topk; results are identical to
-    ``ann_ivf_topk`` run with the same quantizer."""
-    centers = store.read(spark, path, "centroids")
-    q = _query_side(queries, id_col, vec_col, dims)
-    probes = _route_probes(q, centers, n_probe)
-    # no persist: the centroid routing is |Q| x n_centroids and cheap
-    # to recompute for the cells collect — a persist here would leak
+
+    The stored codec picks the score: ``cosine`` (schema of
+    cosine_topk) for raw vectors, ``adc_d2`` (schema of ann_pq_topk)
+    for PQ codes. Results are identical to ``ann_ivf_topk`` or
+    ``ann_ivfpq_topk`` run with the same quantizer."""
+    centroids, codebooks = _quantizer(spark, path)
+    probes = _probes(queries, centroids, codebooks, n_probe, id_col, vec_col)
+    # no persist: the routing is |Q| x n_centroids and cheap to
+    # recompute for the cells collect — a persist here would leak
     # cached partitions for the session lifetime in a serving loop
     # that calls this per query batch
     cells = [r.cell for r in probes.select("cell").distinct().collect()]
@@ -489,7 +575,7 @@ def ann_ivf_topk_indexed(
             "neighbor_id",
             "left_anti",
         )
-    return _rank_topk(_score_pairs(probes.join(inverted, "cell"), dims), k)
+    return _search(probes, inverted, codebooks, k, len(centroids[0]))
 
 
 N_PLANES = 16

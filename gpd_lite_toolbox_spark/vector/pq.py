@@ -30,6 +30,13 @@ Two codebook sources, deliberately:
   iterative, not SQL-expressible). Quality is pytest-pinned: trained
   distortion strictly beats the md5 codebooks', and trained ADC
   recall@10 beats untrained on the fixture.
+
+This module holds the codec: the encode and LUT kernels, the
+in-memory searches (``ann_pq_topk``, ``ann_ivfpq_topk``) and the
+trainers (``fit_pq``, ``fit_ivfpq``). It does no I/O. The persisted
+IVF-PQ index is the IVF index of ``vector/ann.py`` written with
+``codebooks``: the same router, cell layout, appends, deletes and
+compaction as the raw-vector codec.
 """
 
 from __future__ import annotations
@@ -41,7 +48,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .. import store
 from ..cache import scoped_release, tracked_persist
 
 M_SUB = 8
@@ -412,11 +418,12 @@ def ann_ivfpq_topk(
     its ``n_probe`` nearest cells instead of the corpus.
 
     Plan shape: corpus side is one Arrow projection (cell + codes) —
-    at scale the codes table is partitioned/pruned BY cell (the
-    write_ivf_index layout applies unchanged); the query side
-    broadcasts (query, probed-cell, residual-LUT) rows — |Q|·n_probe
-    of them — and the join on ``cell`` touches only probed cells.
-    Top-k ranks across a query's probed cells together.
+    at scale these rows are persisted partitioned BY cell
+    (``write_ivf_index`` with ``codebooks``, searched by
+    ``ann_ivf_topk_indexed``); the query side broadcasts (query,
+    probed-cell, residual-LUT) rows — |Q|·n_probe of them — and the
+    join on ``cell`` touches only probed cells. Top-k ranks across a
+    query's probed cells together.
 
     With the default md5-derived coarse centroids + codebooks the
     whole path is hash-gated in DuckDB (oracles.ANN_IVFPQ_TOPK);
@@ -424,51 +431,15 @@ def ann_ivfpq_topk(
 
     Columns: ``(query_id, neighbor_id, adc_d2, rank)``.
     """
+    from .ann import _cells, _probes, _search
+
     if coarse is None:
         coarse = default_coarse_centroids()
     if codebooks is None:
         codebooks = default_codebooks()
-    venc = _encode(vectors, coarse, codebooks, id_col, vec_col)
-    probed = _probe_luts(queries, coarse, codebooks, n_probe, id_col, vec_col)
-    return _adc_topk(venc, probed, len(codebooks), k, "cell")
-
-
-def _probe_luts(queries, coarse, codebooks, n_probe, id_col, vec_col):
-    """(query_id, cell, _lut): each query's ``n_probe`` nearest coarse
-    cells (a fold over the centroids — |Q| is small) with the residual
-    LUT of the query against each probed cell's centroid."""
-    nc = len(coarse)
-    coarse_lit = _lit(coarse)
-    probes = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(nc - 1)),
-                lambda i: _sub_d2(
-                    F.col(vec_col), F.element_at(coarse_lit, (i + 1).cast("int"))
-                ),
-            )
-        ).alias("cell", "_cd"),
-    )
-    wp = Window.partitionBy("query_id").orderBy("_cd", "cell")
-    return (
-        probes.withColumn("_pr", F.row_number().over(wp))
-        .filter(F.col("_pr") <= int(n_probe))
-        .select(
-            "query_id",
-            F.col("cell").cast("int").alias("cell"),
-            F.zip_with(
-                F.col("_qv"),
-                F.element_at(coarse_lit, (F.col("cell") + 1).cast("int")),
-                lambda x, y: x.cast("double") - y,
-            ).alias("_qres"),
-        )
-        .select(
-            "query_id", "cell",
-            query_lut_expr(F.col("_qres"), codebooks).alias("_lut"),
-        )
-    )
+    probes = _probes(queries, coarse, codebooks, n_probe, id_col, vec_col)
+    cells = _cells(vectors, coarse, codebooks, id_col, vec_col)
+    return _search(probes, cells, codebooks, k, None)
 
 
 def _adc_topk(venc, luts, m, k, on=None) -> DataFrame:
@@ -510,21 +481,17 @@ def fit_ivfpq(
     seed: int = 0,
 ):
     """(coarse, codebooks) trained layers: the coarse quantizer via
-    ml.KMeans (the _fit_ivf discipline), then PQ codebooks trained on
-    the RESIDUALS — the composition the search assumes."""
-    from .ann import _fit_ivf
+    ml.KMeans (``_fit_ivf``), then PQ codebooks trained on the
+    RESIDUALS against the cells the IVF index assigns (``_cells``) —
+    the composition the search assumes."""
+    from .ann import _cells, _fit_ivf
 
-    inverted, centers = _fit_ivf(
-        vectors, n_coarse, id_col, vec_col, seed, 5, None
-    )
-    coarse_rows = {r["cell"]: r["cv"] for r in centers.collect()}
-    coarse = [coarse_rows[i] for i in range(len(coarse_rows))]
-    coarse_lit = _lit(coarse)
-    residuals = inverted.select(
+    coarse = _fit_ivf(vectors, n_coarse, vec_col, seed, 5)
+    residuals = _cells(vectors, coarse, None, id_col, vec_col).select(
         F.col("neighbor_id").alias(id_col),
         F.zip_with(
             F.col("nv"),
-            F.element_at(coarse_lit, (F.col("cell") + 1).cast("int")),
+            F.element_at(_lit(coarse), F.col("cell") + 1),
             lambda x, y: x.cast("double") - y,
         ).alias(vec_col),
     )
@@ -533,122 +500,3 @@ def fit_ivfpq(
         vec_col=vec_col, dims=dims, seed=seed,
     )
     return coarse, codebooks
-
-
-# the IVF-PQ index's store description: codes by cell, and the layers
-IVFPQ_INDEX = {
-    "cells": store.Part(("cell",), id_col="neighbor_id"),
-    "layers": store.Part(),
-}
-
-
-def write_ivfpq_index(
-    vectors: DataFrame,
-    path: str,
-    coarse=None,
-    codebooks=None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Persist the IVFPQ index: the coded corpus written as parquet
-    PARTITIONED BY cell — m small codes per vector instead of the
-    float vector, so the index is ~32x smaller than the IVF inverted
-    file AND every query batch reads only its probed cells via
-    partition pruning. The encode shuffle is paid once at write time
-    (the write_ivf_index discipline); the layers themselves persist
-    alongside so search rebinds to exactly the index's quantizers.
-
-    A ``store.py`` store: part ``cells`` with (neighbor_id, codes)
-    partitioned by cell, and part ``layers`` with one row (coarse,
-    codebooks) as nested arrays.
-    """
-    if coarse is None:
-        coarse = default_coarse_centroids()
-    if codebooks is None:
-        codebooks = default_codebooks()
-    layers = vectors.sparkSession.createDataFrame(
-        [(coarse, codebooks)],
-        "coarse array<array<double>>, "
-        "codebooks array<array<array<double>>>",
-    ).repartition(1)
-    store.write(
-        path,
-        IVFPQ_INDEX,
-        {
-            "cells": _encode(vectors, coarse, codebooks, id_col, vec_col),
-            "layers": layers,
-        },
-    )
-
-
-def _encode(vectors, coarse, codebooks, id_col, vec_col) -> DataFrame:
-    """(neighbor_id, cell, codes): ``vectors`` coded with the layers."""
-    return vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        _ivfpq_arrow(coarse, codebooks)(F.col(vec_col)).alias("_s"),
-    ).select(
-        "neighbor_id",
-        F.col("_s.cell").alias("cell"),
-        F.col("_s.codes").alias("codes"),
-    )
-
-
-def _layers(spark, path: str):
-    """(coarse, codebooks) stored with an IVFPQ index."""
-    row = store.read(spark, path, "layers").collect()[0]
-    coarse = [[float(x) for x in c] for c in row["coarse"]]
-    codebooks = [
-        [[float(x) for x in cent] for cent in sub]
-        for sub in row["codebooks"]
-    ]
-    return coarse, codebooks
-
-
-def ann_ivfpq_topk_indexed(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 10,
-    n_probe: int = N_PROBE,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Top-k ADC search against a persisted IVFPQ index: routes each
-    query to its n_probe nearest stored coarse centroids, restricts
-    the codes scan to the probed cell set with a STATIC partition
-    filter (bounded by n_cells, never query count — the
-    ann_ivf_topk_indexed discipline), and scores codes against
-    broadcast residual LUTs. Results are identical to
-    ``ann_ivfpq_topk`` with the same layers."""
-    coarse, codebooks = _layers(spark, path)
-    probed = _probe_luts(queries, coarse, codebooks, n_probe, id_col, vec_col)
-    cells = [
-        r["cell"] for r in probed.select("cell").distinct().collect()
-    ]
-    venc = store.read(spark, path, "cells").filter(F.col("cell").isin(cells))
-    return _adc_topk(venc, probed, len(codebooks), k, "cell")
-
-
-def append_to_ivfpq_index(
-    vectors: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Day-2 ingest for the persisted IVFPQ index: encode a NEW batch
-    with the index's OWN stored layers (never retrain on append —
-    codes from different codebooks cannot share an ADC scan) and
-    append the cell-partitioned code rows as one store batch. The
-    encode is one Arrow projection over the batch; existing cells'
-    files are untouched, so ingest cost scales with the batch, not the
-    index — the append_to_minhash_index discipline. A retried append
-    of the same batch is a no-op; ids another batch already committed
-    raise ``ValueError``."""
-    coarse, codebooks = _layers(vectors.sparkSession, path)
-    store.append(
-        path,
-        IVFPQ_INDEX,
-        vectors,
-        {"cells": _encode(vectors, coarse, codebooks, id_col, vec_col)},
-        id_col,
-    )

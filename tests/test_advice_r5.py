@@ -1,8 +1,8 @@
 """Regression tests for the round-5 ADVICE items: PPJoin exact-ceil
 boundary pruning, the session-keyed ngram-sets memo + release-hook
-eviction, ingest_near_dups error-class narrowing, and the
-compact_ivf_index per-write overwrite mode (the session-conf pin
-itself lives in tests/test_session11_ops.py)."""
+eviction, ingest_near_dups error-class narrowing, and unreadable
+WARC directories (the IVF tombstone and compaction pins live in
+tests/test_vector_index.py)."""
 
 import pytest
 
@@ -169,53 +169,8 @@ def test_ingest_corrupt_index_propagates(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Same defect class, swept proactively: tombstone + WARC reads
+# Same defect class, swept proactively: WARC reads
 # ---------------------------------------------------------------------------
-
-
-def test_ivf_corrupt_tombstones_propagate(spark, tmp_path):
-    """A committed tombstone file that cannot be read must RAISE from
-    the probe path — 'no deletes' there would resurrect logically
-    deleted vectors. A tombstones directory no manifest lists (a
-    delete that never committed) is ignored."""
-    from gpd_lite_toolbox_spark.vector.ann import (
-        ann_ivf_topk_indexed,
-        delete_from_ivf_index,
-        write_ivf_index,
-    )
-    from gpd_lite_toolbox_spark.vector.pq import default_coarse_centroids
-
-    seed = default_coarse_centroids()
-    rows = [(i, [float(x) + 1e-4 * i for x in seed[0]]) for i in range(3)]
-    pts = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    path = str(tmp_path / "idx")
-    write_ivf_index(pts, path, dims=64, centroids=seed)
-    queries = pts.limit(1)
-
-    def hits():
-        return {
-            r.neighbor_id
-            for r in ann_ivf_topk_indexed(
-                spark, path, queries, k=3, dims=64
-            ).collect()
-        }
-
-    stray = str(tmp_path / "idx" / "tombstones" / "_b=uncommitted")
-    spark.createDataFrame([(0,)], "neighbor_id long").write.parquet(stray)
-    assert hits() == {0, 1, 2}
-
-    delete_from_ivf_index(spark, path, [1])
-    assert hits() == {0, 2}
-    committed = [
-        f
-        for f in (tmp_path / "idx" / "tombstones").rglob("*.parquet")
-        if "_b=uncommitted" not in str(f)
-    ]
-    assert committed
-    for f in committed:
-        f.write_bytes(b"not a parquet file")
-    with pytest.raises(Exception, match="(?i)parquet"):
-        hits()
 
 
 def test_warc_corrupt_dir_propagates_but_missing_is_empty(spark, tmp_path):

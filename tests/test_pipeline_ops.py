@@ -200,33 +200,6 @@ def test_ann_ivf_recall_vs_brute(spark, sf_dir):
     assert all(q == n for q, n in r1.items()), "self-hit must be rank 1"
 
 
-def test_ivf_index_persist_prunes_and_matches_inmemory(spark, sf_dir, tmp_path):
-    """write_ivf_index + ann_ivf_topk_indexed: the persisted inverted
-    file answers identically to the in-memory IVF path (same seed =>
-    same quantizer), and the cells scan carries a static partition
-    filter so only the probed cells are read."""
-    from gpd_lite_toolbox_spark.vector.ann import (
-        ann_ivf_topk,
-        ann_ivf_topk_indexed,
-        write_ivf_index,
-    )
-
-    FX.register_base_tables(spark, sf_dir)
-    emb = spark.table("embeddings")
-    queries = emb.filter(F.col("vec_id") % 50 == 0)
-    path = str(tmp_path / "ivf")
-    write_ivf_index(emb, path)
-    indexed = ann_ivf_topk_indexed(spark, path, queries, k=5)
-    got = {(r.query_id, r.rank): r.neighbor_id for r in indexed.collect()}
-    mem = {
-        (r.query_id, r.rank): r.neighbor_id
-        for r in ann_ivf_topk(queries, emb, k=5).collect()
-    }
-    assert got == mem and len(got) > 0
-    plan = indexed._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cell" in plan
-
-
 def test_embedding_lsh_finds_planted_scaled_copies(spark, sf_dir):
     from gpd_lite_toolbox_spark.text.dedup import embedding_near_dups
 

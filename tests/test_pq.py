@@ -187,48 +187,3 @@ def test_trained_ivfpq_beats_untrained_recall(spark, emb):
     # residual PQ on trained layers recalls more than raw-vector PQ
     # at the same code budget would suggest for 2-of-8 probing
     assert r_tr >= 0.3, r_tr
-
-
-def test_indexed_ivfpq_matches_inmemory_and_prunes_partitions(
-    spark, emb, tmp_path
-):
-    from gpd_lite_toolbox_spark.vector.pq import (
-        ann_ivfpq_topk,
-        ann_ivfpq_topk_indexed,
-        write_ivfpq_index,
-    )
-
-    path = str(tmp_path / "ivfpq")
-    write_ivfpq_index(emb, path)
-    q = emb.filter(F.col("vec_id") % 50 == 0)
-    mem = ann_ivfpq_topk(q, emb, k=10)
-    idx = ann_ivfpq_topk_indexed(spark, path, q, k=10)
-    a = sorted(map(tuple, mem.collect()))
-    b = sorted(map(tuple, idx.collect()))
-    assert a == b
-    # the probed-cell restriction reaches the scan as a static
-    # PartitionFilters entry (not a post-scan filter)
-    plan = idx._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [cell" in plan.replace("\n", " "), plan[:2000]
-
-
-def test_append_to_ivfpq_index_extends_search(spark, emb, tmp_path):
-    """Append uses the index's stored layers: searching after append
-    equals indexing the union corpus in one shot."""
-    from gpd_lite_toolbox_spark.vector.pq import (
-        ann_ivfpq_topk_indexed,
-        append_to_ivfpq_index,
-        write_ivfpq_index,
-    )
-
-    half_a = emb.filter(F.col("vec_id") % 2 == 0)
-    half_b = emb.filter(F.col("vec_id") % 2 == 1)
-    p1 = str(tmp_path / "incremental")
-    p2 = str(tmp_path / "oneshot")
-    write_ivfpq_index(half_a, p1)
-    append_to_ivfpq_index(half_b, p1)
-    write_ivfpq_index(emb, p2)
-    q = emb.filter(F.col("vec_id") % 50 == 0)
-    a = sorted(map(tuple, ann_ivfpq_topk_indexed(spark, p1, q, k=10).collect()))
-    b = sorted(map(tuple, ann_ivfpq_topk_indexed(spark, p2, q, k=10).collect()))
-    assert a == b

@@ -1,5 +1,5 @@
-"""Round-5 session-2 operators: Kneser-Ney bigram scoring and the
-IVF index maintenance path."""
+"""Round-5 session-2 operators: Kneser-Ney bigram scoring (the IVF
+index maintenance tests live in tests/test_vector_index.py)."""
 
 import math
 
@@ -67,104 +67,3 @@ def test_kn_probabilities_bounded(spark, sf_dir):
     corpus = FX.fixture_df(spark, sf_dir, "corpus")
     bad = kn_bigram_logprob(corpus).filter(F.col("avg_neg_logprob") <= 0)
     assert bad.count() == 0
-
-
-def test_ivf_delete_filters_probes_and_compact_rewrites(spark, sf_dir, tmp_path):
-    from gpd_lite_toolbox_spark.vector.ann import (
-        ann_ivf_topk_indexed,
-        compact_ivf_index,
-        delete_from_ivf_index,
-        write_ivf_index,
-    )
-    from gpd_lite_toolbox_spark.vector.pq import default_coarse_centroids
-
-    FX.register_base_tables(spark, sf_dir)
-    emb = spark.table("embeddings")
-    path = str(tmp_path / "idx")
-    write_ivf_index(emb, path, dims=64, centroids=default_coarse_centroids())
-    queries = emb.filter(F.col("vec_id") % 50 == 0)
-
-    full = ann_ivf_topk_indexed(spark, path, queries, k=5, dims=64)
-    # self-hit at rank 1 before any delete
-    r1 = {r.query_id: r.neighbor_id for r in full.collect() if r.rank == 1}
-    assert len(r1) > 0 and all(q == n for q, n in r1.items())
-
-    # delete every query vector itself: self-hits must vanish
-    delete_from_ivf_index(spark, path, queries.select("vec_id"))
-    filt = ann_ivf_topk_indexed(spark, path, queries, k=5, dims=64)
-    deleted = {q for q in r1}
-    assert all(
-        r.neighbor_id not in deleted for r in filt.collect()
-    ), "tombstoned vector surfaced in a probe"
-
-    pre = {(r.query_id, r.rank): r.neighbor_id for r in filt.collect()}
-    n_cells = compact_ivf_index(spark, path)
-    assert n_cells > 0
-    post = {
-        (r.query_id, r.rank): r.neighbor_id
-        for r in ann_ivf_topk_indexed(spark, path, queries, k=5, dims=64).collect()
-    }
-    assert post == pre
-    # tombstones cleared: second compaction is a no-op
-    assert compact_ivf_index(spark, path) == 0
-
-
-def test_ivf_compact_removes_emptied_cells(spark, tmp_path):
-    """A cell whose members ALL die must disappear: from the committed
-    cells and, once compaction's manifest is published, from disk."""
-    from gpd_lite_toolbox_spark import store
-    from gpd_lite_toolbox_spark.vector.ann import (
-        compact_ivf_index,
-        delete_from_ivf_index,
-        write_ivf_index,
-    )
-    from gpd_lite_toolbox_spark.vector.pq import default_coarse_centroids
-
-    seed = default_coarse_centroids()
-    # vectors hugging centroid 0 and centroid 1: two occupied cells
-    rows = [(i, [float(x) + 1e-4 * i for x in seed[0]]) for i in range(3)]
-    rows += [(10 + i, [float(x) + 1e-4 * i for x in seed[1]]) for i in range(3)]
-    pts = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    path = str(tmp_path / "idx")
-    write_ivf_index(pts, path, dims=64, centroids=seed)
-    cells = tmp_path / "idx" / "cells"
-    assert list(cells.glob("_b=*/cell=1/*.parquet"))
-    delete_from_ivf_index(spark, path, [10, 11, 12])
-    compact_ivf_index(spark, path)
-    assert not list(cells.glob("_b=*/cell=1"))
-    kept = store.read(spark, path, "cells")
-    assert {r.neighbor_id for r in kept.collect()} == {0, 1, 2}
-    assert {r.cell for r in kept.collect()} == {0}
-
-
-def test_ivf_compact_leaves_session_conf_untouched(spark, tmp_path):
-    """Regression pin (r5 verdict #1): compact_ivf_index once pinned
-    spark.sql.sources.partitionOverwriteMode=dynamic on the SESSION
-    when the key started unset — every later plain mode("overwrite")
-    write then silently stopped truncating.  The rewrite must use a
-    per-write option and leave session config byte-identical."""
-    from gpd_lite_toolbox_spark.vector.ann import (
-        compact_ivf_index,
-        delete_from_ivf_index,
-        write_ivf_index,
-    )
-    from gpd_lite_toolbox_spark.vector.pq import default_coarse_centroids
-
-    key = "spark.sql.sources.partitionOverwriteMode"
-    spark.conf.unset(key)  # fresh-default session: key unset -> STATIC
-    before = spark.conf.get(key)  # resolves the default, e.g. STATIC
-
-    seed = default_coarse_centroids()
-    rows = [(i, [float(x) + 1e-4 * i for x in seed[0]]) for i in range(4)]
-    pts = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    path = str(tmp_path / "idx")
-    write_ivf_index(pts, path, dims=64, centroids=seed)
-    delete_from_ivf_index(spark, path, [0])
-    assert compact_ivf_index(spark, path) > 0
-    assert spark.conf.get(key) == before
-    assert spark.conf.get(key).upper() == "STATIC"
-    # and plain overwrite still truncates (the production hazard)
-    tgt = str(tmp_path / "plain")
-    spark.range(31).write.mode("overwrite").parquet(tgt)
-    spark.range(1).write.mode("overwrite").parquet(tgt)
-    assert spark.read.parquet(tgt).count() == 1

@@ -1,8 +1,9 @@
-"""store.py tests: one commit rule for the five on-disk store families.
+"""store.py tests: one commit rule for the four on-disk store families.
 
 A retried append equals a single append, ids committed by another
 batch raise, a failure between two parts leaves the last committed
-state, and only store.py writes or reads the families' files."""
+state, a partitioned part holds one file per partition value, and
+only store.py writes or reads the families' files."""
 
 from __future__ import annotations
 
@@ -19,7 +20,7 @@ _FAMILY_MODULES = [
     "text/substrate.py",
     "text/pipeline.py",
     "vector/ann.py",
-    "vector/pq.py",
+    "vector/pq.py",  # the PQ codec of the IVF index: no I/O of its own
 ]
 
 _DOC3 = (
@@ -97,33 +98,30 @@ def test_retried_substrate_append_equals_single_append(spark, tmp_path):
     )
 
 
-def test_retried_ivfpq_append_ranks_the_id_once(spark, tmp_path):
-    from gpd_lite_toolbox_spark.vector.pq import (
-        ann_ivfpq_topk_indexed,
-        append_to_ivfpq_index,
-        default_coarse_centroids,
-        write_ivfpq_index,
+def test_partitioned_parts_hold_one_file_per_partition_value(spark, tmp_path):
+    """Rows of one partition value spread over 8 input partitions are
+    written as one file, for the minhash ``bands`` and IVF ``cells``."""
+    from gpd_lite_toolbox_spark.text.dedup import write_minhash_index
+    from gpd_lite_toolbox_spark.vector.ann import write_ivf_index
+    from gpd_lite_toolbox_spark.vector.pq import default_coarse_centroids
+
+    # 4 texts x 8 copies: every (band, bucket) is held by 8 documents
+    texts = [_DOC3, _DOC3[::-1], _DOC3.upper(), _DOC3.replace("a", "o")]
+    docs = _docs(spark, [(i, texts[i % 4]) for i in range(32)])
+    write_minhash_index(docs.repartition(8, "id"), str(tmp_path / "mh"))
+    c = default_coarse_centroids()
+    vecs = spark.createDataFrame(
+        [(i, [float(x) + 1e-3 * i for x in c[i % 2]]) for i in range(32)],
+        "vec_id bigint, embedding array<float>",
     )
-
-    c0 = default_coarse_centroids()[0]
-
-    def vecs(ids):
-        return spark.createDataFrame(
-            [(i, [float(x) + 1e-3 * (i % 7) for x in c0]) for i in ids],
-            "vec_id bigint, embedding array<float>",
-        )
-
-    path = str(tmp_path / "ivfpq")
-    write_ivfpq_index(vecs(range(4)), path)
-    append_to_ivfpq_index(vecs([100]), path)
-    append_to_ivfpq_index(vecs([100]), path)  # the retried job
-    got = [
-        r.neighbor_id
-        for r in ann_ivfpq_topk_indexed(
-            spark, path, vecs([0]), k=10
-        ).collect()
-    ]
-    assert sorted(got) == [0, 1, 2, 3, 100]
+    write_ivf_index(
+        vecs.repartition(8, "vec_id"), str(tmp_path / "ivf"), centroids=c
+    )
+    for leaves in ("mh/bands/_b=*/band=*/bucket=*", "ivf/cells/_b=*/cell=*"):
+        dirs = list(tmp_path.glob(leaves))
+        assert dirs, leaves
+        n_files = {len(list(d.glob("*.parquet"))) for d in dirs}
+        assert n_files == {1}, (leaves, n_files)
 
 
 def test_append_of_ids_another_batch_committed_raises(spark, tmp_path):
@@ -194,7 +192,7 @@ def test_store_states(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Structural guard: the five families write and read only through store.py
+# Structural guard: the four families write and read only through store.py
 # ---------------------------------------------------------------------------
 
 
