@@ -1,7 +1,7 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+(the sf0.1 fixture by default) on ``session.get_spark``'s local session,
+sized from the host, and prints ONE JSON line: {"metric": ..., "value":
+total_sec, "unit": "sec", "queries": {name: sec}, "sf": ...}.
 
 Each query is forced end-to-end with the noop sink (full materialization,
 no driver-side collect cost polluting the measurement).
@@ -18,7 +18,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 # headline set: every implemented operator family, weighted toward the
 # shapes that matter at scale (binned agg, spatial self-join, NN join)
@@ -312,15 +311,15 @@ def _round_board_path(
 def main() -> None:
     from gpd_lite_toolbox_spark.session import get_spark
 
-    os.environ.setdefault("SPARK_DRIVER_MEM", "16g")
     spark = get_spark("gpd_lite_toolbox_spark_bench")
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
 
     import __spark_entry__ as E
 
     # Warm the Python worker pool before timing: the first pandas-UDF
-    # stage otherwise pays ~32 worker spin-ups, charging a fixed local
-    #-mode startup cost to whichever query happens to run first (a
+    # stage otherwise pays one worker spin-up per core, charging a fixed
+    # local-mode startup cost to whichever query happens to run first (a
     # long-lived cluster amortizes this to zero).
     from pyspark.sql import functions as F
 
@@ -328,7 +327,7 @@ def main() -> None:
     def _warm(v):
         return v
 
-    spark.range(0, int(CPUS) * 4, 1, int(CPUS)).select(
+    spark.range(0, cpus * 4, 1, cpus).select(
         _warm(F.col("id").cast("double"))
     ).write.mode("overwrite").format("noop").save()
 
@@ -338,7 +337,7 @@ def main() -> None:
     from gpd_lite_toolbox_spark.vector.ann import _dot_arrow
 
     _arr = F.array(*[F.lit(float(i)) for i in range(4)])
-    spark.range(0, int(CPUS) * 4, 1, int(CPUS)).select(
+    spark.range(0, cpus * 4, 1, cpus).select(
         _dot_arrow(4)(_arr, _arr)
     ).write.mode("overwrite").format("noop").save()
 

@@ -41,7 +41,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 REPO = os.path.dirname(os.path.abspath(__file__))
 SF01 = "/root/testdata/sf0.1"
 SF1 = os.path.join(REPO, "benchdata", "sf1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 COPIES = 10
 DOC_STRIDE = 5_000_000  # multiple of 10: %10 planted dups copy-invariant
 VEC_STRIDE = 1_000_000
@@ -443,7 +442,6 @@ def _time_query(spark, fn, sf_dir):
 def main() -> None:
     from gpd_lite_toolbox_spark.session import get_spark
 
-    os.environ.setdefault("SPARK_DRIVER_MEM", "16g")
     spark = get_spark("gpd_lite_toolbox_spark_bench_sf1")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -606,7 +604,7 @@ def main() -> None:
             "starts AFTER day-1 labels + index exist (day-2 cost = "
             "the batch fold, not the corpus)."
         ),
-        "cpus": int(CPUS),
+        "cpus": spark.sparkContext.defaultParallelism,
         "loadavg_end": list(os.getloadavg()),
         "queries": report,
     }

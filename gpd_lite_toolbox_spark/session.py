@@ -18,6 +18,26 @@ cache it recompiles 8-16. The cache is a static SQL conf, read once
 per JVM when the first plan is compiled, so it is set on the builder
 only: a runtime ``spark.conf.set`` of it raises, which is why it is not
 in ``ENGINE_CONF``.
+
+``get_spark`` sizes the session from the machine it runs on (Linux):
+
+- cores: the CPUs this process may run on, ``os.sched_getaffinity``
+  (what ``nproc`` prints). They set both ``local[n]`` and
+  ``spark.sql.shuffle.partitions``. A fixed ``local[32]`` ran 32 task
+  threads on a 4-vCPU host.
+- driver heap: a quarter of ``MemTotal`` in ``/proc/meminfo`` (about
+  3.9g on a 16 GB host; 8g again at 32 GB). At a fixed 8g the full test
+  lane in one process grew the JVM to 9.9 GB RSS on a 16 GB, 4-vCPU
+  host and the kernel's OOM killer took it; the same tests passed in a
+  fresh process at 3g. perfbench on that host, 6 alternating pairs per
+  workload at 8g -> 4g: geo_reference run_s 2.38 -> 2.34, cpu_s 6.46
+  -> 6.41; curation run_s 3.92 -> 3.67, cpu_s 12.21 -> 11.10. In 10
+  more pairs at 8g -> 4017m no end-to-end median got worse. The
+  smaller heap cost nothing measurable.
+
+``SPARK_GRAFT_CPUS`` and ``SPARK_DRIVER_MEM`` override the two values;
+they are the only session-size settings, and no other module reads or
+defaults them.
 """
 
 from __future__ import annotations
@@ -69,19 +89,28 @@ def configure(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _host_memory_quarter() -> str:
+    """A quarter of the host's ``MemTotal``, as a JVM size in MiB."""
+    with open("/proc/meminfo") as fh:
+        kib = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    return f"{kib // 4096}m"
+
+
 def get_spark(app_name: str = "gpd_lite_toolbox_spark") -> SparkSession:
-    """Local session: master and shuffle width from ``SPARK_GRAFT_CPUS``,
-    Arrow on (every geometry kernel is an Arrow-batched pandas_udf), UI
-    off, driver memory from ``SPARK_DRIVER_MEM``, a codegen cache of
+    """Local session sized from the host (module docstring): one task
+    slot and shuffle partition per usable core, a quarter of the host's
+    memory as driver heap. Arrow on (every geometry kernel is an
+    Arrow-batched pandas_udf), UI off, a codegen cache of
     ``CODEGEN_CACHE_ENTRIES`` classes, plus ``ENGINE_CONF``."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    heap = os.environ.get("SPARK_DRIVER_MEM") or _host_memory_quarter()
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", heap)
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config(map=ENGINE_CONF)
         .getOrCreate()

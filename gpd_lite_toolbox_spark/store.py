@@ -52,7 +52,7 @@ gone.
 A partitioned part is clustered by its partition columns before the
 write, so each partition value of a batch is one file: the sf0.1
 ``bands`` part above is 64 files, one per (band, bucket), where
-written straight from the task layout of ``local[32]`` it was 2048.
+written straight from the layout of 32 tasks it was 2048.
 """
 
 from __future__ import annotations

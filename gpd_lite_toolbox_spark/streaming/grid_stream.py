@@ -219,132 +219,6 @@ def run_stateful_session_count(
     )
 
 
-def tws_available() -> bool:
-    """Whether Spark 4's ``transformWithStateInPandas`` can run here:
-    its state server speaks protobuf to the Python worker, so the API
-    needs the ``protobuf`` package (not bundled with pyspark). Probe
-    rather than crash mid-stream — same environment-gating discipline
-    as the PIL-less media decode and the jar-less JDBC source."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def run_tws_user_stats(spark, parquet_dir: str) -> "DataFrame":
-    """Per-user running stats on Spark 4's NEW arbitrary-state API
-    (``transformWithStateInPandas`` + ``StatefulProcessor`` /
-    ``ValueState`` — the successor to ``applyInPandasWithState``,
-    which ``run_stateful_session_count`` demonstrates): each user
-    carries (last_ts, max_gap, n, sum) state across micro-batches and
-    emits the updated totals per batch; max-gap-between-consecutive-
-    events is the kind of order-dependent fold a native streaming
-    aggregation cannot express.
-
-    Driven to completion over the bounded events source in a SINGLE
-    trigger (maxFilesPerTrigger pinned above any real file count, so
-    the staged dir cannot split across micro-batches), meaning state
-    folds over time-sorted complete per-user histories and the final
-    table equals the batch lag-window computation. Output: (user_id,
-    n_events, sum_value, max_gap_us); single-event users report
-    max_gap_us 0.
-
-    Environment-gated: raises ``NotImplementedError`` when protobuf is
-    absent (see ``tws_available``); ``run_stateful_session_count`` is
-    the dependency-free stateful path this build exercises end-to-end.
-    """
-    if not tws_available():
-        raise NotImplementedError(
-            "transformWithStateInPandas needs the protobuf package in "
-            "the Python workers; install protobuf or use "
-            "run_stateful_session_count (applyInPandasWithState)"
-        )
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    parquet_dir = _stage_dir(parquet_dir, "tws_stats_")
-    schema = spark.read.parquet(parquet_dir).schema
-    # pin the WHOLE staged dir into one trigger: the gap fold is
-    # order-dependent across micro-batches, so a source that split the
-    # files (e.g. a maxFilesPerTrigger default set elsewhere) would
-    # walk last_us backwards on a late-arriving earlier file
-    stream = _normalize_ts(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1 << 30)
-        .parquet(parquet_dir)
-    )
-    ev = stream.select("user_id", F.unix_micros("ts").alias("us"), "value")
-
-    class _UserStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._st = handle.getValueState(
-                "stats", "last_us BIGINT, max_gap BIGINT, n BIGINT, s DOUBLE"
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            (user_id,) = key
-            prev = self._st.get() if self._st.exists() else None
-            # None-safe unpack: last_us=None means 'no previous event'
-            # (a -1 sentinel would swallow gaps after legitimate
-            # pre-epoch negative timestamps)
-            if prev:
-                last_us, max_gap, n, s = prev
-            else:
-                last_us, max_gap, n, s = None, 0, 0, 0.0
-            # gather ALL Arrow chunks before sorting (same discipline
-            # as the applyInPandasWithState operator: chunks arrive in
-            # shuffle order; per-chunk folding would corrupt the gaps)
-            pairs: list[tuple[int, float]] = []
-            for pdf in rows:
-                pairs.extend(
-                    zip(pdf["us"].tolist(), pdf["value"].tolist())
-                )
-            for us, v in sorted(pairs):
-                if last_us is not None and us - last_us > max_gap:
-                    max_gap = us - last_us
-                last_us = us
-                n += 1
-                s += v
-            self._st.update((last_us, max_gap, n, s))
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "n_events": [n],
-                    "sum_value": [s],
-                    "max_gap_us": [max_gap],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    out = ev.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_UserStats(),
-        outputStructType=(
-            "user_id bigint, n_events bigint, sum_value double,"
-            " max_gap_us bigint"
-        ),
-        outputMode="Update",
-        timeMode="None",
-    )
-    res = _drain_to_memory(
-        spark, out, "tws_stats_out", "update", available_now=False
-    )
-    # update mode appends one row per user per batch; keep the last
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        res.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-        .withColumn("sum_value", F.round("sum_value", 6))
-    )
-
-
 def run_streaming_session_window(
     spark, parquet_dir: str, gap_s: int = 1800
 ) -> DataFrame:

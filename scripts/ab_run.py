@@ -24,16 +24,15 @@ def main() -> None:
     os.chdir(tree)
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     from pyspark.sql import functions as F
 
     # imported after TREE_DIR is on sys.path: the session comes from it
     from gpd_lite_toolbox_spark.session import get_spark
 
-    os.environ.setdefault("SPARK_DRIVER_MEM", "16g")
     spark = get_spark("ab_run")
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
 
     import __spark_entry__ as E
 
@@ -41,7 +40,7 @@ def main() -> None:
     def _warm(v):
         return v
 
-    spark.range(0, int(cpus) * 4, 1, int(cpus)).select(
+    spark.range(0, cpus * 4, 1, cpus).select(
         _warm(F.col("id").cast("double"))
     ).write.mode("overwrite").format("noop").save()
 

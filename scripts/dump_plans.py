@@ -29,7 +29,6 @@ def main() -> None:
     # imported after TREE_DIR is on sys.path: the session comes from it
     from gpd_lite_toolbox_spark.session import get_spark
 
-    os.environ.setdefault("SPARK_DRIVER_MEM", "16g")
     spark = get_spark("dump_plans")
     spark.sparkContext.setLogLevel("ERROR")
 

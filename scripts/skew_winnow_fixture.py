@@ -40,7 +40,6 @@ import time
 
 N_DOCS = 100_000
 HOT_FRAC = 2  # 1 in 2 docs carries the boilerplate tail
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 BOILER = " all rights reserved"  # 20 chars -> a couple of fingerprints
 
@@ -70,7 +69,6 @@ def main() -> None:
     sys.path.insert(0, trees[0])
     from gpd_lite_toolbox_spark.session import get_spark
 
-    os.environ.setdefault("SPARK_DRIVER_MEM", "16g")
     spark = get_spark("skew_winnow_fixture")
     spark.sparkContext.setLogLevel("ERROR")
     docs = corpus(spark).localCheckpoint()
@@ -83,7 +81,7 @@ def main() -> None:
     n_postings = fps.count()
     n_distinct = fps.select("fp").distinct().count()
     layout = (
-        fps.repartition(int(CPUS), "fp")
+        fps.repartition(spark.sparkContext.defaultParallelism, "fp")
         .withColumn("p", F.spark_partition_id())
         .groupBy("p")
         .count()

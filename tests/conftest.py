@@ -36,7 +36,6 @@ def pytest_terminal_summary(terminalreporter, exitstatus, config):
 def spark():
     from gpd_lite_toolbox_spark.session import get_spark
 
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
     s = get_spark("tests")
     yield s
 

@@ -2,8 +2,11 @@
 
 from __future__ import annotations
 
+import json
 import os
 import re
+import subprocess
+import sys
 
 import pytest
 
@@ -14,6 +17,8 @@ from gpd_lite_toolbox_spark.session import (
     configure,
 )
 from tests.util import repo_sources as _repo_sources
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _engine_conf(session) -> dict:
@@ -54,6 +59,65 @@ def test_get_spark_sizes_codegen_cache(spark):
     assert spark.conf.get(key) == str(CODEGEN_CACHE_ENTRIES)
     with pytest.raises(Exception, match="static"):
         spark.conf.set(key, str(CODEGEN_CACHE_ENTRIES))
+
+
+_READ_SIZE = """
+import json
+from gpd_lite_toolbox_spark.session import get_spark
+spark = get_spark("size-probe")
+print(json.dumps([
+    spark.sparkContext.master,
+    spark.conf.get("spark.sql.shuffle.partitions"),
+    spark.sparkContext.getConf().get("spark.driver.memory"),
+]))
+spark.stop()
+"""
+
+
+def _session_size(**env) -> list:
+    """master, shuffle partitions and driver heap of a get_spark session
+    started in a fresh process (the heap is fixed at JVM launch) with
+    ``env`` as its only session-size settings."""
+    base = {
+        k: v
+        for k, v in os.environ.items()
+        if k not in ("SPARK_GRAFT_CPUS", "SPARK_DRIVER_MEM")
+    }
+    out = subprocess.run(
+        [sys.executable, "-c", _READ_SIZE],
+        cwd=_REPO,
+        env={**base, **env},
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout
+    return json.loads(out.strip().splitlines()[-1])
+
+
+def test_get_spark_sizes_the_session_from_the_host():
+    """Unset, cores are what ``nproc`` prints and the heap is a quarter
+    of MemTotal; the two env vars override them."""
+    nproc = int(
+        subprocess.run(
+            ["nproc"],
+            env={k: v for k, v in os.environ.items() if not k.startswith("OMP_")},
+            capture_output=True,
+            text=True,
+            check=True,
+        ).stdout
+    )
+    with open("/proc/meminfo") as fh:
+        mem_kib = int(re.search(r"^MemTotal:\s+(\d+) kB", fh.read(), re.M)[1])
+    assert _session_size() == [
+        f"local[{nproc}]",
+        str(nproc),
+        f"{mem_kib // 4 // 1024}m",
+    ]
+    assert _session_size(SPARK_GRAFT_CPUS="3", SPARK_DRIVER_MEM="1g") == [
+        "local[3]",
+        "3",
+        "1g",
+    ]
 
 
 def test_warm_text_chain_reuses_compiled_classes(spark, sf_dir):
@@ -126,12 +190,16 @@ _SHIP_CALL = re.compile(r"(?<!def )\bship_package\(")
 _ENGINE_CONF_SET = re.compile(
     r"conf\.set\(\s*[\"'](" + "|".join(map(re.escape, ENGINE_CONF)) + r")[\"']"
 )
+_SIZE_DEFAULT = re.compile(
+    r"(environ\.get|getenv|setdefault)\(\s*[\"'](SPARK_GRAFT_CPUS|SPARK_DRIVER_MEM)[\"']"
+)
 _SESSION = "gpd_lite_toolbox_spark/session.py"
 
 
 def test_only_session_py_builds_or_configures_sessions():
-    """One place builds sessions and sets engine confs, so no script
-    forks the configuration again."""
+    """One place builds sessions, sets engine confs and sizes them from
+    the host, so no script forks the configuration or copies a core or
+    heap default again (a harness reads the width from its session)."""
     offenders = []
     for rel, text in _repo_sources():
         if rel == _SESSION:
@@ -142,4 +210,7 @@ def test_only_session_py_builds_or_configures_sessions():
             offenders.append(f"{rel}: ship_package call")
         if _ENGINE_CONF_SET.search(text):
             offenders.append(f"{rel}: conf.set of an ENGINE_CONF key")
+        offenders += [
+            f"{rel}: reads or defaults {m[2]}" for m in _SIZE_DEFAULT.finditer(text)
+        ]
     assert offenders == []

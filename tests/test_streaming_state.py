@@ -603,49 +603,6 @@ def test_streaming_cdc_matches_batch_across_microbatches(spark, tmp_path):
     assert 0 not in got and 3 in got and got[3] == "doc 3 v2"
 
 
-def test_tws_user_stats_gated_or_equals_batch(spark, sf_dir):
-    """Spark 4's transformWithStateInPandas operator: when the
-    environment carries protobuf the final per-user table must equal
-    the batch lag-window computation; without it the operator refuses
-    with a clear error instead of crashing mid-stream."""
-    import pytest
-
-    from gpd_lite_toolbox_spark import fixtures as FX
-    from gpd_lite_toolbox_spark.streaming.grid_stream import (
-        run_tws_user_stats,
-        tws_available,
-    )
-
-    if not tws_available():
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            run_tws_user_stats(spark, f"{sf_dir}/events.parquet")
-        return
-
-    FX.register_base_tables(spark, sf_dir)
-    got = {
-        r.user_id: (r.n_events, r.sum_value, r.max_gap_us)
-        for r in run_tws_user_stats(
-            spark, f"{sf_dir}/events.parquet"
-        ).collect()
-    }
-    exp = {
-        r.user_id: (r.n_events, r.sum_value, r.max_gap_us)
-        for r in spark.sql(
-            """
-            WITH l AS (SELECT user_id, value, unix_micros(ts) AS us,
-                              LAG(unix_micros(ts)) OVER (
-                                PARTITION BY user_id ORDER BY ts) AS prev
-                       FROM events)
-            SELECT user_id, COUNT(*) AS n_events,
-                   ROUND(SUM(value), 6) AS sum_value,
-                   COALESCE(MAX(us - prev), 0) AS max_gap_us
-            FROM l GROUP BY user_id
-            """
-        ).collect()
-    }
-    assert got == exp
-
-
 def test_streaming_quality_gate_equals_batch(spark, sf_dir, tmp_path):
     """The stateless gate equals the batch quality/Gopher projection,
     including when the source arrives across multiple micro-batches."""
