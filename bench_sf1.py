@@ -440,6 +440,19 @@ def _time_query(spark, fn, sf_dir):
 
 
 def main() -> None:
+    # optional argv subset (round 8): run only the named queries and
+    # MERGE their rows into the existing BENCH_SF1.json — the 16-query
+    # board no longer fits one driver timeout window, and per-family
+    # re-measurement shouldn't re-pay the whole board anyway
+    args = sys.argv[1:]
+    # an unknown (misspelled) name must fail loudly — silently running
+    # zero queries would re-dump the stale board under fresh
+    # provenance fields (note/loadavg_end), masquerading as a new run —
+    # and before a session starts or the sf1 fixture is built
+    unknown = [a for a in args if a not in set(HEADLINE) | set(EAGER)]
+    if unknown:
+        raise SystemExit(f"bench_sf1: unknown query names {unknown}")
+
     from gpd_lite_toolbox_spark.session import get_spark
 
     spark = get_spark("gpd_lite_toolbox_spark_bench_sf1")
@@ -449,17 +462,6 @@ def main() -> None:
 
     generate(spark)
 
-    # optional argv subset (round 8): run only the named queries and
-    # MERGE their rows into the existing BENCH_SF1.json — the 16-query
-    # board no longer fits one driver timeout window, and per-family
-    # re-measurement shouldn't re-pay the whole board anyway
-    args = sys.argv[1:]
-    # an unknown (misspelled) name must fail loudly — silently running
-    # zero queries would re-dump the stale board under fresh
-    # provenance fields (note/loadavg_end), masquerading as a new run
-    unknown = [a for a in args if a not in set(HEADLINE) | set(EAGER)]
-    if unknown:
-        raise SystemExit(f"bench_sf1: unknown query names {unknown}")
     subset = [a for a in args if a in set(HEADLINE)]
     eager_subset = [a for a in args if a in set(EAGER)]
     names = subset or ([] if args else HEADLINE)

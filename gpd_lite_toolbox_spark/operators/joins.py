@@ -66,16 +66,15 @@ def _pair_stats(
         )
     # Spread the candidate pairs before the Arrow kernel: when the
     # bbox join broadcasts (small layers) the pair table inherits the
-    # SCAN's partitioning — a one-file fixture layer leaves the whole
-    # boundary-trace kernel on one core (measured 1.62 -> 1.37 s on
-    # the concave layer at sf0.1/local[32]; the residual is Python
-    # stage spin-up, which a long-lived cluster amortizes). The
-    # exchanged rows carry two WKB blobs, so the exchange is guarded
-    # like parallelism.widen: an already-wide shuffled join (the
+    # SCAN's partitioning, so a one-file fixture layer would leave the
+    # whole boundary-trace kernel on one core. The exchanged rows
+    # carry two WKB blobs, so the exchange is guarded by
+    # parallelism.widen: an already-wide shuffled join (the
     # large-layer / 100 TB case) passes through untouched rather than
     # paying a full extra exchange of double-WKB rows (ADVICE r6);
-    # only narrow broadcast-join outputs — the one-file fixture shape
-    # the comment above measured — are spread.
+    # only narrow broadcast-join outputs are spread. widen reads the
+    # width from the join's plan (its stream side), so the decision
+    # runs no Spark job.
     from ..parallelism import widen
 
     joined = widen(joined)

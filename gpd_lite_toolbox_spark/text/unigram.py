@@ -79,12 +79,13 @@ MAX_PIECE_LEN = 4
 # vocabulary — bounded, but only by the vocabulary, so a caller
 # feeding an unbounded vocabulary would silently build a
 # multi-gigabyte single row.  At ~50 bytes per (piece, cnt, cost)
-# struct the cap marks a ~100 MB row, and an inventory past it fails
-# loudly (in-plan assert_true).  The check runs AFTER collect_list has
-# built the row, so it does not bound the aggregation buffer's
-# memory.  The per-round re-packed inventories never pass this check;
-# they are bounded by construction (at most max_pieces multi-char
-# pieces plus the single-char carry).
+# struct the cap marks a ~100 MB row, and an inventory past it raises
+# a sized ValueError.  The check counts the persisted inventory (at
+# most cap + 1 rows) BEFORE collect_list builds the row, so the
+# aggregation buffer never grows past the cap.  The per-round
+# re-packed inventories never pass this check; they are bounded by
+# construction (at most max_pieces multi-char pieces plus the
+# single-char carry).
 SEED_INV_ROW_CAP = 2_000_000
 
 
@@ -733,33 +734,23 @@ def unigram_train_em(
     # struct(-cnt, piece) IS the (cnt desc, piece) rank order, the
     # carry membership test replays the anti-join, and the reprice is
     # the same IEEE round(scale*ln(total/cnt)+1e-9) expression.
-    # in-plan bound assertion (r10 VERDICT #5) on the seed pack:
-    # assert_true returns NULL when the bound holds (the when() then
-    # passes _inv through unchanged) and aborts the job with the sized
-    # message when it does not.  It fires after collect_list has
-    # packed the row, so it fails loudly but does not bound the
-    # buffer's memory.
-    _capped_inv = F.when(
-        F.assert_true(
-            F.size(F.col("_inv")) <= F.lit(int(SEED_INV_ROW_CAP)),
-            F.concat(
-                F.lit("unigram_train_em: one-row piece inventory ("),
-                F.size(F.col("_inv")).cast("string"),
-                F.lit(
-                    f" pieces) exceeds SEED_INV_ROW_CAP="
-                    f"{int(SEED_INV_ROW_CAP)}; the corpus vocabulary "
-                    "is too large for the one-row EM carry"
-                ),
-            ),
-        ).isNull(),
-        F.col("_inv"),
-    ).alias("_inv")
+    # the seed pack's bound (r10 VERDICT #5), checked before the pack:
+    # counting at most cap + 1 rows of the persisted inventory sizes it
+    # without building the one row collect_list would
+    cap = int(SEED_INV_ROW_CAP)
+    n_pieces = inv.limit(cap + 1).count()
+    if n_pieces > cap:
+        raise ValueError(
+            f"unigram_train_em: the seed piece inventory holds at least "
+            f"{n_pieces} pieces, over SEED_INV_ROW_CAP={cap}; the corpus "
+            "vocabulary is too large for the one-row EM carry"
+        )
     inv_row = tracked_persist(
         inv.agg(
             F.collect_list(F.struct("piece", "cnt", "cost")).alias(
                 "_inv"
             )
-        ).select(_capped_inv)
+        )
     )
     mk, mc = int(max_pieces), int(min_count)
     mstep = F.expr(

@@ -30,6 +30,17 @@ def pytest_report_header(config):
 def pytest_terminal_summary(terminalreporter, exitstatus, config):
     # -q hides the header; repeat the lane next to the pass counts
     terminalreporter.write_line(_lane(config))
+    from tests.util import WIDEN_READS
+
+    reads = config.stash.get(WIDEN_READS, [])
+    fallbacks = [(test, n) for test, n in reads if isinstance(n, str)]
+    if reads:
+        terminalreporter.write_line(
+            f"widen: {len(reads) - len(fallbacks)} of {len(reads)} calls "
+            "read from the plan; the rest ran the frame:"
+        )
+    for test, node in fallbacks:
+        terminalreporter.write_line(f"  {test}: {node}")
 
 
 @pytest.fixture(scope="session")

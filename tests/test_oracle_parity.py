@@ -6,7 +6,8 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as E
-from tests.util import assert_parity
+from gpd_lite_toolbox_spark import parallelism
+from tests.util import WIDEN_READS, assert_parity
 
 # round 11 (r10 VERDICT item 1): the driver re-verifies every oracle independently (its own sf0.01 sweep); this sweep is the builder's full-lane insurance —
 # excluded from the default lane so the driver's gate completes;
@@ -15,6 +16,27 @@ pytestmark = pytest.mark.slow
 
 
 _QUERIES = sorted(E.queries().keys())
+
+
+@pytest.fixture(autouse=True)
+def widen_parity(request, monkeypatch):
+    """Check every widen call a query makes: where the plan decides the
+    width, the plan-read must equal the run-read; where it falls back,
+    the node that forced it is listed in the session summary."""
+    planned_partitions = parallelism.planned_partitions
+    reads, mismatches = [], []
+
+    def recorded(df):
+        n = planned_partitions(df)
+        reads.append((request.node.name, n))
+        if not isinstance(n, str) and n != (run := df.rdd.getNumPartitions()):
+            mismatches.append((n, run))
+        return n
+
+    monkeypatch.setattr(parallelism, "planned_partitions", recorded)
+    yield
+    request.config.stash.setdefault(WIDEN_READS, []).extend(reads)
+    assert mismatches == [], "widen's plan-read != run-read (plan, run)"
 
 
 @pytest.mark.parametrize("name", _QUERIES)

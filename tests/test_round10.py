@@ -556,16 +556,39 @@ def test_audio_raw_fallback_huge_sr_and_short_payload(spark):
 
 
 def test_bench_sf1_rejects_unknown_query_names():
+    """This checkout's bench_sf1.py rejects a misspelled query name
+    before it starts a session (and so before it builds the sf1
+    fixture): get_spark is patched to raise."""
     import subprocess
     import sys as _sys
+    from pathlib import Path
 
+    root = Path(__file__).resolve().parents[1]
+    run_without_session = (
+        "import runpy, sys\n"
+        "from gpd_lite_toolbox_spark import session\n"
+        "def no_session(*args, **kwargs):\n"
+        "    raise RuntimeError('bench_sf1 started a session')\n"
+        "session.get_spark = no_session\n"
+        "sys.argv = sys.argv[1:]\n"
+        "runpy.run_path(sys.argv[0], run_name='__main__')\n"
+    )
     p = subprocess.run(
-        [_sys.executable, "/root/repo/bench_sf1.py", "winnow_reprot"],
+        [
+            _sys.executable,
+            "-c",
+            run_without_session,
+            str(root / "bench_sf1.py"),
+            "winnow_reprot",
+        ],
+        cwd=root,
         capture_output=True,
         text=True,
     )
+    out = p.stderr + p.stdout
     assert p.returncode != 0
-    assert "unknown query names" in (p.stderr + p.stdout)
+    assert "unknown query names" in out
+    assert "started a session" not in out
 
 
 # --- property tests (hypothesis): the new tiers vs naive references ---

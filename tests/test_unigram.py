@@ -322,3 +322,23 @@ def test_em_seed_inventory_cap_fails_loudly(spark, monkeypatch):
     monkeypatch.setattr(U, "SEED_INV_ROW_CAP", 3)
     with pytest.raises(Exception, match="SEED_INV_ROW_CAP"):
         U.unigram_train_em(docs, n_rounds=1, max_pieces=8).collect()
+
+
+def test_em_seed_inventory_cap_fires_before_the_pack(spark, monkeypatch):
+    """The seed-inventory bound is a count of at most cap + 1 rows
+    taken before collect_list packs the one row, so an oversized
+    vocabulary raises a sized ValueError on the driver rather than
+    failing inside the job that built the row."""
+    import pytest
+
+    from gpd_lite_toolbox_spark.text import unigram as U
+
+    docs = spark.createDataFrame(
+        [(1, "line part window line"), (2, "window part line")],
+        "id bigint, text string",
+    )
+    monkeypatch.setattr(U, "SEED_INV_ROW_CAP", 3)
+    with pytest.raises(
+        ValueError, match=r"at least 4 pieces, over SEED_INV_ROW_CAP=3"
+    ):
+        U.unigram_train_em(docs, n_rounds=1, max_pieces=8).collect()

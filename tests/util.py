@@ -1,6 +1,7 @@
 """Shared test helpers: the driver-style Spark-vs-DuckDB comparison,
 a tiny near-duplicate corpus, the repo source walk the structural
-guards share and a foreachBatch replay."""
+guards share, a foreachBatch replay and the stash of widen's reads
+the oracle sweep reports."""
 
 from __future__ import annotations
 
@@ -9,10 +10,15 @@ from pathlib import Path
 
 import duckdb
 import pandas as pd
+import pytest
 
 from gpd_lite_toolbox_spark.fixtures import TPCH_TABLES
 
 _REPO = Path(__file__).resolve().parents[1]
+
+# (test id, planned partitions) of every widen call the oracle sweep
+# makes; the planned value is the blocking node's name on a fallback
+WIDEN_READS = pytest.StashKey[list]()
 
 
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
