@@ -361,8 +361,9 @@ def run_streaming_ingest_near_dups(
     not the corpus, exactly like the batch path.
 
     ``admit=True`` additionally appends each micro-batch to the index
-    AFTER probing (``append_to_minhash_index``), so later micro-
-    batches also collide with earlier stream documents — the full
+    (``append_to_minhash_index``) once its probe is built; the probe
+    never pairs a batch with its own admitted documents, so later
+    micro-batches collide with earlier stream documents — the full
     incremental pipeline. With ``admit=False`` (the oracle-checkable
     form) the result set is EXACTLY the batch ``ingest_near_dups`` of
     the whole stream: each stream doc probes in exactly one
@@ -374,51 +375,47 @@ def run_streaming_ingest_near_dups(
     each micro-batch so a multi-file source genuinely exercises
     multiple batches.
     """
-    import atexit
-    import shutil
-    import tempfile
-
+    from ..cache import scoped_release
     from ..text.dedup import append_to_minhash_index, ingest_near_dups
 
     parquet_dir = _stage_dir(parquet_dir, "ingest_stream_")
     schema = spark.read.parquet(parquet_dir).schema
-    out_dir = tempfile.mkdtemp(prefix="ingest_stream_out_")
-    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
-    # seed the sink with the empty result so an empty stream still
-    # yields a readable frame with the right schema/dtypes (scoped:
-    # the probe's internal persist is released once written)
-    from ..cache import scoped_release
-
-    empty = spark.createDataFrame([], schema)
+    # the result schema is the empty batch's result schema (scoped:
+    # the probe persists its batch-side tables)
     with scoped_release():
-        ingest_near_dups(
-            spark, index_path, empty, threshold, id_col, text_col
-        ).write.parquet(f"{out_dir}/seed")
+        out_schema = ingest_near_dups(
+            spark,
+            index_path,
+            spark.createDataFrame([], schema),
+            threshold,
+            id_col,
+            text_col,
+        ).schema
 
-    def _probe(mb, bid):
-        # bounded state on an unbounded stream: the probe's internal
-        # tracked_persist (signature table) is released per micro-batch
-        # once its results are written — without the scope, a long-
-        # running stream accumulates one persisted frame per batch.
-        # Per-batch-id target + overwrite, and a probe that ignores the
-        # batch's own admitted docs: a replayed micro-batch (foreachBatch
-        # is at-least-once) rewrites the same rows, and its admit is a
-        # no-op store append
-        with scoped_release():
-            ingest_near_dups(
-                spark, index_path, mb, threshold, id_col, text_col
-            ).write.mode("overwrite").parquet(f"{out_dir}/batch_{bid}")
-            if admit:
-                append_to_minhash_index(mb, index_path, id_col, text_col)
+    def _probe(mb):
+        # the probe ignores index documents that carry a batch id, so
+        # a replayed micro-batch (foreachBatch is at-least-once) finds
+        # the same pairs after its first admit, and the admit itself
+        # is then a no-op store append
+        pairs = ingest_near_dups(
+            spark, index_path, mb, threshold, id_col, text_col
+        )
+        if admit:
+            append_to_minhash_index(mb, index_path, id_col, text_col)
+        return pairs
 
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", int(max_files_per_trigger))
         .parquet(parquet_dir)
     )
-    _run_foreach_batch(stream, _probe)
-    return spark.read.option("recursiveFileLookup", "true").parquet(
-        out_dir
+    return _foreach_batch_to_dir(
+        spark,
+        ("ingest", index_path, parquet_dir, threshold, id_col, text_col,
+         admit, max_files_per_trigger),
+        stream,
+        out_schema,
+        _probe,
     )
 
 
@@ -505,10 +502,6 @@ def run_streaming_curation_ledger(
     (the ``17d3130`` discipline), so a long-running stream holds no
     accumulated state beyond the sink.
     """
-    import atexit
-    import shutil
-    import tempfile
-
     from .. import store
     from ..cache import scoped_release, tracked_persist
     from ..text.analysis import (
@@ -524,71 +517,62 @@ def run_streaming_curation_ledger(
     c_all = batch_all.select(
         F.col(id_col).alias("id"), F.col(text_col).alias("text")
     )
-    out_dir = tempfile.mkdtemp(prefix="ledger_stream_out_")
-    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
-    spark.createDataFrame([], "id bigint, status string").write.parquet(
-        f"{out_dir}/seed"
-    )
 
-    def _decide(mb, bid):
-        with scoped_release():
-            c = mb.select(
-                F.col(id_col).alias("id"), F.col(text_col).alias("text")
+    def _decide(mb):
+        c = mb.select(
+            F.col(id_col).alias("id"), F.col(text_col).alias("text")
+        )
+        bks = sorted(
+            r.bk
+            for r in c.select(
+                (F.col("id") % int(n_buckets)).alias("bk")
             )
-            bks = sorted(
-                r.bk
-                for r in c.select(
-                    (F.col("id") % int(n_buckets)).alias("bk")
-                )
-                .distinct()
-                .collect()
+            .distinct()
+            .collect()
+        )
+        if not bks:
+            return None
+        flags = (
+            store.read(spark, flags_path, "flags")
+            .filter(F.col("bk").isin(bks))
+            .select("id", "exact", "near")
+        )
+        train = c.filter(F.col("id") % benchmark_mod != 0)
+        hits = (
+            shingles(train, hashed=True)
+            .join(dictionary, "shingle")
+            .groupBy("id")
+            .agg(F.count("*").alias("n_hits"))
+            .filter(F.col("n_hits") >= int(min_hits))
+            .select("id", F.lit(True).alias("_cont"))
+        )
+        staged = c.select(
+            "id",
+            "text",
+            quality_points_expr("text").alias("_pts"),
+            *[col.alias(n) for n, col in gopher_stat_exprs("text")],
+        ).withColumn("_pass", gopher_passes_cond())
+        ledger = staged.join(flags, "id", "left").join(
+            hits, "id", "left"
+        )
+        status = (
+            F.when(F.col("text").isNull(), F.lit("null_text"))
+            .when(
+                F.col("id") % benchmark_mod == 0, F.lit("benchmark")
             )
-            if not bks:
-                return
-            flags = (
-                store.read(spark, flags_path, "flags")
-                .filter(F.col("bk").isin(bks))
-                .select("id", "exact", "near")
+            .when(F.coalesce("exact", F.lit(False)), F.lit("exact_dup"))
+            .when(F.coalesce("near", F.lit(False)), F.lit("near_dup"))
+            .when(
+                F.coalesce("_cont", F.lit(False)), F.lit("contaminated")
             )
-            train = c.filter(F.col("id") % benchmark_mod != 0)
-            hits = (
-                shingles(train, hashed=True)
-                .join(dictionary, "shingle")
-                .groupBy("id")
-                .agg(F.count("*").alias("n_hits"))
-                .filter(F.col("n_hits") >= int(min_hits))
-                .select("id", F.lit(True).alias("_cont"))
+            .when(
+                ~F.coalesce(F.col("_pass"), F.lit(False)),
+                F.lit("gopher_fail"),
             )
-            staged = c.select(
-                "id",
-                "text",
-                quality_points_expr("text").alias("_pts"),
-                *[col.alias(n) for n, col in gopher_stat_exprs("text")],
-            ).withColumn("_pass", gopher_passes_cond())
-            ledger = staged.join(flags, "id", "left").join(
-                hits, "id", "left"
-            )
-            status = (
-                F.when(F.col("text").isNull(), F.lit("null_text"))
-                .when(
-                    F.col("id") % benchmark_mod == 0, F.lit("benchmark")
-                )
-                .when(F.coalesce("exact", F.lit(False)), F.lit("exact_dup"))
-                .when(F.coalesce("near", F.lit(False)), F.lit("near_dup"))
-                .when(
-                    F.coalesce("_cont", F.lit(False)), F.lit("contaminated")
-                )
-                .when(
-                    ~F.coalesce(F.col("_pass"), F.lit(False)),
-                    F.lit("gopher_fail"),
-                )
-                .when(F.col("_pts") < 2, F.lit("low_quality"))
-                .otherwise(F.lit("kept"))
-            )
-            # per-batch-id overwrite: idempotent under replay
-            ledger.select("id", status.alias("status")).write.mode(
-                "overwrite"
-            ).parquet(f"{out_dir}/batch_{bid}")
+            .when(F.col("_pts") < 2, F.lit("low_quality"))
+            .otherwise(F.lit("kept"))
+        )
+        return ledger.select("id", status.alias("status"))
 
     # the run-scoped dictionary releases AND deregisters on exit
     # (tracked_persist + bare unpersist would leak its registry entry
@@ -607,10 +591,14 @@ def run_streaming_curation_ledger(
             .option("maxFilesPerTrigger", int(max_files_per_trigger))
             .parquet(parquet_dir)
         )
-        _run_foreach_batch(stream, _decide)
-    return spark.read.option("recursiveFileLookup", "true").parquet(
-        out_dir
-    )
+        return _foreach_batch_to_dir(
+            spark,
+            ("ledger", flags_path, parquet_dir, id_col, text_col,
+             benchmark_mod, min_hits, max_files_per_trigger, n_buckets),
+            stream,
+            "id bigint, status string",
+            _decide,
+        )
 
 
 def run_streaming_quality_gate(
@@ -812,9 +800,6 @@ def sessionize(events: DataFrame, gap_s: int = SESSION_GAP_S) -> DataFrame:
 
 # run_streaming_blocklist_gate's (source, dictionary) -> out-dir
 # memo: bounds the output-tempdir footprint to one live dir per key
-_blocklist_out_dirs: dict = {}
-
-
 def _run_foreach_batch(stream, fn) -> None:
     """Drive a foreachBatch stream to completion (availableNow
     trigger, await, stop) — the one lifecycle definition shared by the
@@ -829,6 +814,54 @@ def _run_foreach_batch(stream, fn) -> None:
         q.awaitTermination()
     finally:
         q.stop()
+
+
+_sink_dirs: dict = {}
+
+
+def _foreach_batch_to_dir(
+    spark, key, stream, schema, batch_result
+) -> DataFrame:
+    """Run ``stream`` to completion with each micro-batch's result
+    written to a directory, and read all results back as one frame —
+    the sink shared by the foreachBatch runners.
+
+    - ``schema``: the result schema. An empty ``seed`` directory of it
+      is written first, so an empty stream still reads back with the
+      right dtypes.
+    - ``batch_result(mb)``: the micro-batch's result frame, or None for
+      nothing to write. It is built and written inside one
+      ``scoped_release``, so a long-running stream holds no persisted
+      frame per batch.
+    - Each batch overwrites its own ``batch_<id>`` directory:
+      foreachBatch is at-least-once, and a replayed micro-batch then
+      rewrites the same rows instead of appending them twice.
+    - One output directory per ``key`` (the runner's arguments),
+      replaced when the runner is called again with the same key; a
+      fresh directory per call would keep one result-sized directory
+      per call until interpreter exit."""
+    import atexit
+    import shutil
+    import tempfile
+
+    from ..cache import scoped_release
+
+    prior = _sink_dirs.pop(key, None)
+    if prior is not None:
+        shutil.rmtree(prior, ignore_errors=True)
+    out_dir = tempfile.mkdtemp(prefix="foreach_batch_out_")
+    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
+    _sink_dirs[key] = out_dir
+    spark.createDataFrame([], schema).write.parquet(f"{out_dir}/seed")
+
+    def _write(mb, bid):
+        with scoped_release():
+            out = batch_result(mb)
+            if out is not None:
+                out.write.mode("overwrite").parquet(f"{out_dir}/batch_{bid}")
+
+    _run_foreach_batch(stream, _write)
+    return spark.read.option("recursiveFileLookup", "true").parquet(out_dir)
 
 
 def run_streaming_blocklist_gate(
@@ -854,10 +887,6 @@ def run_streaming_blocklist_gate(
     ``max_files_per_trigger`` bounds each micro-batch so a multi-file
     source genuinely exercises multiple batches.
     """
-    import atexit
-    import shutil
-    import tempfile
-
     from pyspark.sql.types import (
         LongType,
         StringType,
@@ -873,17 +902,7 @@ def run_streaming_blocklist_gate(
 
     parquet_dir = _stage_dir(parquet_dir, "blocklist_stream_")
     schema = spark.read.parquet(parquet_dir).schema
-    # one output dir PER (source, dictionary) key, replaced on re-run —
-    # a fresh mkdtemp per invocation would leak one result-sized dir
-    # per call for the life of the process (the _stage_dir rationale)
     plist = _normalize_phrases(phrases, case_insensitive=True)
-    key = (parquet_dir, tuple(plist), id_col, text_col)
-    prior = _blocklist_out_dirs.pop(key, None)
-    if prior is not None:
-        shutil.rmtree(prior, ignore_errors=True)
-    out_dir = tempfile.mkdtemp(prefix="blocklist_out_")
-    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
-    _blocklist_out_dirs[key] = out_dir
     # ONE automaton build + broadcast for the whole stream (not one
     # per micro-batch — a 100k-entry dictionary on a many-file source
     # would otherwise accumulate 2N dictionary-sized broadcasts)
@@ -891,8 +910,8 @@ def run_streaming_blocklist_gate(
         spark.sparkContext.broadcast(_aho_corasick(plist)),
         spark.sparkContext.broadcast(plist),
     )
-    # seed the sink with the statically known output schema — no
-    # Spark job needed to learn (id, phrase, n_hits) dtypes
+    # the statically known output schema — no Spark job needed to
+    # learn (id, phrase, n_hits) dtypes
     id_field = schema[id_col]
     out_schema = StructType(
         [
@@ -901,22 +920,18 @@ def run_streaming_blocklist_gate(
             StructField("n_hits", LongType(), False),
         ]
     )
-    spark.createDataFrame([], out_schema).write.parquet(f"{out_dir}/seed")
-
-    def _scan(mb, bid):
-        # per-batch-id target + overwrite = idempotent under
-        # foreachBatch's at-least-once re-execution (an append sink
-        # would double-count a retried micro-batch)
-        _banned_phrase_hits_ac(
-            mb, plist, id_col, text_col, True, shared_bc=shared_bc
-        ).write.mode("overwrite").parquet(f"{out_dir}/batch_{bid}")
-
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", int(max_files_per_trigger))
         .parquet(parquet_dir)
     )
-    _run_foreach_batch(stream, _scan)
-    return spark.read.option("recursiveFileLookup", "true").parquet(
-        out_dir
+    return _foreach_batch_to_dir(
+        spark,
+        ("blocklist", parquet_dir, tuple(plist), id_col, text_col,
+         max_files_per_trigger),
+        stream,
+        out_schema,
+        lambda mb: _banned_phrase_hits_ac(
+            mb, plist, id_col, text_col, True, shared_bc=shared_bc
+        ),
     )

@@ -705,7 +705,7 @@ def ann_lsh_topk(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    # NOT spread here (unlike text's _pair_overlap): the bucket join
+    # NOT spread here (unlike text's dedup._verify): the bucket join
     # already exchanges on (band, bucket), so the kernel inherits real
     # parallelism, and an extra pair rebalance measured net-slower at
     # bench SF (A/B'd round 6)

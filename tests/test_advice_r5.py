@@ -1,97 +1,12 @@
-"""Regression tests for the round-5 ADVICE items: PPJoin exact-ceil
-boundary pruning, the session-keyed ngram-sets memo + release-hook
-eviction, ingest_near_dups error-class narrowing, and unreadable
-WARC directories (the IVF tombstone and compaction pins live in
-tests/test_vector_index.py)."""
+"""Regression tests for the round-5 ADVICE items: the session-keyed
+ngram-sets memo + release-hook eviction, ingest_near_dups error-class
+narrowing, and unreadable WARC directories (the PPJoin exact-ceil
+boundary pins live in tests/test_dedup.py, the IVF tombstone and
+compaction pins in tests/test_vector_index.py)."""
 
 import pytest
 
 from pyspark.sql import functions as F
-
-
-# ---------------------------------------------------------------------------
-# PPJoin float-ceil boundary (ADVICE medium, dedup.py prefix filters)
-# ---------------------------------------------------------------------------
-
-
-def _synth_sets(spark, rows):
-    """Build a ngram_doc_sets-shaped table directly: (id, _fs sorted
-    bigint array, n_sh) — lets the test place pairs EXACTLY at the
-    jaccard threshold, which real text shingles can't do on demand."""
-    data = [(i, sorted(fs), len(fs)) for i, fs in rows]
-    return spark.createDataFrame(
-        data, "id bigint, _fs array<bigint>, n_sh bigint"
-    )
-
-
-def test_ppjoin_exact_threshold_pair_survives_t02(spark):
-    """J exactly 0.2 at na+nb=18: the position filter's double bound
-    t/(1+t)*(na+nb) evaluates to 3.0000000000000004, and a plain ceil
-    prunes the pair (ADVICE-verified failure case).  Recall must be
-    exactly 1 at the threshold."""
-    from gpd_lite_toolbox_spark.text.dedup import ngram_jaccard_prefix_pairs
-
-    # B's 3 shingles all inside A's 15 -> J = 3/(15+3-3) = 0.2 exactly
-    sets = _synth_sets(
-        spark,
-        [(1, list(range(100, 115))), (2, [100, 101, 102])],
-    )
-    dummy = spark.createDataFrame([], "id bigint, text string")
-    out = ngram_jaccard_prefix_pairs(dummy, threshold=0.2, sets=sets)
-    pairs = {(r.id_a, r.id_b) for r in out.collect()}
-    assert (1, 2) in pairs
-
-
-def test_ppjoin_exact_threshold_pair_survives_t028(spark):
-    """J exactly 0.28 with na=25: ceil(0.28*25) evaluates to
-    ceil(7.000000000000001)=8 in doubles, so the LENGTH filter
-    nb >= ceil(t*na) wrongly prunes nb=7 (ADVICE-verified case)."""
-    from gpd_lite_toolbox_spark.text.dedup import ngram_jaccard_prefix_pairs
-
-    # B's 7 shingles all inside A's 25 -> J = 7/(25+7-7) = 7/25 = 0.28
-    sets = _synth_sets(
-        spark,
-        [(1, list(range(200, 225))), (2, list(range(200, 207)))],
-    )
-    dummy = spark.createDataFrame([], "id bigint, text string")
-    out = ngram_jaccard_prefix_pairs(dummy, threshold=0.28, sets=sets)
-    pairs = {(r.id_a, r.id_b) for r in out.collect()}
-    assert (1, 2) in pairs
-
-
-def test_ppjoin_matches_bruteforce_across_thresholds(spark):
-    """Exhaustive-oracle sweep over awkward thresholds on a synthetic
-    universe dense in exact-boundary pairs."""
-    from gpd_lite_toolbox_spark.text.dedup import ngram_jaccard_prefix_pairs
-
-    rows = []
-    rid = 0
-    for n in (3, 5, 7, 9, 12, 15, 18, 25):
-        rows.append((rid, list(range(1000, 1000 + n))))
-        rid += 1
-        rows.append((rid, list(range(1000, 1000 + max(1, n // 2)))))
-        rid += 1
-    sets = _synth_sets(spark, rows)
-    local = {i: set(fs) for i, fs in rows}
-    dummy = spark.createDataFrame([], "id bigint, text string")
-    for t in (0.2, 0.25, 0.28, 1.0 / 3.0, 0.4):
-        expect = set()
-        ids = sorted(local)
-        for i in ids:
-            for j in ids:
-                if i >= j:
-                    continue
-                inter = len(local[i] & local[j])
-                union = len(local[i] | local[j])
-                if union and inter / union >= t:
-                    expect.add((i, j))
-        got = {
-            (r.id_a, r.id_b)
-            for r in ngram_jaccard_prefix_pairs(
-                dummy, threshold=t, sets=sets
-            ).collect()
-        }
-        assert got == expect, f"threshold {t}: {got ^ expect}"
 
 
 # ---------------------------------------------------------------------------

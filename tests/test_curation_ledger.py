@@ -144,3 +144,41 @@ def test_streaming_ledger_is_idempotent_under_replay(
     assert run() == once
     assert len(replayed) == 2  # the ledger runs through _run_foreach_batch
     assert len(once) == 7
+
+
+def test_streaming_sinks_replace_their_output_dir_per_call(
+    spark, tmp_path, monkeypatch
+):
+    """The foreachBatch runners write micro-batch results under one
+    temp dir per call. Called again with the same arguments, the ingest
+    and ledger runners replace that dir, so one per runner remains
+    instead of one result-sized dir per call until interpreter exit."""
+    import tempfile
+
+    from gpd_lite_toolbox_spark.streaming import grid_stream as G
+    from gpd_lite_toolbox_spark.text.dedup import write_minhash_index
+    from gpd_lite_toolbox_spark.text.pipeline import (
+        write_curation_flags_index,
+    )
+
+    corpus = _crafted(spark)
+    flags, idx, src, odd = (
+        str(tmp_path / d) for d in ("flags", "idx", "src", "odd")
+    )
+    write_curation_flags_index(corpus, flags)
+    write_minhash_index(corpus.filter(F.col("id") % 2 == 0), idx)
+    corpus.repartition(2).write.parquet(src)
+    corpus.filter(F.col("id") % 2 == 1).write.parquet(odd)
+    sinks = tmp_path / "sinks"
+    sinks.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(sinks))
+
+    results = []
+    for _ in range(2):
+        ingest = G.run_streaming_ingest_near_dups(spark, idx, odd)
+        ledger = G.run_streaming_curation_ledger(spark, flags, src)
+        results.append((sorted(ingest.collect()), sorted(ledger.collect())))
+    assert results[0] == results[1]
+    assert (2, 3, 1.0) in results[1][0]  # exact copies are near-dups
+    assert len(results[1][1]) == 7
+    assert len(list(sinks.iterdir())) == 2

@@ -5,8 +5,6 @@ unless a shuffle AQE may coalesce decides the width."""
 from __future__ import annotations
 
 import ast
-import uuid
-from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -14,30 +12,9 @@ from pyspark.sql import functions as F
 
 from gpd_lite_toolbox_spark import fixtures as FX, parallelism
 from gpd_lite_toolbox_spark.parallelism import widen
+from tests.util import jobs_started
 
 _PKG = Path(__file__).resolve().parents[1] / "gpd_lite_toolbox_spark"
-
-
-@contextmanager
-def _jobs_started(sc):
-    """Yield a list that holds, after the block, the ids of the Spark
-    jobs the block started (read from the status tracker under a job
-    group of its own)."""
-    group = f"test_parallelism-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "jobs started by one test block")
-    ids: list[int] = []
-    try:
-        yield ids
-    finally:
-        for key in (
-            "spark.jobGroup.id",
-            "spark.job.description",
-            "spark.job.interruptOnCancel",
-        ):
-            sc.setLocalProperty(key, None)
-        # job-start events reach the tracker through the listener bus
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="module")
@@ -83,7 +60,7 @@ def _widen_jobs(spark, df) -> list[int]:
     """The ids of the jobs ``widen(df)`` started, once its choice is
     checked against ``df.rdd.getNumPartitions() < width``."""
     sc = spark.sparkContext
-    with _jobs_started(sc) as jobs:
+    with jobs_started(sc) as jobs:
         widened = widen(df) is not df
     assert widened == (df.rdd.getNumPartitions() < sc.defaultParallelism)
     return jobs
@@ -137,7 +114,7 @@ def test_building_pair_stats_starts_no_job(spark, sf_dir):
         )
 
     build()  # registers and writes the fixture layers on first use
-    with _jobs_started(spark.sparkContext) as jobs:
+    with jobs_started(spark.sparkContext) as jobs:
         build()
     assert jobs == []
 

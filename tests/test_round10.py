@@ -1,6 +1,5 @@
 """Round-10 pins (r9 VERDICT + ADVICE items).
 
-- winnow_report exposes the MOSS df-cap drop mass (VERDICT item 3).
 - contamination_report joins dup-ngram coverage with split leakage
   into one per-doc curation artifact (VERDICT item 8a).
 - trigram_logprob actually uses its counts= substrate (ADVICE item 1).
@@ -20,44 +19,11 @@ from gpd_lite_toolbox_spark import fixtures as FX
 from gpd_lite_toolbox_spark.text.dedup import (
     contamination_report,
     split_leakage,
-    winnow_pairs,
-    winnow_report,
 )
 
 
 def _rows(df):
     return sorted(map(tuple, df.collect()))
-
-
-# --- winnow_report: the df-cap drop mass made visible ---
-
-
-def test_winnow_report_accounting_identities(spark, sf_dir):
-    corpus = FX.fixture_df(spark, sf_dir, "corpus")
-    row = winnow_report(corpus).collect()[0]
-    assert row.n_fps == (
-        row.n_fps_unique + row.n_fps_kept + row.n_fps_capped
-    )
-    assert row.n_postings == (
-        row.n_fps_unique + row.n_postings_kept + row.n_postings_dropped
-    )
-    assert row.max_df_seen >= 1
-
-
-def test_winnow_report_exposes_replica_clique_drop(spark):
-    """A 12-replica clique pushes every shared fingerprint past the
-    default df cap (8): winnow_pairs returns NOTHING for the clique —
-    exactly the silent collapse the report exists to expose."""
-    text = "the quick brown fox jumps over the lazy dog " * 4
-    docs = spark.createDataFrame(
-        [(i, text.strip()) for i in range(12)], "id long, text string"
-    )
-    assert winnow_pairs(docs).count() == 0
-    row = winnow_report(docs).collect()[0]
-    assert row.n_fps_capped > 0
-    assert row.n_postings_dropped == 12 * row.n_fps_capped
-    assert row.max_df_seen == 12
-    assert row.n_fps_kept == 0 and row.n_postings_kept == 0
 
 
 # --- contamination_report ---

@@ -326,37 +326,6 @@ def test_match_line_cluster_empty_a(spark, sf_dir):
     assert out.count() == 0
 
 
-def test_winnowing_locality_guarantee(spark):
-    """Winnowing's defining property: two docs sharing a substring of
-    length >= k + w - 1 MUST share a fingerprint (minhash only makes
-    that probable); disjoint docs share none."""
-    from gpd_lite_toolbox_spark.text.dedup import (
-        WINNOW_W,
-        winnow_fingerprints,
-        winnow_pairs,
-    )
-    from gpd_lite_toolbox_spark.text.dedup import SHINGLE_K as K
-
-    shared = "x" * 0 + "the quick brown fox jumps"  # > k+w-1 chars
-    docs = spark.createDataFrame(
-        [
-            (1, "AAAA " + shared + " BBBB"),
-            (2, "CCCC " + shared + " DDDD"),
-            (3, "zzzzzzzz completely different content here"),
-        ],
-        "id bigint, text string",
-    )
-    assert len(shared) >= K + WINNOW_W - 1
-    fps = winnow_fingerprints(docs)
-    f1 = {r.fp for r in fps.filter("id = 1").collect()}
-    f2 = {r.fp for r in fps.filter("id = 2").collect()}
-    f3 = {r.fp for r in fps.filter("id = 3").collect()}
-    assert f1 & f2
-    assert not (f1 & f3) and not (f2 & f3)
-    pairs = winnow_pairs(docs, min_shared=1, max_df=8).collect()
-    assert {(r.id_a, r.id_b) for r in pairs} == {(1, 2)}
-
-
 def test_winnowing_density_and_short_docs(spark):
     """Fingerprint count is bounded by the gram count (and near the
     ~2/(w+1) density on long docs); docs shorter than k are excluded."""

@@ -328,36 +328,6 @@ def test_hilbert_beats_zorder_on_range_locality(spark):
     assert worst_span("h") <= worst_span("z")
 
 
-# -------------------------------------------- ngram containment
-def test_containment_flags_quote_jaccard_misses(spark):
-    """A short doc quoted inside a long one: containment 1.0 while
-    Jaccard is far below any useful threshold — the case this
-    operator exists for."""
-    from gpd_lite_toolbox_spark.text.dedup import (
-        ngram_containment_pairs,
-        ngram_jaccard_pairs,
-    )
-
-    quote = "the quick brown fox jumps over the lazy dog again and again"
-    filler = " ".join(f"word{i} token{i} item{i}" for i in range(40))
-    docs = spark.createDataFrame(
-        [(1, quote), (2, filler + " " + quote + " " + filler)],
-        "id long, text string",
-    )
-    cont = ngram_containment_pairs(docs, threshold=0.8, max_df=64).collect()
-    assert len(cont) == 1
-    assert cont[0]["id_a"] == 1 and cont[0]["containment"] >= 0.99
-    jac = ngram_jaccard_pairs(docs, threshold=0.5, max_df=64).collect()
-    assert jac == []  # symmetric Jaccard cannot see the quote
-
-
-def test_containment_empty_corpus(spark):
-    from gpd_lite_toolbox_spark.text.dedup import ngram_containment_pairs
-
-    docs = spark.createDataFrame([], "id long, text string")
-    assert ngram_containment_pairs(docs).count() == 0
-
-
 # --------------------------------------------- unigram divergence
 def test_unigram_divergence_identical_and_disjoint(spark):
     from gpd_lite_toolbox_spark.text.corpus import unigram_divergence

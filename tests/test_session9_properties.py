@@ -2,13 +2,13 @@
 Rabin chunking vs a pure-Python reference (reconstruction +
 boundary-local insertion robustness), Bloom decontamination's
 one-sided-error law vs the exact dictionary join, CMS est>=exact
-dominance with a wide-sketch equality law, SimHash Hamming pairs vs
-brute force, and curriculum position-permutation."""
+dominance with a wide-sketch equality law, and curriculum
+position-permutation (SimHash Hamming pairs vs brute force lives in
+tests/test_dedup.py)."""
 
 from __future__ import annotations
 
 import hashlib
-import itertools
 
 import pandas as pd
 import pytest
@@ -108,26 +108,6 @@ def test_cms_dominance_and_wide_equality(_spark, docs):
     assert {r.token: r.exact for r in narrow} == {
         r.token: r.exact for r in wide
     }
-
-
-@settings(max_examples=8, deadline=None)
-@given(st.lists(texts, min_size=2, max_size=8))
-def test_simhash_pairs_equal_bruteforce(_spark, docs):
-    from gpd_lite_toolbox_spark.text.dedup import (
-        simhash,
-        simhash_hamming_pairs,
-    )
-
-    df = _df(_spark, docs)
-    sigs = {r.id: r.simhash for r in simhash(df).collect()}
-    want = {
-        (a, b): bin(sigs[a] ^ sigs[b]).count("1")
-        for a, b in itertools.combinations(sorted(sigs), 2)
-        if bin(sigs[a] ^ sigs[b]).count("1") <= 3
-    }
-    got = {(r.id_a, r.id_b): r.hamming
-           for r in simhash_hamming_pairs(df, max_hamming=3).collect()}
-    assert got == want
 
 
 @settings(max_examples=8, deadline=None)

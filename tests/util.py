@@ -6,6 +6,8 @@ the oracle sweep reports."""
 from __future__ import annotations
 
 import math
+import uuid
+from contextlib import contextmanager
 from pathlib import Path
 
 import duckdb
@@ -113,3 +115,25 @@ def replay_every_micro_batch(monkeypatch) -> list:
 
     monkeypatch.setattr(G, "_run_foreach_batch", replaying)
     return replayed
+
+
+@contextmanager
+def jobs_started(sc):
+    """Yield a list that holds, after the block, the ids of the Spark
+    jobs the block started (read from the status tracker under a job
+    group of its own)."""
+    group = f"tests-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs started by one test block")
+    ids: list[int] = []
+    try:
+        yield ids
+    finally:
+        for key in (
+            "spark.jobGroup.id",
+            "spark.job.description",
+            "spark.job.interruptOnCancel",
+        ):
+            sc.setLocalProperty(key, None)
+        # job-start events reach the tracker through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
